@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{MinHash, StringFunctions}
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines (BASELINE.json
@@ -17,9 +18,13 @@ import graft.text.TextOps
   * Scale design: nothing here ever shuffles full document text except the
   * inverted-index verify stage (which shuffles shingles, the standard
   * trade); candidate generation always goes through fixed-width sketches,
-  * so the shuffle volume per 100 TB of text is GBs, not TBs. All logic is
-  * built-in expressions (higher-order array functions + xxhash64/sha2) —
-  * fully codegen'd, no UDFs, no driver-side state.
+  * so the shuffle volume per 100 TB of text is GBs, not TBs. No UDFs and
+  * no driver-side state: MinHash signatures come from the native
+  * `graft.functions.MinHashSignature` expression (one codegen'd pass per
+  * document); everything else is built-in expressions. The higher-order
+  * array functions that remain ([[wordShingles]], [[sigAgreement]]:
+  * transform / zip_with / aggregate) are `CodegenFallback` and run in the
+  * interpreter.
   *
   * CACHING CONTRACT (applies to [[minhashDedup]], [[simhashDedup]],
   * [[ngramJaccard]], and the similarity/pipeline operators in
@@ -49,20 +54,11 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  private val MersennePrime31 = 2147483647L // 2^31 - 1
-
-  /** Deterministic (a, b) hash-family seeds, fixed RNG seed. */
-  private def seeds(n: Int): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    Seq.fill(n)((rnd.nextInt(Int.MaxValue - 2).toLong + 1,
-                 rnd.nextInt(Int.MaxValue - 1).toLong))
-  }
-
   /** (perm index, a, b) triples of the hash family — exposed so the DuckDB
     * oracle can embed the exact same permutation table as SQL literals.
     */
   private[graft] def seedTriples(n: Int): Seq[(Int, Long, Long)] =
-    seeds(n).zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+    MinHash.seeds(n).zipWithIndex.map { case ((a, b), i) => (i, a, b) }
 
   /** 60-bit integer digest of a string: the first 15 hex chars of its md5,
     * parsed base-16. md5 is bit-identical across engines (unlike xxhash64,
@@ -90,40 +86,22 @@ object Dedup {
 
   /** (doc_id, signature): minhash signature of `numHashes` mins over the
     * universal-hash family g_i(x) = (a_i·x + b_i) mod (2^31-1),
-    * x = md5Base60(shingle) folded into [0, 2^31-1) — md5-based so the
-    * DuckDB oracle reproduces identical signatures. Products stay < 2^62,
-    * so the arithmetic never overflows a long.
-    *
-    * Staged as three explicit projections (shingles → folded hashes →
-    * signature) so each stage is a bound attribute: a single nested
-    * expression would re-derive the shingle/concat/hash subtree once per
-    * seed (32×) per row — measured at >10× slower at sf0.1.
+    * x = md5Base60(shingle) folded into [0, 2^31-1), over the distinct
+    * `shingleN`-word shingles of `TextOps.tokens(text)` (see
+    * [[wordShingles]]) — md5-based so the DuckDB oracle reproduces
+    * identical signatures. One native expression per document
+    * ([[graft.functions.MinHashSignature]]); a NULL text yields
+    * `numHashes` NULL positions.
     */
   def minhashSignatures(documents: DataFrame, shingleN: Int, numHashes: Int,
                         carry: Seq[String] = Nil): DataFrame = {
-    val keep = carry.map(col)
-    val staged = documents
-      .select(col("doc_id") +: TextOps.tokens(col("text")).as("toks") +: keep: _*)
-      .select(col("doc_id") +: wordShingles(col("toks"), shingleN).as("shingles") +: keep: _*)
-      .select(col("doc_id") +:
-        transform(col("shingles"), s => pmod(md5Base60(s), lit(MersennePrime31)))
-          .as("folded") +: keep: _*)
-    val sig = array(seeds(numHashes).map { case (a, b) =>
-      array_min(transform(col("folded"), h => pmod(h * a + b, lit(MersennePrime31))))
-    }: _*)
-    staged.select(col("doc_id") +: sig.as("signature") +: keep: _*)
+    require(shingleN >= 1 && numHashes >= 1,
+      s"need shingleN >= 1 and numHashes >= 1, got $shingleN and $numHashes")
+    documents.select(col("doc_id") +:
+      StringFunctions.minhash_signature(col("text"), shingleN, numHashes).as("signature") +:
+      carry.map(col): _*)
   }
 
-  /** MinHash+LSH near-duplicate pairs: signatures are sliced into `bands`
-    * bands of numHashes/bands rows; docs sharing any band-hash become
-    * candidates (bucket self-join on the 8-byte band hash); candidate
-    * similarity is the minhash estimate — the fraction of agreeing
-    * signature positions, an unbiased Jaccard estimator (σ ≈ 1/√numHashes)
-    * — so verification never touches the shingle sets again and the only
-    * shuffled payload is the fixed-width signature. Returns
-    * (doc_a, doc_b, est_jaccard) with est_jaccard ≥ threshold, doc_a < doc_b.
-    * For exact similarities on the survivors, compose with [[ngramJaccard]].
-    */
   /** LSH band rows (doc_id, signature, band, bh) for a signature
     * relation — the SHAPE of a stored minhash index: [[minhashDedup]]
     * self-joins it, [[incrementalNearDup]] probes a batch's bands
@@ -131,7 +109,8 @@ object Dedup {
     */
   private def bandRows(sigs: DataFrame, numHashes: Int, bands: Int,
                        carry: Seq[String] = Nil): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    require(numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
+      "bands must be positive and divide a positive numHashes")
     val r = numHashes / bands
     val keep = carry.map(col)
     sigs.select(col("doc_id") +: col("signature") +:
@@ -150,7 +129,17 @@ object Dedup {
       (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, m) => acc + m)
       .cast("double") / numHashes
 
-  /** `sigsPre` (round-14 optimization): a prebuilt [[minhashSignatures]]
+  /** MinHash+LSH near-duplicate pairs: signatures are sliced into `bands`
+    * bands of numHashes/bands rows; docs sharing any band-hash become
+    * candidates (bucket self-join on the 8-byte band hash); candidate
+    * similarity is the minhash estimate — the fraction of agreeing
+    * signature positions, an unbiased Jaccard estimator (σ ≈ 1/√numHashes)
+    * — so verification never touches the shingle sets again and the only
+    * shuffled payload is the fixed-width signature. Returns
+    * (doc_a, doc_b, est_jaccard) with est_jaccard ≥ threshold, doc_a < doc_b.
+    * For exact similarities on the survivors, compose with [[ngramJaccard]].
+    *
+    * `sigsPre` (round-14 optimization): a prebuilt [[minhashSignatures]]
     * relation for EXACTLY this (documents, shingleN, numHashes) — the
     * threshold/band-independent prefix a session running several dedup
     * analyses over ONE corpus builds once (six chunk-co-resident queries
@@ -186,6 +175,18 @@ object Dedup {
       .filter(col("est_jaccard") >= threshold)
   }
 
+  /** The stored-index shape: banded minhash rows (doc_id, signature,
+    * band, bh) for a corpus — build once, persist as a table, append per
+    * ingested batch; [[incrementalNearDup]] and the streaming
+    * `DocStreams.nearDupGate` probe it. Works on static AND streaming
+    * inputs (every step is a stateless per-row projection).
+    */
+  def minhashIndex(documents: DataFrame, shingleN: Int = 3,
+                   numHashes: Int = 32, bands: Int = 8,
+                   carry: Seq[String] = Nil): DataFrame =
+    bandRows(minhashSignatures(documents, shingleN, numHashes, carry),
+      numHashes, bands, carry)
+
   /** Incremental near-dup: dedup a NEW batch against an EXISTING corpus
     * without ever pairing the corpus with itself — the production shape
     * of dedup at 100 TB, where the corpus's banded minhash index is built
@@ -199,18 +200,6 @@ object Dedup {
     * keep/drop decision is the caller's — typically drop batch_doc).
     * Batch-internal duplicates are [[minhashDedup]] on the batch alone.
     */
-  /** The stored-index shape: banded minhash rows (doc_id, signature,
-    * band, bh) for a corpus — build once, persist as a table, append per
-    * ingested batch; [[incrementalNearDup]] and the streaming
-    * `DocStreams.nearDupGate` probe it. Works on static AND streaming
-    * inputs (every step is a stateless per-row projection).
-    */
-  def minhashIndex(documents: DataFrame, shingleN: Int = 3,
-                   numHashes: Int = 32, bands: Int = 8,
-                   carry: Seq[String] = Nil): DataFrame =
-    bandRows(minhashSignatures(documents, shingleN, numHashes, carry),
-      numHashes, bands, carry)
-
   def incrementalNearDup(corpus: DataFrame, batch: DataFrame,
                          shingleN: Int = 3, numHashes: Int = 32,
                          bands: Int = 8, threshold: Double = 0.5): DataFrame = {

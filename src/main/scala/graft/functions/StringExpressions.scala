@@ -170,4 +170,9 @@ object StringFunctions {
   def jaro_winkler(a: Column, b: Column): Column =
     ColumnBridge.column(JaroWinklerSim(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** MinHash signature of `text`'s word `shingleN`-gram shingles
+    * ([[MinHashSignature]]). */
+  def minhash_signature(text: Column, shingleN: Int, numHashes: Int): Column =
+    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(text), shingleN, numHashes))
 }

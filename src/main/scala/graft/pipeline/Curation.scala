@@ -27,14 +27,6 @@ import graft.text.TextOps
   */
 object Curation {
 
-  /** Returns the curated corpus:
-    * (doc_id, text, source, n_chars, quality_score).
-    *
-    * `langAllow` (optional) inserts a language gate before the quality
-    * filter — n-gram language ID is another cheap no-shuffle projection,
-    * so it belongs in the shrink-first prefix of the pipeline. Empty =
-    * no language filtering (the oracle-checked configuration).
-    */
   /** The quality-gate + exact-dedup PREFIX of [[curate]] (steps 1-2, no
     * optional gates): (doc_id, text, source, n_chars, quality_score) for
     * the exact-dedup survivors. Factored out (round-13 optimization) so
@@ -56,6 +48,14 @@ object Curation {
     quality.join(keepExact, "doc_id")
   }
 
+  /** Returns the curated corpus:
+    * (doc_id, text, source, n_chars, quality_score).
+    *
+    * `langAllow` (optional) inserts a language gate before the quality
+    * filter — n-gram language ID is another cheap no-shuffle projection,
+    * so it belongs in the shrink-first prefix of the pipeline. Empty =
+    * no language filtering (the oracle-checked configuration).
+    */
   def curate(documents: DataFrame,
              minQuality: Double = 0.2,
              nearDupThreshold: Double = 0.7,

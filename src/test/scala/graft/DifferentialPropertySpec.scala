@@ -196,6 +196,96 @@ class DifferentialPropertySpec extends AnyFunSuite {
     }
   }
 
+  // ------------------------------------------------ minhash signature kernel
+
+  /** Plain-Scala minhash signature straight from the definition: Spark
+    * trim (0x20 only), Java `\\s+` split with limit -1, word n-gram
+    * shingles (one whole-document shingle when shorter), first 15 hex
+    * digits of the md5 parsed base-16, folded and permuted mod 2^31-1.
+    */
+  private def refSignature(text: String, n: Int, k: Int): Seq[Option[Long]] =
+    if (text == null) Seq.fill(k)(None)
+    else {
+      val p = 2147483647L
+      val t = text.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+      val toks = if (t.isEmpty) Array.empty[String] else t.split("\\s+", -1)
+      val shingles =
+        if (toks.length < n) Seq(toks.mkString(" "))
+        else toks.toSeq.sliding(n).map(_.mkString(" ")).toSeq
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val xs = shingles.distinct.map { g =>
+        val hex = md.digest(g.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+        java.lang.Long.parseLong(hex.take(15), 16) % p
+      }
+      Dedup.seedTriples(k).map { case (_, a, b) => Some(xs.map(x => (x * a + b) % p).min) }
+    }
+
+  private val minhashEdgeCases: Seq[String] = Seq(
+    "", " ", "   ", "\t", "\t\t", " \t ", "\n", "\r\n", "\u000B", "\f",
+    "\u00A0", "word", "a  b", "a\r\nb c", "\u000Bx y\u000B", "\fx\fy\fz",
+    "a\u00A0b c\u00A0d", "漢字 かな カナ 한국어", "\tlead tab", "trail tab\t",
+    " \t a b c d e f \t ", "x \u2003 y", null)
+
+  /** Seeded random documents: mixed separators (incl. runs, leading and
+    * trailing), non-ASCII and NBSP words, 0..40 tokens.
+    */
+  private def minhashDocs(seed: Long, count: Int): Seq[(Long, String)] = {
+    val r = new scala.util.Random(seed)
+    val words = Array("the", "data", "spark", "é", "naïve", "漢字", "😀", "a\u00A0b", "x", "")
+    val seps = Array(" ", " ", " ", "  ", "\t", "\n", "\r\n", "\u000B", "\f", " \t ")
+    val random = (1 to count).map { _ =>
+      val b = new StringBuilder
+      if (r.nextInt(5) == 0) b ++= seps(r.nextInt(seps.length))
+      val n = r.nextInt(41)
+      for (i <- 0 until n) {
+        if (i > 0) b ++= seps(r.nextInt(seps.length))
+        b ++= words(r.nextInt(words.length))
+      }
+      if (r.nextInt(5) == 0) b ++= seps(r.nextInt(seps.length))
+      b.toString
+    }
+    (random ++ minhashEdgeCases).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+  }
+
+  test("minhash signature kernel matches the plain-Scala reference") {
+    val docs = minhashDocs(7L, 300)
+    val df = spark.sparkContext.parallelize(docs, 3).toDF("doc_id", "text")
+    for (n <- Seq(1, 3, 5); k <- Seq(8, 32)) {
+      val got = Dedup.minhashSignatures(df, shingleN = n, numHashes = k)
+        .as[(Long, Seq[Option[Long]])].collect().toMap
+      docs.foreach { case (id, text) =>
+        assert(got(id) === refSignature(text, n, k), s"n=$n k=$k doc $id: ${Option(text)}")
+      }
+    }
+  }
+
+  test("minhash signature kernel: CODEGEN_ONLY and NO_CODEGEN agree, two columns per projection") {
+    val docs = minhashDocs(11L, 200)
+    val df = spark.sparkContext.parallelize(docs, 2).toDF("doc_id", "text")
+    def run(): Map[Long, (Seq[Option[Long]], Seq[Option[Long]])] =
+      df.select($"doc_id",
+          graft.functions.StringFunctions.minhash_signature($"text", 3, 32).as("s3"),
+          graft.functions.StringFunctions.minhash_signature($"text", 5, 8).as("s5"))
+        .as[(Long, Seq[Option[Long]], Seq[Option[Long]])].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+    def withConf[T](kv: (String, String)*)(body: => T): T = {
+      val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val codegen = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(run())
+    val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(run())
+    assert(codegen === interpreted)
+    docs.foreach { case (id, text) =>
+      assert(codegen(id) === ((refSignature(text, 3, 32), refSignature(text, 5, 8))),
+        s"doc $id: ${Option(text)}")
+    }
+  }
+
   test("GlobalRank matches window rank/ntile on random tied data") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._

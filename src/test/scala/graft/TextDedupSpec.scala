@@ -105,6 +105,19 @@ class TextDedupSpec extends AnyFunSuite {
     assert(math.abs(est - trueJ) <= 0.2, s"est $est vs true $trueJ")
   }
 
+  test("minhash rejects shingleN < 1: every shingle would be the empty string") {
+    val fixture = docs(1L -> "alpha beta gamma", 2L -> "delta epsilon zeta")
+    assertThrows[IllegalArgumentException](Dedup.minhashSignatures(fixture, 0, 32))
+    assertThrows[IllegalArgumentException](Dedup.minhashIndex(fixture, shingleN = 0))
+  }
+
+  test("minhash rejects numHashes < 1: the estimate would divide by zero") {
+    val fixture = docs(1L -> "alpha beta gamma", 2L -> "delta epsilon zeta")
+    assertThrows[IllegalArgumentException](Dedup.minhashSignatures(fixture, 3, 0))
+    assertThrows[IllegalArgumentException](
+      Dedup.minhashIndex(fixture, numHashes = 0, bands = 8))
+  }
+
   test("simhash: identical docs at hamming 0, near-dups within threshold") {
     val base = "spark executes distributed queries over columnar storage " +
       "with whole stage code generation and adaptive execution"
