@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager cache materialization.
@@ -85,11 +85,10 @@ object Caching {
     * are 36.5 MiB) — small enough to turn a corpus-sized relation into
     * the BROADCAST BUILD SIDE of every consumer join, collapsing the
     * probe side's parallelism to its partition count (the round-13
-    * 2-task frontier-loop collapse, root-caused this round in
-    * dev/CkptStatsProbe + dev/SymPathProbe). Materializing to an
-    * InMemoryRelation FIRST makes the forwarded stats the IMR's real
-    * ones (size AND row count); the transient cache is dropped once the
-    * checkpoint holds its own copy. Worth the extra pass exactly for
+    * 2-task frontier-loop collapse, root-caused in OPTIMIZATION_r14.md).
+    * Materializing to an InMemoryRelation FIRST makes the forwarded
+    * stats the IMR's real ones (size AND row count); the transient cache
+    * is dropped once the checkpoint holds its own copy. Worth the extra pass exactly for
     * session memos consumed by many downstream joins.
     */
   def checkpointedAccurate(df: DataFrame): DataFrame = {
@@ -117,4 +116,28 @@ object Caching {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** Scoped release for the library's cache contract.
+    *
+    * Self-join-shaped operators (`Dedup.minhashDedup`, `Ann.lshTopK`,
+    * `Curation.curate`, …) persist a small shared intermediate because both
+    * join sides reference it; results are lazy, so the operator cannot know
+    * when the caller has consumed them. The raw contract — "call
+    * `spark.catalog.clearCache()` after consuming each result" — is easy to
+    * forget in a long-lived session. `withCaches` makes it structural:
+    * consume everything inside the scope; the caches are released on the
+    * way out, success or failure.
+    *
+    * Scope semantics: release is SESSION-WIDE (`catalog.clearCache()`), the
+    * same call Verify makes between queries — it drops every
+    * DataFrame/table cache in the session, including ones created before
+    * the scope. Don't wrap a scope around work whose caches you want to
+    * keep warm; nest queries inside one scope per logical unit instead.
+    * Results must be MATERIALIZED (collect/write/count) inside the scope —
+    * a lazy DataFrame that escapes recomputes its operator's self-join
+    * from scratch (correct, but the cache no longer helps).
+    */
+  def withCaches[A](spark: SparkSession)(body: => A): A =
+    try body
+    finally spark.catalog.clearCache()
 }

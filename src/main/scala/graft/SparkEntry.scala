@@ -146,7 +146,7 @@ object SparkEntry {
       // forwarded size estimate (2.8 MiB vs 36.5 MiB real at sf0.1) was
       // small enough to make this 2|E| relation the broadcast BUILD side
       // of consumer joins — the root cause of the round-13 frontier-loop
-      // 2-task collapse (dev/CkptStatsProbe, dev/SymPathProbe)
+      // 2-task collapse (measurements in OPTIMIZATION_r14.md)
       graft.Caching.checkpointedAccurate(half.union(half.select(
         col("item_b").as("item_a"), col("item_a").as("item_b"))))
     })
@@ -321,35 +321,6 @@ object SparkEntry {
       (graft.Caching.checkpointed(sym.join(deg, "src")), deg)
     })
 
-  /** The queries that PAY each session memo's one-time build under the
-    * bench protocol (alphabetical chunk order, names iterated
-    * alphabetically within a chunk, run 1 first): for every session memo
-    * above, the alphabetically-first consumer — counting TRANSITIVE
-    * consumers (lpaLabels builds on coBoughtSym builds on coBought).
-    * Published so the bench can emit a charged-build companion total
-    * (`value_charged`, round-14 verdict item): the suite total where each
-    * memo-owning query contributes its RUN-1 sample (which paid the memo
-    * build) instead of its min. Approximation, documented: when a memo's
-    * consumers span chunk boundaries, the first consumer in each LATER
-    * chunk re-pays the build in its own child JVM; those re-builds stay
-    * visible in the raw run-1 samples, not in this companion number.
-    */
-  val memoOwners: Set[String] = Set(
-    "dedup_best_survivors",// dedupSigsMemo
-    "q_betweenness",       // coBoughtMemo (first alpha consumer incl. transitive)
-    "q_degree_assort",     // coBoughtSymMemo
-    "q_ktruss",            // trussSupportMemo
-    "embed_dbscan",        // embCandMemo
-    "pipeline_corpus_prep",// curateExactMemo
-    "text_nb_classify",    // nbModelMemo
-    "q_hybrid_rrf",        // bm25PostingMemo (< q_map_mrr < q_ndcg < text_*)
-    "q_label_prop",        // lpaLabelsMemo
-    "text_maxmatch_encode",// unigramMemo
-    "q_graph_spid",        // hanfMemo
-    "q_item_cf",           // itemStatsMemo
-    "q_hits",              // purchaseMemo
-    "q_pagerank")          // purchaseWalkMemo
-
   /** One entry per implemented operator group from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- dimension ETLs (S1 + P1 + C1 + C2) ---
@@ -409,7 +380,7 @@ object SparkEntry {
     // layout key (no Z-order diagonal jumps), pure codegen CASE chain.
     // The narrow coordinate projection is conditionally spread first
     // (Tables.cpuSpread, no-op at shuffle-width): the 16-level state
-    // machine ran serially on the single-split events scan (ProfileQ
+    // machine ran serially on the single-split events scan (profiled in
     // round 14: one 0.55 s task owning the query)
     "q_hilbert" -> ((s, d) =>
       graft.operators.Hilbert.hilbertValue(
@@ -935,8 +906,8 @@ object SparkEntry {
     // checkpointed sym relation was tried and REVERTED: their frontier
     // rounds' post-shuffle stages collapsed to 2 AQE-coalesced tasks
     // against the LogicalRDD-leaf edge relation and the four queries
-    // measured 1.4-2.3x SLOWER (bench 2026-08-19; A/B in
-    // dev/SymPathProbe, details in OPTIMIZATION_r13.md)
+    // measured 1.4-2.3x SLOWER (bench 2026-08-19; A/B details in
+    // OPTIMIZATION_r13.md)
     "q_bfs_hops" -> ((s, d) =>
       graft.analytics.Bfs.hubDistances(
         coBoughtEdges(s, d), "item_a", "item_b", canonical = true)),
@@ -2659,7 +2630,7 @@ object SparkEntry {
     // converged peel: the engine iterates to fixpoint; the oracle stays
     // a BOUNDED unrolled replay because peeling is idempotent past the
     // fixpoint — PROVIDED the unroll covers the convergence depth.
-    // Measured (dev/ExplainTrussRounds): sf0.01 converges at round 2,
+    // Measured (PLANS.md, round 9): sf0.01 converges at round 2,
     // sf0.1 at round 7; ktrussOracleRounds = 10 is margin over the
     // deepest measured SF at ~0.65 s/round under the materialized CTEs.
     // The margin is no longer an unchecked empirical constant: the

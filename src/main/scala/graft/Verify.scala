@@ -18,7 +18,8 @@ object Verify {
       // nanos-timestamp parquet support, set at build time (see Tables.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // bound eager plan-description rendering (see Bench)
+      // bound eager plan-description rendering: plan strings rendered
+      // eagerly on deep-lineage plans stalled the driver
       .config("spark.sql.maxPlanStringLength", "8192")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

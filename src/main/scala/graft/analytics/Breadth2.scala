@@ -210,7 +210,7 @@ object Breadth2 {
     // TWICE (visible as two BroadcastHashJoins in the plan). Post-agg
     // it is ≤ #days rows, so the cache is tiny at any input scale.
     // Cache contract as in dedup/Curation: callers that care should
-    // clearCache() after consuming the result (Verify/Bench do).
+    // clearCache() after consuming the result (Verify does).
     val daily = graft.Caching.materialize(
       lineitem.filter(col("l_suppkey") === suppkey)
         .join(orders, col("l_orderkey") === col("o_orderkey"))

@@ -29,11 +29,6 @@ object Drift {
 
   private val Dec = DecimalType(19, 0)
 
-  /** KS statistic of `featureCol` between two halves of the corpus split
-    * by even/odd numeric suffix of `source` (srcN). Returns one row:
-    * (n_a, n_b, ks_at, ks_stat) where ks_at is the smallest feature
-    * value attaining the supremum.
-    */
   /** CUSUM change-point detection over the daily revenue series: the
     * day t maximizing |n·C_t − t·T| (C_t = prefix sum, T = total) — the
     * scaled-by-n form of the classic cumulative-sum deviation
@@ -298,6 +293,11 @@ object Drift {
       |       CAST(SUM(t6) AS DOUBLE) / 1e6 AS chi2
       |FROM terms GROUP BY ncat""".stripMargin
 
+  /** KS statistic of `featureCol` between two halves of the corpus split
+    * by even/odd numeric suffix of `source` (srcN). Returns one row:
+    * (n_a, n_b, ks_at, ks_stat) where ks_at is the smallest feature
+    * value attaining the supremum.
+    */
   def ksDrift(documents: DataFrame, featureCol: String = "n_chars"): DataFrame = {
     val g = documents.select(
       col(featureCol).as("x"),

@@ -145,7 +145,7 @@ object Experiments {
     // spread the NARROW (key, cents) projection to default parallelism
     // before the reps× md5 expansion: a single-split parquet scan
     // otherwise runs the whole exploded hash workload in ONE task
-    // (ProfileQ: one 2.1 s task owning the entire query at sf0.1) — the
+    // (profiled: one 2.1 s task owning the entire query at sf0.1) — the
     // dispatchedBlockJoin stream-spread discipline; 16 B/row crosses
     // the exchange, reps× the hash work comes out the other side
     val base = orders.select(col("o_orderkey"),

@@ -346,22 +346,6 @@ object HyperAnf {
           .otherwise(col("__raw")).as("est"))
   }
 
-  /** N(t) in micro-units from a register relation: the per-node
-    * estimates summed in DECIMAL(38,0) (nf can exceed BIGINT at planet
-    * scale).
-    */
-  def nfEstimate(regs: DataFrame, t: Int): DataFrame =
-    perNodeEstimates(regs)
-      .agg(sum(col("est").cast("decimal(38,0)")).as("nf_micro"))
-      .select(lit(t).as("t"), col("nf_micro"))
-
-  /** The neighbourhood-function curve over `rounds` register-MAX
-    * rounds, with the 90%-effective-diameter flag: reached_90 is true
-    * from the first t where N(t) ≥ 0.9·N(rounds) — the smallest such t
-    * IS the estimated effective diameter.
-    *
-    * Output: (t, nf_micro, reached_90), t = 0..rounds.
-    */
   /** The N(t) curve, t = 0..rounds, in micro-units. Checkpoint each
     * round BEFORE releasing the previous one: regs feeds TWO subtrees
     * per round (neighbor join + union) — the BFS/PageRank lineage
@@ -394,6 +378,13 @@ object HyperAnf {
     curve.toSeq
   }
 
+  /** The neighbourhood-function curve over `rounds` register-MAX
+    * rounds, with the 90%-effective-diameter flag: reached_90 is true
+    * from the first t where N(t) ≥ 0.9·N(rounds) — the smallest such t
+    * IS the estimated effective diameter.
+    *
+    * Output: (t, nf_micro, reached_90), t = 0..rounds.
+    */
   def effectiveDiameter(edges: DataFrame, srcCol: String, dstCol: String,
                         rounds: Int = 4,
                         canonical: Boolean = false): DataFrame =

@@ -160,10 +160,6 @@ object LabelProp {
           * 1e6 + 0.5) / 1e6, lit(0.0)).as("modularity"))
   }
 
-  /** DuckDB replay over the co-bought-parts graph: the same symmetric
-    * edge list, each round unrolled as a votes CTE + a ROW_NUMBER
-    * argmax CTE with the identical (count desc, label asc) tie-break.
-    */
   /** Shared WITH-prefix: the co-bought symmetric edge relation `e` and
     * LPA rounds l0..l`rounds` — used by both oracle replays.
     */
@@ -189,6 +185,10 @@ object LabelProp {
        |$roundsSql""".stripMargin
   }
 
+  /** DuckDB replay over the co-bought-parts graph: the same symmetric
+    * edge list, each round unrolled as a votes CTE + a ROW_NUMBER
+    * argmax CTE with the identical (count desc, label asc) tie-break.
+    */
   def labelPropOracleSql(rounds: Int = 3): String =
     s"""${lpaPrefixSql(rounds)},
        |sizes AS (SELECT lbl AS community, COUNT(*) AS n_members

@@ -38,19 +38,6 @@ object Metrics {
   private def cents(c: Column): Column =
     floor(c * 100 + 0.5).cast("long")
 
-  /** Gini coefficient of per-customer revenue concentration.
-    *
-    * Uses the sorted-rank closed form
-    * `G = (2·Σ i·x_(i) − (n+1)·Σ x) / (n·Σ x)` evaluated per DISTINCT
-    * revenue value: a tie group of c customers at value v with
-    * `before` smaller customers contributes
-    * `v·(2·c·before + c·(c+1))` to `2·Σ i·x_(i)` regardless of how
-    * ties are ordered — so the statistic is deterministic with no
-    * tie-break needed. All terms are exact cents-longs in
-    * DECIMAL(38,0); one division at the end.
-    *
-    * Output: one row (n_customers, gini).
-    */
   /** ABC (Pareto) classification of parts by shipped revenue — the
     * warehouse-classic 80/95 split: rank parts by revenue descending,
     * class A while the cumulative share stays ≤ 80%, B to 95%, C after
@@ -113,6 +100,19 @@ object Metrics {
       |       CAST((CAST(SUM(rev) AS HUGEINT) * 1000000) // MAX(total) AS BIGINT) AS share_micro
       |FROM cls GROUP BY abc_class""".stripMargin
 
+  /** Gini coefficient of per-customer revenue concentration.
+    *
+    * Uses the sorted-rank closed form
+    * `G = (2·Σ i·x_(i) − (n+1)·Σ x) / (n·Σ x)` evaluated per DISTINCT
+    * revenue value: a tie group of c customers at value v with
+    * `before` smaller customers contributes
+    * `v·(2·c·before + c·(c+1))` to `2·Σ i·x_(i)` regardless of how
+    * ties are ordered — so the statistic is deterministic with no
+    * tie-break needed. All terms are exact cents-longs in
+    * DECIMAL(38,0); one division at the end.
+    *
+    * Output: one row (n_customers, gini).
+    */
   def giniRevenue(orders: DataFrame): DataFrame = {
     val rev = orders.groupBy(col("o_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("v"))

@@ -239,44 +239,6 @@ object Triangles {
         coalesce(col("sup"), lit(0L)).as("support"))
   }
 
-  /** Incremental converged peel: ONE whole-graph support pass (round 1),
-    * then per-round work ∝ the PEELED edge set — the frontier-delta
-    * discipline ([[HyperAnf.runRounds]] / `Ann.ivfMaintainPostings`)
-    * applied to truss decomposition. The full-recompute loop
-    * ([[peelRounds]]) paid a complete triangle enumeration EVERY round
-    * (~10 passes to fixpoint on the sf0.1 co-bought graph, 42 s warm
-    * isolated, and it aged the suite JVM for everything after it);
-    * here rounds 2+ maintain the support relation exactly:
-    *
-    *   S_{G∖D}(e) = S_G(e) − #{triangles of G containing e and ≥1 D-edge}
-    *
-    * Lost triangles are found from the DELETED side only — D (bounded
-    * driver rows) is broadcast onto the symmetric adjacency of the
-    * current graph (wedge candidates ∝ Σ_{(u,v)∈D} deg(u)), the
-    * surviving candidates are broadcast back onto the edge relation for
-    * the closing check — so the corpus-sized edge relation is STREAMED
-    * per round and never reshuffled. A triangle with 2–3 deleted edges
-    * is found once per D-edge and deduplicated by its sorted vertex
-    * triple before decrementing the SURVIVING member edges. TWO guards
-    * gate the delta path (the
-    * [[graft.operators.SkewJoin.autoSaltedJoin]] dispatch pattern),
-    * falling back to one full recompute when either trips: the deleted
-    * edge COUNT must not exceed `maxDeltaBroadcast`, and neither must
-    * the wedge-candidate count. Since round 13 each gate IS its
-    * relation's bounded collect — `limit(cap + 1).collect()` returns
-    * the ≤ cap rows as driver-local model state or proves the gate
-    * tripped, so one job replaces the round-12 gate-count pass PLUS the
-    * three BroadcastExchange builds (d ×2, cand, dec) that each
-    * re-evaluated their upstream join against `cur`; on adversarial
-    * graphs the delta machinery still never builds — let alone
-    * collects — more than cap + 1 rows anywhere.
-    *
-    * Maintained support EQUALS a fresh per-round recompute (the
-    * triangle-counting identity above — spec-pinned against
-    * [[kTrussConvergedReference]]), so the fixpoint test is simply
-    * "no edge below threshold" and the OUTPUT sup needs no final
-    * whole-graph pass either.
-    */
   /** The three distributed plan pieces of the gated-delta peel round,
     * factored (round-10 verdict #3) so PlanSnapshotSpec can pin the
     * INNER-LOOP plan shapes — per-round checkpoints mean the
@@ -360,6 +322,44 @@ object Triangles {
         (col("sup") - coalesce(col("lost_tris"), lit(0L))).as("sup"))
   }
 
+  /** Incremental converged peel: ONE whole-graph support pass (round 1),
+    * then per-round work ∝ the PEELED edge set — the frontier-delta
+    * discipline ([[HyperAnf.runRounds]] / `Ann.ivfMaintainPostings`)
+    * applied to truss decomposition. The full-recompute loop
+    * ([[peelRounds]]) paid a complete triangle enumeration EVERY round
+    * (~10 passes to fixpoint on the sf0.1 co-bought graph, 42 s warm
+    * isolated, and it aged the suite JVM for everything after it);
+    * here rounds 2+ maintain the support relation exactly:
+    *
+    *   S_{G∖D}(e) = S_G(e) − #{triangles of G containing e and ≥1 D-edge}
+    *
+    * Lost triangles are found from the DELETED side only — D (bounded
+    * driver rows) is broadcast onto the symmetric adjacency of the
+    * current graph (wedge candidates ∝ Σ_{(u,v)∈D} deg(u)), the
+    * surviving candidates are broadcast back onto the edge relation for
+    * the closing check — so the corpus-sized edge relation is STREAMED
+    * per round and never reshuffled. A triangle with 2–3 deleted edges
+    * is found once per D-edge and deduplicated by its sorted vertex
+    * triple before decrementing the SURVIVING member edges. TWO guards
+    * gate the delta path (the
+    * [[graft.operators.SkewJoin.autoSaltedJoin]] dispatch pattern),
+    * falling back to one full recompute when either trips: the deleted
+    * edge COUNT must not exceed `maxDeltaBroadcast`, and neither must
+    * the wedge-candidate count. Since round 13 each gate IS its
+    * relation's bounded collect — `limit(cap + 1).collect()` returns
+    * the ≤ cap rows as driver-local model state or proves the gate
+    * tripped, so one job replaces the round-12 gate-count pass PLUS the
+    * three BroadcastExchange builds (d ×2, cand, dec) that each
+    * re-evaluated their upstream join against `cur`; on adversarial
+    * graphs the delta machinery still never builds — let alone
+    * collects — more than cap + 1 rows anywhere.
+    *
+    * Maintained support EQUALS a fresh per-round recompute (the
+    * triangle-counting identity above — spec-pinned against
+    * [[kTrussConvergedReference]]), so the fixpoint test is simply
+    * "no edge below threshold" and the OUTPUT sup needs no final
+    * whole-graph pass either.
+    */
   private def peelIncremental(e0: DataFrame, k: Int, maxRounds: Int,
                               maxDeltaBroadcast: Long = 1000000L,
                               requireConverged: Boolean = false,

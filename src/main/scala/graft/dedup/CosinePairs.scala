@@ -224,9 +224,8 @@ object CosinePairs {
   }
 
   /** L2-normalized micro-unit TF-IDF features (doc_id, hv, wn) — the
-    * shared first stage of [[cosinePairs]] and the dev profiler
-    * (`dev.ProfileCosine` MUST build on this, not a copy). Persisted;
-    * release via the library cache contract.
+    * first stage of [[cosinePairs]] (profiled in OPTIMIZATION_r13.md).
+    * Persisted; release via the library cache contract.
     */
   private[graft] def features(documents: DataFrame): DataFrame = {
     // (doc, token) term frequencies; tokens fold to 60-bit md5 ids (hv) so

@@ -25,11 +25,6 @@ object Clean {
   def clean(df: DataFrame): DataFrame =
     df.na.drop("any").dropDuplicates()
 
-  /** C1 + C2 + C3: cleaned frame plus removed-row count. Runs two Spark
-    * jobs (count before / count after) like the reference's
-    * `original_shape[0] - cleaned_shape[0]` (`filmETLs.ipynb#cell2:12-23`).
-    * Use only where the audit number is actually needed.
-    */
   /** C1 + C2 + C3 without the extra counting job: the input row count is
     * attached as an `Observation` metric collected during whatever action
     * the caller runs anyway (SURVEY.md §7.3). After an action,
@@ -42,6 +37,11 @@ object Clean {
     (clean(observed), obs)
   }
 
+  /** C1 + C2 + C3: cleaned frame plus removed-row count. Runs two Spark
+    * jobs (count before / count after) like the reference's
+    * `original_shape[0] - cleaned_shape[0]` (`filmETLs.ipynb#cell2:12-23`).
+    * Use only where the audit number is actually needed.
+    */
   def cleanCounted(df: DataFrame, label: String = "table"): (DataFrame, Long) = {
     val before  = df.count()
     val cleaned = clean(df)

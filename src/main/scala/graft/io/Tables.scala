@@ -57,7 +57,7 @@ object Tables {
     * would lose precision above 2^53 ns.
     *
     * CONFIG CONTRACT: the session should be built with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (Bench/Verify/test
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (Verify/test
     * builders all do). As a convenience for ad-hoc sessions this method
     * sets the flag if it is still unset — a deliberate, documented session
     * side effect: later reads of *other* nanos-timestamped parquet in the
@@ -84,19 +84,7 @@ object Tables {
       case _ => raw
     }
   }
-  /** documents/embeddings feed CPU-heavy PER-ROW stages (tokenization,
-    * shingle/md5 chains, winnowing folds, codecs, vector arithmetic)
-    * whose parallelism is otherwise capped by the SCAN's split count —
-    * and a single-row-group parquet file is ONE unsplittable partition
-    * no matter its size, serializing all of that work onto one core.
-    * When the scan is narrower than the session's shuffle width, spread
-    * it by key with an EXPLICIT partition count (a keyless repartition
-    * would be AQE-coalesced right back: coalescing sizes by shuffle
-    * BYTES, which is the wrong objective for a shuffle that exists to
-    * spread per-row CPU). At real corpus scale the scan arrives as many
-    * splits and this is a no-op — the condition, not the repartition,
-    * is the contract.
-    */
+
   /** Memoized scan split counts, keyed by (sessionUUID, path): the split
     * count is a property of the file layout + the session's read conf,
     * not of the consuming query, but reading it off `df.rdd` forces full
@@ -129,7 +117,20 @@ object Tables {
     catch { case _: ReflectiveOperationException | _: ClassCastException =>
       System.identityHashCode(spark).toHexString }
 
-  /** `cacheKey = null` (caller-built relations whose split count is a
+  /** documents/embeddings feed CPU-heavy PER-ROW stages (tokenization,
+    * shingle/md5 chains, winnowing folds, codecs, vector arithmetic)
+    * whose parallelism is otherwise capped by the SCAN's split count —
+    * and a single-row-group parquet file is ONE unsplittable partition
+    * no matter its size, serializing all of that work onto one core.
+    * When the scan is narrower than the session's shuffle width, spread
+    * it by key with an EXPLICIT partition count (a keyless repartition
+    * would be AQE-coalesced right back: coalescing sizes by shuffle
+    * BYTES, which is the wrong objective for a shuffle that exists to
+    * spread per-row CPU). At real corpus scale the scan arrives as many
+    * splits and this is a no-op — the condition, not the repartition,
+    * is the contract.
+    *
+    * `cacheKey = null` (caller-built relations whose split count is a
     * property of the upstream plan, not a stable file layout) probes on
     * every call; a non-null key memoizes the probe per session.
     */

@@ -35,17 +35,17 @@ object AsOfJoin {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Backward as-of join (exact matches allowed).
-    *
-    * @param rightPayload right columns to attach (left keeps all columns);
-    *                     names must not clash with left's.
-    */
   /** Internal column names used by the union/window plumbing; inputs must
     * not use them (checked below) or the tagged union would produce
     * ambiguous columns and silently wrong matches.
     */
   private val ReservedCols = Set("__key", "__ts", "__side", "__payload", "__match")
 
+  /** Backward as-of join (exact matches allowed).
+    *
+    * @param rightPayload right columns to attach (left keeps all columns);
+    *                     names must not clash with left's.
+    */
   def asOf(left: DataFrame, right: DataFrame,
            leftKey: String, rightKey: String,
            leftTs: String, rightTs: String,

@@ -68,9 +68,6 @@ object Sampling {
         sum(col("ratio_micro")).as("weight_micro"))
   }
 
-  /** Keep k rows per group, chosen by md5-of-id order (deterministic,
-    * engine-agnostic — the same SQL runs on the DuckDB oracle).
-    */
   /** Token-budget sampler: materialize a per-source corpus slice that
     * consumes at most `budget` tokens of *prior* tape per source — the
     * operation that turns mixture RATES ([[temperatureMix]]) into an
@@ -160,6 +157,9 @@ object Sampling {
           .as("alloc_n"))
   }
 
+  /** Keep k rows per group, chosen by md5-of-id order (deterministic,
+    * engine-agnostic — the same SQL runs on the DuckDB oracle).
+    */
   def hashSamplePerGroup(df: DataFrame, groupCol: String, idCol: String,
                          k: Int): DataFrame = {
     val w = Window.partitionBy(groupCol)
@@ -169,14 +169,19 @@ object Sampling {
       .drop("rn")
   }
 
-  /** Deterministic weighted train/val/test split: each row's id hashes
-    * (seeded md5, 60 bits) to a uniform u ∈ [0,1); cumulative weight
-    * thresholds assign the split. Reproducible across runs, engines and
-    * topologies (the same arithmetic replays in the DuckDB oracle),
-    * stable under corpus growth (a doc's split never depends on other
-    * rows), and row-local — zero shuffle, scan-bandwidth scaling. The
-    * standard way large corpora pin held-out sets.
+  /** The Efraimidis–Spirakis rank key ln(u)/w with the library's seeded
+    * 60-bit md5 uniform (shifted to (0, 1] so ln never sees 0), rounded
+    * to 1e-6 before ranking — the ONE definition both weighted samplers
+    * rank on, so a change to the determinism discipline (hash width,
+    * rounding scale) cannot diverge them or their oracles.
     */
+  private def esKey(idCol: String, weightCol: String, seed: String) = {
+    val u = (conv(substring(md5(concat(lit(s"$seed:"),
+      col(idCol).cast("string"))), 1, 15), 16, 10)
+      .cast("double") + 1.0) / lit((1L << 60).toDouble)
+    round(log(u) / col(weightCol), 6)
+  }
+
   /** Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
     * each row draws u ∈ (0,1] from a seeded md5 of its id and gets the
     * key ln(u)/w; the k LARGEST keys are the sample. Inclusion
@@ -193,19 +198,6 @@ object Sampling {
     * cannot change under re-runs, repartitioning, or cluster growth.
     * Changing `seed` draws a fresh sample. Weights must be > 0.
     */
-  /** The Efraimidis–Spirakis rank key ln(u)/w with the library's seeded
-    * 60-bit md5 uniform (shifted to (0, 1] so ln never sees 0), rounded
-    * to 1e-6 before ranking — the ONE definition both weighted samplers
-    * rank on, so a change to the determinism discipline (hash width,
-    * rounding scale) cannot diverge them or their oracles.
-    */
-  private def esKey(idCol: String, weightCol: String, seed: String) = {
-    val u = (conv(substring(md5(concat(lit(s"$seed:"),
-      col(idCol).cast("string"))), 1, 15), 16, 10)
-      .cast("double") + 1.0) / lit((1L << 60).toDouble)
-    round(log(u) / col(weightCol), 6)
-  }
-
   def weightedSample(df: DataFrame, idCol: String, weightCol: String, k: Int,
                      seed: String = "ws"): DataFrame = {
     require(k > 0, "k must be positive")
@@ -243,6 +235,14 @@ object Sampling {
       .drop("__es_key", "__rn")
   }
 
+  /** Deterministic weighted train/val/test split: each row's id hashes
+    * (seeded md5, 60 bits) to a uniform u ∈ [0,1); cumulative weight
+    * thresholds assign the split. Reproducible across runs, engines and
+    * topologies (the same arithmetic replays in the DuckDB oracle),
+    * stable under corpus growth (a doc's split never depends on other
+    * rows), and row-local — zero shuffle, scan-bandwidth scaling. The
+    * standard way large corpora pin held-out sets.
+    */
   def hashSplit(df: DataFrame, idCol: String,
                 splits: Seq[(String, Double)] = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
                 seed: String = "split"): DataFrame = {
@@ -259,13 +259,6 @@ object Sampling {
     df.withColumn("split", assign)
   }
 
-  /** Deterministic weighted corpus mixing: each source (a value of
-    * `sourceCol`) is down-sampled at its configured rate by the same
-    * seeded-md5 uniform as [[hashSplit]] — the "mix web at 0.5, books at
-    * 1.0" step of training-data assembly. Row-local and reproducible:
-    * re-running, re-partitioning, or growing a source never changes
-    * which existing rows survive. Unknown sources are dropped (rate 0).
-    */
   /** Water-filling mixture allocation: split a total token `budget`
     * across sources at UNIFORM target shares under per-source
     * availability caps — the feasibility solver that runs before
@@ -373,6 +366,13 @@ object Sampling {
        |FROM fin""".stripMargin
   }
 
+  /** Deterministic weighted corpus mixing: each source (a value of
+    * `sourceCol`) is down-sampled at its configured rate by the same
+    * seeded-md5 uniform as [[hashSplit]] — the "mix web at 0.5, books at
+    * 1.0" step of training-data assembly. Row-local and reproducible:
+    * re-running, re-partitioning, or growing a source never changes
+    * which existing rows survive. Unknown sources are dropped (rate 0).
+    */
   def mixSources(df: DataFrame, sourceCol: String, idCol: String,
                  rates: Map[String, Double], seed: String = "mix"): DataFrame = {
     require(rates.nonEmpty && rates.values.forall(r => r >= 0 && r <= 1),

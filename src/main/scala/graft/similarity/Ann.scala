@@ -1048,10 +1048,6 @@ object Ann {
     searchPostings(maintained, cents, q, k, nprobe)
   }
 
-  /** Embedding-cosine near-duplicate pairs: LSH blocking (all `tables`
-    * buckets must be computed anyway, any shared bucket makes a candidate)
-    * then exact cosine ≥ threshold. doc pairs ordered vec_a < vec_b.
-    */
   /** Deduped LSH candidate ID pairs (vec_a < vec_b) — the block/dedup
     * half of [[nearDupPairs]], factored out (round-13 optimization) for
     * two reasons, both guide-§8 "decide with small rows, move big rows
@@ -1087,6 +1083,10 @@ object Ann {
       .dropDuplicates("vec_a", "vec_b")
   }
 
+  /** Embedding-cosine near-duplicate pairs: LSH blocking (all `tables`
+    * buckets must be computed anyway, any shared bucket makes a candidate)
+    * then exact cosine ≥ threshold. doc pairs ordered vec_a < vec_b.
+    */
   def nearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
                    tables: Int = 8, bits: Int = 8, dim: Int = 64,
                    candidates: Option[DataFrame] = None): DataFrame = {
@@ -1127,21 +1127,6 @@ object Ann {
           .as("centroid"),
         col("n"))
 
-  /** L2 normalization per vector (unit sphere — the prep step that turns
-    * cosine into dot product for downstream ANN). Row-local, zero
-    * shuffle; the norm is staged as a bound attribute before the
-    * per-element division. The unit vector is emitted in micro-units
-    * (round(x/‖x‖ · 10⁶) as integers) — integers stringify identically
-    * across engines, where stringified doubles would diverge on
-    * scientific-notation formatting. Zero vectors stay zero with norm 0.
-    *
-    * The norm itself uses the exact fixed-point scheme (squares
-    * truncated to 1e-12, summed as longs, one sqrt) so both engines
-    * round the same double. Ties round as `floor(x + 0.5)` (half toward
-    * +∞): this corpus has pre-normalized vectors whose micro-values hit
-    * exact halves, where Spark's round() (half away from zero) and
-    * DuckDB's (half to even) disagree — pin the convention explicitly.
-    */
   /** Signed random projection (Achlioptas, "Database-friendly random
     * projections", JPDS 2003; the Johnson–Lindenstrauss workhorse): each
     * output dimension is Σ_j v[j]·sign(i,j) with a DERIVED ±1 matrix —
@@ -1182,6 +1167,21 @@ object Ann {
         (col("p.s9").cast("double") / lit(1.0e9)).as("comp"))
   }
 
+  /** L2 normalization per vector (unit sphere — the prep step that turns
+    * cosine into dot product for downstream ANN). Row-local, zero
+    * shuffle; the norm is staged as a bound attribute before the
+    * per-element division. The unit vector is emitted in micro-units
+    * (round(x/‖x‖ · 10⁶) as integers) — integers stringify identically
+    * across engines, where stringified doubles would diverge on
+    * scientific-notation formatting. Zero vectors stay zero with norm 0.
+    *
+    * The norm itself uses the exact fixed-point scheme (squares
+    * truncated to 1e-12, summed as longs, one sqrt) so both engines
+    * round the same double. Ties round as `floor(x + 0.5)` (half toward
+    * +∞): this corpus has pre-normalized vectors whose micro-values hit
+    * exact halves, where Spark's round() (half away from zero) and
+    * DuckDB's (half to even) disagree — pin the convention explicitly.
+    */
   def l2Normalize(embeddings: DataFrame): DataFrame = {
     val vd = asDouble(col("embedding"))
     embeddings

@@ -38,12 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object NaiveBayes {
 
-  /** Train on doc_id % 5 ≠ 0, classify the held-out 20% by `source`.
-    *
-    * Output: (doc_id, source, pred, score_micro) — one row per held-out
-    * non-empty doc; `score_micro` is the winning class's total log-score
-    * in micro-units (prior + token likelihoods).
-    */
   /** The lowered non-empty (doc_id, source, token) explosion both the
     * train and test sides read.
     */
@@ -102,6 +96,12 @@ object NaiveBayes {
     (classes, lik)
   }
 
+  /** Train on doc_id % 5 ≠ 0, classify the held-out 20% by `source`.
+    *
+    * Output: (doc_id, source, pred, score_micro) — one row per held-out
+    * non-empty doc; `score_micro` is the winning class's total log-score
+    * in micro-units (prior + token likelihoods).
+    */
   def classifyBySource(documents: DataFrame,
                        model: Option[(DataFrame, DataFrame)] = None)
       : DataFrame = {

@@ -567,17 +567,6 @@ object TextOps {
           col("dup_2gram_frac") <= 0.6)
   }
 
-  /** Fixed-size token chunking with overlap: documents are split into
-    * windows of `size` whitespace tokens starting every `stride` tokens
-    * (overlap = size − stride) — the standard context-window prep for
-    * training corpora. Empty documents yield no chunks.
-    *
-    * The token array is staged as a bound attribute before the
-    * `sequence`/`slice` expressions use it (no CSE inside higher-order
-    * expressions — an inlined split would re-run per chunk). Chunking is
-    * row-local: explode multiplies rows ~n/stride× but nothing shuffles
-    * until a downstream aggregation.
-    */
   /** Pointwise mutual information of ADJACENT token pairs — the classic
     * collocation / multi-word-expression detector (Church & Hanks, "Word
     * Association Norms, Mutual Information, and Lexicography", CL 1990):
@@ -746,6 +735,17 @@ object TextOps {
       |FROM hashed GROUP BY 1
       |ORDER BY n_tokens DESC, feature_idx LIMIT $k""".stripMargin
 
+  /** Fixed-size token chunking with overlap: documents are split into
+    * windows of `size` whitespace tokens starting every `stride` tokens
+    * (overlap = size − stride) — the standard context-window prep for
+    * training corpora. Empty documents yield no chunks.
+    *
+    * The token array is staged as a bound attribute before the
+    * `sequence`/`slice` expressions use it (no CSE inside higher-order
+    * expressions — an inlined split would re-run per chunk). Chunking is
+    * row-local: explode multiplies rows ~n/stride× but nothing shuffles
+    * until a downstream aggregation.
+    */
   def chunk(documents: DataFrame, size: Int = 32, stride: Int = 24): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size,
       "need 0 < stride <= size (overlap = size - stride)")

@@ -43,7 +43,7 @@ object TextRank {
     // vocabulary (word → id, final label join), the id-edge projection,
     // AND the empty-graph guard — before round 14 the corpus
     // tokenize+bigram+distinct ran TWICE (once under the word relation,
-    // once under the edge mapping; ProfileQ: two ~0.5 s wall jobs of
+    // once under the edge mapping; profiled: two ~0.5 s wall jobs of
     // identical shape per execution)
     val canon = graft.Caching.materialize(
       bg.select(least(col("wa"), col("wb")).as("a"),

@@ -233,7 +233,7 @@ object Unigram {
     // the final output consumes the last round's vocab from BOTH the
     // main side and the broadcast total — without the cache the E+M
     // segmentation DP executed 2x per collected round and 4x under the
-    // final action (round-14 ProfileQ: ~16 repeated 32-task mini-jobs)
+    // final action (round-14 profile: ~16 repeated 32-task mini-jobs)
     var vocabDf = pruneVocab(graft.Caching.materialize(seedCounts(wt)),
       seedMultis)
     for (_ <- 1 to rounds) {

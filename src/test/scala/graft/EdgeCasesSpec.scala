@@ -59,7 +59,7 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("withCaches releases every cache the scope accumulated") {
-    import graft.operators.Caching.withCaches
+    import graft.Caching.withCaches
     val docs = Tables.documents(spark, sfDir)
     val before = spark.sparkContext.getPersistentRDDs.size
     withCaches(spark) {

@@ -3,34 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 optimization-round changes: the bench's child-side mt-floor
-  * probe, the charged-build memo-owner declaration, and the reliable-
-  * checkpoint gate on Caching.checkpointed.
+/** Round-14 optimization-round changes: the reliable-checkpoint gate on
+  * Caching.checkpointed and injected MinHash signatures in minhashDedup.
   */
 class Round14OpsSpec extends AnyFunSuite {
   import TestSpark.spark
-
-  test("memoOwners declares only existing queries") {
-    val unknown = SparkEntry.memoOwners -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"memoOwners not in queries: $unknown")
-  }
-
-  test("warmup-only seed child reports positive calibration readings") {
-    // the round-14 storm-floor seed: a measuring child given an EMPTY
-    // query list — same flags/classpath/Spark session as real measuring
-    // children, probes streamed from the same point in childMain. This
-    // is what fixes the BENCH_r13_c8 respawn spiral (the old in-process
-    // parent seed diverged from child readings off 32 cores), so pin it
-    // end-to-end: spawn, parse, positive readings, no query samples.
-    val m = Bench.spawnChild(Seq.empty, TestSpark.sfDir, 1,
-      timeoutMinutes = 10)
-    val mt = m.get(Bench.CalibMtName).flatMap(_.headOption).map(_.sec)
-    val st = m.get(Bench.CalibName).flatMap(_.headOption).map(_.sec)
-    assert(mt.exists(v => v > 0 && !v.isNaN), s"mt reading: $mt")
-    assert(st.exists(v => v > 0 && !v.isNaN), s"calib reading: $st")
-    assert((m.keySet - Bench.CalibName - Bench.CalibMtName).isEmpty,
-      "seed child must measure no queries")
-  }
 
   test("checkpointed with spark.graft.checkpointDir uses a reliable checkpoint") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString

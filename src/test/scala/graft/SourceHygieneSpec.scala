@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source checks that no compiler flag catches. An orphaned scaladoc
+  * block — a `/** … */` followed, after only blank lines, by another
+  * doc block — documents nothing: scaladoc attaches only the second
+  * block, so the first one's text silently drops out of the API docs
+  * and usually describes a definition that moved elsewhere.
+  */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  /** (line of the orphaned block's opening, 1-based) for every orphaned
+    * scaladoc block in `lines`.
+    */
+  private def orphanedDocs(lines: IndexedSeq[String]): Seq[Int] = {
+    val out = Seq.newBuilder[Int]
+    var i = 0
+    while (i < lines.length) {
+      if (lines(i).trim.startsWith("/**")) {
+        val start = i
+        while (i < lines.length && !lines(i).contains("*/")) i += 1
+        // a block closed mid-line (`/** … */ def x`) documents that line
+        val closedAlone = i < lines.length &&
+          lines(i).substring(lines(i).indexOf("*/") + 2).trim.isEmpty
+        var j = i + 1
+        while (j < lines.length && lines(j).trim.isEmpty) j += 1
+        if (closedAlone && j < lines.length && lines(j).trim.startsWith("/**"))
+          out += start + 1
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  test("no orphaned scaladoc blocks under src/main/scala") {
+    // the detector itself: only the block followed by another block counts
+    val sample = IndexedSeq(
+      "  /** first */", "", "  /** second", "    */", "  def a = 1",
+      "  /** inline */ def b = 2", "  /** third */", "  def c = 3")
+    assert(orphanedDocs(sample) === Seq(1))
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq
+    assert(files.nonEmpty, "src/main/scala not found from the test's working directory")
+    val sites = for {
+      f <- files
+      line <- orphanedDocs(Files.readAllLines(f).asScala.toIndexedSeq)
+    } yield s"$f:$line"
+    if (sites.nonEmpty)
+      fail(s"scaladoc blocks followed only by another scaladoc block:\n${sites.sorted.mkString("\n")}")
+  }
+}
