@@ -3,6 +3,8 @@ package graft.dev
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Tables
+
 /** Deterministic scale-up of the driver fixtures by DISJOINT KEY-OFFSET
   * REPLICATION: `k` copies of every sf0.1 table, copy `i` with every key
   * column shifted by `i * 10^6` (far above the sf0.1 key maxima — max is
@@ -104,11 +106,11 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
     try {
       fixedDims.foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.parquet(spark, s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
       }
       keyCols.foreach { case (t, keys) =>
-        val base = spark.read.parquet(s"$src/$t.parquet")
+        val base = Tables.parquet(spark, s"$src/$t.parquet")
         val rep = replicate(base, k, keys, rotateVec = t == "embeddings",
           saltText = t == "documents")
         // spread across enough files that the scaled scan arrives as

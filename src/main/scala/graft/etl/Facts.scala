@@ -19,12 +19,18 @@ import org.apache.spark.sql.types.DecimalType
   * tiny and AQE/broadcast handles it; at 100 TB both sides are large, so
   * the shuffle-on-`l_orderkey` sort-merge plan is the right one and the
   * group-by keys are high-cardinality enough to spread evenly. Aggregations
-  * are hash aggs with map-side partial combine (no driver state).
+  * are hash aggs with map-side partial combine (no driver state): one
+  * partial + one final `HashAggregate` per fact. The reference's post-agg
+  * `clean_dataframe` keeps only its null-drop here: its dedup half can
+  * remove nothing from rows already unique on the group keys (Spark's
+  * optimizer drops that aggregate too, `RemoveRedundantAggregates`, so
+  * the plans are unchanged; the code no longer relies on the rule).
   */
 object Facts {
 
   /** J1 + P3 + A1 (+ post-agg clean, as the reference orders it:
-    * `filmETLs.ipynb#cell9:15` cleans *after* grouping — SURVEY.md §7.4.4).
+    * `filmETLs.ipynb#cell9:15` cleans *after* grouping — SURVEY.md §7.4.4;
+    * on grouped output that clean is the null-drop alone).
     *
     * Output grain: (date_id, l_partkey, l_suppkey) with a row-count
     * measure, mirroring fact_daily_inventory's (date, film, store) grain.
@@ -38,10 +44,12 @@ object Facts {
         date_format(col("o_orderdate"), "yyyyMMdd").cast("int"))  // P3
       .groupBy("date_id", "l_partkey", "l_suppkey")
       .agg(count(lit(1)).as("inventory_count"))                   // A1
-    Clean.clean(fact)
+    // no dropDuplicates: groupBy output is already unique on its keys
+    fact.na.drop("any")
   }
 
-  /** P5 + P6 + A2 (+ post-agg clean, `filmETLs.ipynb#cell10:13`).
+  /** P5 + P6 + A2 (+ post-agg clean, `filmETLs.ipynb#cell10:13`: the
+    * null-drop only, as in [[factDailyInventory]]).
     *
     * `date_id = year*10000 + month*100 + 1` is the reference's deliberate
     * first-of-month encoding (`filmETLs.ipynb#cell10:6`) — preserved, not
@@ -61,6 +69,7 @@ object Facts {
       .groupBy("o_custkey", "o_orderkey", "date_id")
       .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
         .cast("double").as("monthly_payment_total"))              // A2
-    Clean.clean(fact)
+    // no dropDuplicates: groupBy output is already unique on its keys
+    fact.na.drop("any")
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -22,29 +22,35 @@ object Warehouse {
   case class BuildReport(table: String, rows: Long)
 
   /** Build the star schema from `inDir` fixtures into `outDir` parquet.
-    * Returns per-table loaded row counts. (The C3 cleaning audit is a
-    * per-frame concern — use `Clean.cleanCounted`/`cleanObserved` around
-    * individual builders when the removed-count is needed.)
+    * Returns per-table loaded row counts, observed while each table is
+    * written (an `Observation` on the write itself, no re-read of the
+    * output); `orders` is read once and feeds `dim_order` and both facts.
+    * (The C3 cleaning audit is a per-frame concern — use
+    * `Clean.cleanCounted`/`cleanObserved` around individual builders when
+    * the removed-count is needed.)
     */
   def buildAll(spark: SparkSession, inDir: String, outDir: String): Seq[BuildReport] = {
     def write(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): BuildReport = {
-      Tables.write(df, s"$outDir/$name", partitionBy)
-      BuildReport(name, spark.read.parquet(s"$outDir/$name").count())
+      // unique per call, so concurrent builds in one session never read
+      // each other's counts
+      val obs = new Observation(s"$name-${java.util.UUID.randomUUID()}")
+      Tables.write(df.observe(obs, count(lit(1)).as("rows")), s"$outDir/$name", partitionBy)
+      BuildReport(name, obs.get("rows").asInstanceOf[Long])
     }
+    val orders = Tables.orders(spark, inDir)
 
     // --- dimensions (reference cells 4-8) ---
     val dims = Seq(
       write("dim_customer", Dims.dimCustomer(Tables.customer(spark, inDir))),
       write("dim_supplier", Dims.dimSupplier(Tables.supplier(spark, inDir))),
       write("dim_part",     Dims.dimPart(Tables.part(spark, inDir))),
-      write("dim_order",    Dims.dimOrder(Tables.orders(spark, inDir))),
+      write("dim_order",    Dims.dimOrder(orders)),
       write("dim_date",     Dims.dimDate(spark)))
 
     // --- facts (reference cells 9-10), after dims, partitioned by year ---
-    val daily = Facts.factDailyInventory(
-      Tables.lineitem(spark, inDir), Tables.orders(spark, inDir))
+    val daily = Facts.factDailyInventory(Tables.lineitem(spark, inDir), orders)
       .withColumn("year", (col("date_id") / 10000).cast("int"))
-    val monthly = Facts.factMonthlyPayment(Tables.orders(spark, inDir))
+    val monthly = Facts.factMonthlyPayment(orders)
       .withColumn("year", (col("date_id") / 10000).cast("int"))
     val facts = Seq(
       write("fact_daily_inventory", daily, Seq("year")),

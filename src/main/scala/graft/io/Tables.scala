@@ -1,6 +1,15 @@
 package graft.io
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over the driver fixtures (`TESTDATA.md`).
   *
@@ -9,6 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads the equivalent relations from parquet. Parquet is self-describing,
   * so schemas come from the file footers — [[expectedColumns]] documents the
   * contract and lets callers assert it.
+  *
+  * Reads never start a Spark job for the schema: [[parquet]] lists the path
+  * on the driver, reads ONE footer there and hands the schema to the
+  * reader. That is Spark's own `mergeSchema=false` rule (the first data
+  * file by path, all files assumed consistent), which a plain
+  * `spark.read.parquet` runs as a one-task job shipping the whole Hadoop
+  * configuration to read that one footer. Where the rule does not apply —
+  * a missing path, no data file, a parquet summary file (which Spark
+  * prefers), an unreadable footer, or `spark.sql.parquet.mergeSchema` on
+  * — `spark.read.parquet` runs unchanged, so Spark raises its own errors
+  * and does its own merging.
   *
   * Scale note (100 TB posture): `spark.read.parquet` on a directory of
   * files partitions by `spark.sql.files.maxPartitionBytes` (128 MB default),
@@ -41,7 +61,67 @@ object Tables {
     * Catalyst prunes the parquet scan to just the needed columns.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema read from one footer on
+    * the driver (no schema-inference job). Partition columns are still
+    * discovered by the file index, so a `partitionBy` directory reads
+    * back with them.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark would infer for `path` with schema merging off, or
+    * None where [[parquet]] leaves the read to Spark.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    val root = new Path(path)
+    if (sqlConf.isParquetSchemaMergingEnabled || !listed(root.getName)) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(hadoopConf)
+    // Spark infers from a summary file if there is one, else from the
+    // least data file path. Depth-first over siblings ordered by how their
+    // paths sort as prefixes (a directory as `name/`), the first leaf
+    // reached is the least path, so the walk lists one directory per level.
+    def firstFile(st: FileStatus): Option[FileStatus] =
+      if (!st.isDirectory) Some(st)
+      else {
+        val children = fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName))
+        children.find(c => summary(c.getPath.getName)).orElse(
+          children.sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+            .iterator.flatMap(firstFile).nextOption())
+      }
+    try firstFile(fs.getFileStatus(root)).filterNot(f => summary(f.getPath.getName)).map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      // the converter Spark's inference task builds (ParquetFileFormat.
+      // mergeSchemasInParallel): five settings from the session, the
+      // rest at their defaults
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+    }
+    // a missing path, an unreadable listing or footer: Spark's read
+    // raises (or, with ignoreCorruptFiles, skips) it its own way
+    catch { case NonFatal(_) => None }
+  }
+
+  /** Names Spark's file listing keeps (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def listed(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) ||
+      name.startsWith("_common_metadata") || name.startsWith("_metadata")
+
+  private def summary(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
 
   def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")

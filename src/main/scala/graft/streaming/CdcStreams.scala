@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.io.Tables
 import graft.operators.Merge
 
 /** Streaming CDC apply — the streaming twin of [[Merge.scd1Merge]]: a
@@ -48,7 +49,7 @@ object CdcStreams {
 
   /** Current snapshot (highest version) as a DataFrame. */
   def snapshot(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(latestVersion(tableDir))
+    Tables.parquet(spark, latestVersion(tableDir))
 
   /** All committed version numbers under `tableDir`, ascending — the
     * table's history listing (Delta's DESCRIBE HISTORY shape).
@@ -73,7 +74,7 @@ object CdcStreams {
     val have = versions(tableDir)
     require(have.contains(version),
       s"version $version not present under $tableDir (have: ${have.mkString(", ")})")
-    spark.read.parquet(s"$tableDir/$VersionPrefix$version")
+    Tables.parquet(spark, s"$tableDir/$VersionPrefix$version")
   }
 
   /** Row-level audit between two committed versions: inserts, deletes,

@@ -100,6 +100,10 @@ class AsOfWarehouseSpec extends AnyFunSuite {
     assert(byName("dim_date") === 2557L)
     assert(byName("fact_monthly_payment") === byName("dim_order")) // grain identity
     assert(byName("fact_daily_inventory") <= 6000L)
+    // the counts observed during the writes are the rows that landed
+    reports.foreach { r =>
+      assert(r.rows === spark.read.parquet(s"$out/${r.table}").count(), r.table)
+    }
     // facts written partitioned by year → partition dirs exist
     val dirs = new java.io.File(s"$out/fact_daily_inventory").listFiles()
       .filter(_.isDirectory).map(_.getName)

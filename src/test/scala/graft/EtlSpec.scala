@@ -65,6 +65,50 @@ class EtlSpec extends AnyFunSuite {
     assert(badDay === 0)
   }
 
+  test("facts: post-agg null-drop equals Clean.clean of the grouped frame, 2 HashAggregates each") {
+    // dirty inputs: null keys, null measures, repeated rows
+    val li = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(1L), Some(10L), Some(100L)), (Some(1L), Some(10L), Some(100L)),
+      (Some(1L), None, Some(100L)), (Some(2L), Some(20L), None),
+      (Some(2L), Some(20L), Some(200L)), (Some(3L), Some(30L), Some(300L)),
+      (None, Some(40L), Some(400L)), (Some(3L), Some(30L), Some(300L))
+    ).toDF("l_orderkey", "l_partkey", "l_suppkey")
+    val ord = Seq[(Option[Long], Option[Long], Option[String], Option[Double])](
+      (Some(1L), Some(7L), Some("1996-01-02"), Some(10.25)),
+      (Some(1L), Some(7L), Some("1996-01-02"), Some(10.25)),
+      (Some(2L), None, Some("1996-02-03"), Some(5.5)),
+      (Some(3L), Some(8L), None, Some(1.0)),
+      (Some(4L), Some(9L), Some("1996-03-04"), None),
+      (Some(4L), Some(9L), Some("1996-03-04"), None)
+    ).toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
+      .withColumn("o_orderdate", $"o_orderdate".cast("date"))
+    val dailyGrouped = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .withColumn("date_id", date_format($"o_orderdate", "yyyyMMdd").cast("int"))
+      .groupBy("date_id", "l_partkey", "l_suppkey")
+      .agg(count(lit(1)).as("inventory_count"))
+    val monthlyGrouped = ord
+      .withColumn("date_id",
+        (year($"o_orderdate") * 10000 + month($"o_orderdate") * 100 + 1).cast("int"))
+      .groupBy("o_custkey", "o_orderkey", "date_id")
+      .agg(sum($"o_totalprice".cast("decimal(18,2)")).cast("double").as("monthly_payment_total"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def hashAggs(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect() // the final adaptive plan
+      PlanNodes.collect(df.queryExecution.executedPlan) {
+        case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec => h
+      }.size
+    }
+    Seq(
+      Facts.factDailyInventory(li, ord) -> dailyGrouped,
+      Facts.factMonthlyPayment(ord) -> monthlyGrouped
+    ).foreach { case (fact, grouped) =>
+      val want = graft.etl.Clean.clean(grouped)
+      assert(rows(fact) === rows(want))
+      assert(rows(fact).nonEmpty && rows(fact).size < rows(grouped).size) // nulls were dropped
+      assert(hashAggs(fact) === 2) // partial + final of the groupBy, nothing more
+    }
+  }
+
   test("profile counts nulls and exact distincts per column in one pass") {
     val df = Seq(
       (Some(1), Some("a")), (Some(1), None), (Some(2), Some("b")), (None, Some("b"))
@@ -78,3 +122,6 @@ class EtlSpec extends AnyFunSuite {
     }
   }
 }
+
+/** Physical-plan traversal that steps into adaptive query stages. */
+object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * block — a `/** … */` followed, after only blank lines, by another
   * doc block — documents nothing: scaladoc attaches only the second
   * block, so the first one's text silently drops out of the API docs
-  * and usually describes a definition that moved elsewhere.
+  * and usually describes a definition that moved elsewhere. A bare
+  * `.read.parquet(` starts a schema-inference job per call; library reads
+  * go through `Tables.parquet`, which reads the schema on the driver.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -35,21 +37,36 @@ class SourceHygieneSpec extends AnyFunSuite {
     out.result()
   }
 
+  private def mainSources: Seq[java.nio.file.Path] = {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq
+    assert(files.nonEmpty, "src/main/scala not found from the test's working directory")
+    files
+  }
+
   test("no orphaned scaladoc blocks under src/main/scala") {
     // the detector itself: only the block followed by another block counts
     val sample = IndexedSeq(
       "  /** first */", "", "  /** second", "    */", "  def a = 1",
       "  /** inline */ def b = 2", "  /** third */", "  def c = 3")
     assert(orphanedDocs(sample) === Seq(1))
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .toSeq
-    assert(files.nonEmpty, "src/main/scala not found from the test's working directory")
     val sites = for {
-      f <- files
+      f <- mainSources
       line <- orphanedDocs(Files.readAllLines(f).asScala.toIndexedSeq)
     } yield s"$f:$line"
     if (sites.nonEmpty)
       fail(s"scaladoc blocks followed only by another scaladoc block:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no schema-inferring .read.parquet( under src/main/scala outside io/Tables.scala") {
+    val tables = Paths.get("src/main/scala/graft/io/Tables.scala")
+    val sites = for {
+      f <- mainSources if f != tables
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(".read.parquet(")
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"read parquet through graft.io.Tables.parquet, not spark.read.parquet:\n${sites.sorted.mkString("\n")}")
   }
 }
