@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.etl.Facts
+import graft.etl.{Dims, Facts}
 
 /** The reference's three analytics reads (`filmETLs.ipynb#cell11-13`),
   * re-expressed over the fixture star schema (FIXTURES.md §C).
@@ -25,8 +25,7 @@ object Queries {
   def q1MonthlyRevenue(orders: DataFrame): DataFrame = {
     val fact = Facts.factMonthlyPayment(orders)
     fact
-      .withColumn("month_start",
-        to_date(col("date_id").cast("string"), "yyyyMMdd"))       // P4
+      .withColumn("month_start", Dims.keyDate(col("date_id")))    // P4
       .groupBy("month_start")                                      // P7 grain
       // the fact's doubles are exact cent values (≤ 15 significant digits),
       // so the decimal round-trip re-sums them exactly in any order
@@ -63,7 +62,7 @@ object Queries {
     val fact = Facts.factDailyInventory(lineitem, orders)
     fact
       .filter(col("l_suppkey") === suppkey)                        // F1
-      .withColumn("date", to_date(col("date_id").cast("string"), "yyyyMMdd")) // P4
+      .withColumn("date", Dims.keyDate(col("date_id")))            // P4
       .groupBy("date")
       .agg(sum("inventory_count").as("inventory_count"))           // A5
   }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dimension-table builders — Spark-native equivalents of the reference's
@@ -51,11 +51,25 @@ object Dims {
         to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")))
         .as("full_date"))
       .select(
-        // P3: int surrogate key, exact `strftime('%Y%m%d')` parity under
-        // the UTC session timezone (`filmETLs.ipynb#cell7:4`).
-        date_format(col("full_date"), "yyyyMMdd").cast("int").as("date_id"),
+        dateKey(col("full_date")).as("date_id"),
         col("full_date"),
         month(col("full_date")).as("month"),   // P5 (`#cell7:6-7`)
         year(col("full_date")).as("year"))
+  }
+
+  /** P3: the integer YYYYMMDD surrogate key of a date or timestamp, equal
+    * to `strftime('%Y%m%d')` as an int (`filmETLs.ipynb#cell7:4`) for every
+    * year 1..9999, computed with integer arithmetic instead of formatting
+    * a string per row.
+    */
+  def dateKey(d: Column): Column =
+    year(d) * 10000 + month(d) * 100 + dayofmonth(d)
+
+  /** P4: the date of a [[dateKey]] (integer division, so years below 1000,
+    * whose keys have fewer than 8 digits, map back too).
+    */
+  def keyDate(k: Column): Column = {
+    def div(n: Int) = call_function("div", k, lit(n))
+    make_date(div(10000), div(100) % 100, k % 100)
   }
 }

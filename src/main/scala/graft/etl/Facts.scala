@@ -40,8 +40,7 @@ object Facts {
     val ord = orders.select("o_orderkey", "o_orderdate")
     val joined = li.join(ord, li("l_orderkey") === ord("o_orderkey"), "inner")
     val fact = joined
-      .withColumn("date_id",
-        date_format(col("o_orderdate"), "yyyyMMdd").cast("int"))  // P3
+      .withColumn("date_id", Dims.dateKey(col("o_orderdate")))    // P3
       .groupBy("date_id", "l_partkey", "l_suppkey")
       .agg(count(lit(1)).as("inventory_count"))                   // A1
     // no dropDuplicates: groupBy output is already unique on its keys

@@ -1,7 +1,9 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
@@ -29,6 +31,11 @@ import org.apache.spark.sql.types.StructType
   * prefers), an unreadable footer, or `spark.sql.parquet.mergeSchema` on
   * — `spark.read.parquet` runs unchanged, so Spark raises its own errors
   * and does its own merging.
+  *
+  * A reader that needs one consistent set of files — a warehouse build
+  * whose inputs receive new files while it runs — lists them once
+  * ([[listing]]) and reads exactly those ([[read]]), with the same listing
+  * and schema rules.
   *
   * Scale note (100 TB posture): `spark.read.parquet` on a directory of
   * files partitions by `spark.sql.files.maxPartitionBytes` (128 MB default),
@@ -74,13 +81,73 @@ object Tables {
       case None => spark.read.parquet(path)
     }
 
+  /** One data file of a table at one moment: what [[listing]] finds,
+    * [[read]] reads and a warehouse build manifest records.
+    */
+  final case class DataFile(path: String, length: Long, mtime: Long)
+
+  /** The data files under `root` (qualified), sorted by path. */
+  final case class Listing(root: String, files: Seq[DataFile])
+
+  /** Every data file under `path` now: the names Spark's file listing keeps,
+    * without parquet summary files, recursively; no file where the path is
+    * missing. Driver-side, no Spark job.
+    */
+  def listing(spark: SparkSession, path: String): Listing = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(c => listed(c.getPath.getName) && !summary(c.getPath.getName)).flatMap(walk)
+    val files = if (!fs.exists(root)) Nil else walk(fs.getFileStatus(root))
+    Listing(fs.makeQualified(root).toString, files
+      .map(f => DataFile(f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_.path))
+  }
+
+  /** Read exactly `files` of `table` (all of them in the overload), whatever
+    * lands under its root meanwhile. The schema is the footer schema of the
+    * table's first file, as [[parquet]] reads the whole directory, so a
+    * subset reads with the table's types; partition columns are discovered
+    * under the root. An empty listing reads through [[parquet]], which
+    * raises Spark's own error for a missing or empty table; with
+    * `spark.sql.parquet.mergeSchema` on, Spark merges the files' schemas.
+    * As in any read of many paths, more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
+    * are looked up by a Spark job.
+    */
+  def read(spark: SparkSession, table: Listing, files: Seq[DataFile]): DataFrame = {
+    if (table.files.isEmpty) return parquet(spark, table.root)
+    require(files.nonEmpty, s"no file of ${table.root} to read")
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else try Some(footerSchema(spark, spark.sessionState.newHadoopConf(), status(table.files.head)))
+      catch { case NonFatal(_) => None }
+    val reader = schema.fold(spark.read)(spark.read.schema)
+    // a partition directory's files read back with its columns; a table
+    // that is one file has no directory to discover them under
+    (if (files.exists(_.path != table.root)) reader.option("basePath", table.root) else reader)
+      .parquet(files.map(_.path): _*)
+  }
+
+  def read(spark: SparkSession, table: Listing): DataFrame = read(spark, table, table.files)
+
+  /** Rows of a parquet file, summed from its footer's row groups on the
+    * driver.
+    */
+  def rowCount(spark: SparkSession, file: DataFile): Long =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(status(file), spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+
+  private def status(f: DataFile) = new FileStatus(f.length, false, 0, 0, f.mtime, new Path(f.path))
+
   /** The schema Spark would infer for `path` with schema merging off, or
     * None where [[parquet]] leaves the read to Spark.
     */
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val sqlConf = spark.sessionState.conf
     val root = new Path(path)
-    if (sqlConf.isParquetSchemaMergingEnabled || !listed(root.getName)) return None
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled || !listed(root.getName)) return None
     val hadoopConf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(hadoopConf)
     // Spark infers from a summary file if there is one, else from the
@@ -95,23 +162,29 @@ object Tables {
           children.sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
             .iterator.flatMap(firstFile).nextOption())
       }
-    try firstFile(fs.getFileStatus(root)).filterNot(f => summary(f.getPath.getName)).map { f =>
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      // the converter Spark's inference task builds (ParquetFileFormat.
-      // mergeSchemasInParallel): five settings from the session, the
-      // rest at their defaults
-      val converter = new ParquetToSparkSchemaConverter(
-        assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
-        assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
-        inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
-        nanosAsLong = sqlConf.legacyParquetNanosAsLong,
-        respectUnknownTypeAnnotation = sqlConf.parquetReaderRespectUnknownTypeAnnotation)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
-    }
+    try firstFile(fs.getFileStatus(root)).filterNot(f => summary(f.getPath.getName))
+      .map(footerSchema(spark, hadoopConf, _))
     // a missing path, an unreadable listing or footer: Spark's read
     // raises (or, with ignoreCorruptFiles, skips) it its own way
     catch { case NonFatal(_) => None }
+  }
+
+  /** The schema of one parquet file's footer, converted as Spark's
+    * inference task converts it (`ParquetFileFormat.mergeSchemasInParallel`):
+    * five settings from the session, the rest at their defaults.
+    */
+  private def footerSchema(spark: SparkSession, hadoopConf: Configuration,
+                           f: FileStatus): StructType = {
+    val sqlConf = spark.sessionState.conf
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
   }
 
   /** Names Spark's file listing keeps (`HadoopFSUtils.shouldFilterOutPathName`). */

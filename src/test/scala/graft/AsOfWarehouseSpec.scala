@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Warehouse
@@ -83,13 +85,30 @@ class AsOfWarehouseSpec extends AnyFunSuite {
 
     // recompute 1995 only, run the incremental overwrite twice (retry)
     val y1995 = fact.filter($"year" === 1995)
-    graft.etl.Warehouse.overwritePartitions(spark, y1995, out, "year")
-    graft.etl.Warehouse.overwritePartitions(spark, y1995, out, "year")
+    graft.etl.Warehouse.overwritePartitions(y1995, out, "year")
+    graft.etl.Warehouse.overwritePartitions(y1995, out, "year")
 
     val after = spark.read.parquet(out)
     assert(after.count() === beforeTotal)                       // no double-load
     assert(after.filter($"year" === 1996).count() === before1996) // untouched
     fact.unpersist()
+  }
+
+  test("overwritePartitions leaves the session's partitionOverwriteMode alone") {
+    val out = java.nio.file.Files.createTempDirectory("graft_dyn_conf").toString + "/t"
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    Seq((1995, 1L), (1996, 2L)).toDF("year", "v").write.partitionBy("year").parquet(out)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var writing = true
+    val poll = new Thread(() =>
+      while (writing) seen.add(spark.conf.getOption(key).getOrElse("<unset>")))
+    poll.start()
+    try Warehouse.overwritePartitions(Seq((1995, 3L)).toDF("year", "v"), out, "year")
+    finally { writing = false; poll.join() }
+    assert(!seen.isEmpty)
+    assert(!seen.asScala.exists(_.equalsIgnoreCase("dynamic")), seen.asScala.toSet)
+    // still a dynamic overwrite: the other year survives
+    assert(spark.read.parquet(out).as[(Long, Int)].collect().toSet === Set((3L, 1995), (2L, 1996)))
   }
 
   test("warehouse build: dims then facts, invariant cardinalities, partitioned facts") {

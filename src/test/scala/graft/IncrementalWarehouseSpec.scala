@@ -1,0 +1,226 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.time.LocalDateTime
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.etl.Warehouse
+import graft.io.Tables
+
+/** `Warehouse.buildAll` is incremental: after every night of new input
+  * files, the warehouse it updates in place must equal one built from
+  * scratch over the same inputs, table for table and count for count, and
+  * it must rewrite only what the night's files change.
+  */
+class IncrementalWarehouseSpec extends AnyFunSuite {
+  import TestSpark.{jobsStartedBy, spark, sfDir}
+  import spark.implicits._
+
+  private val inputs = Seq("customer", "supplier", "part", "orders", "lineitem")
+  private val tables = Seq("dim_customer", "dim_supplier", "dim_part", "dim_order", "dim_date",
+    "fact_daily_inventory", "fact_monthly_payment")
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** A copy of the fixtures with each table a directory, as nightly loads
+    * land them.
+    */
+  private def fixtures(): String = {
+    val in = tmp("graft_inc_in")
+    for (t <- inputs) {
+      val dir = Paths.get(in, s"$t.parquet")
+      Files.createDirectories(dir)
+      Files.copy(Paths.get(sfDir, s"$t.parquet"), dir.resolve("part-00000.parquet"))
+    }
+    in
+  }
+
+  /** Write `df` as the one file `name` of input table `t`. */
+  private def land(in: String, t: String, name: String, df: DataFrame): Unit = {
+    val out = tmp("graft_inc_night") + "/out"
+    df.coalesce(1).write.parquet(out)
+    val file = Files.list(Paths.get(out)).iterator.asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(file, Paths.get(in, s"$t.parquet", name))
+  }
+
+  private def table(in: String, t: String): DataFrame = Tables.table(spark, in, t)
+
+  /** (path, length, mtime) of a warehouse table's data files. */
+  private def files(wh: String, t: String): Set[Tables.DataFile] =
+    Tables.listing(spark, s"$wh/$t").files.toSet
+
+  /** Every file under `dir`, manifests included, with its length and mtime. */
+  private def everyFile(dir: String): Map[Path, (Long, Long)] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => p -> (Files.size(p), Files.getLastModifiedTime(p).toMillis)).toMap
+    finally s.close()
+  }
+
+  /** Build `wh` incrementally and a fresh warehouse from scratch over `in`;
+    * both must hold the same rows and report the same counts.
+    */
+  private def buildMatchesScratch(in: String, wh: String): Unit = {
+    val scratch = tmp("graft_inc_scratch")
+    assert(Warehouse.buildAll(spark, in, wh) === Warehouse.buildAll(spark, in, scratch))
+    for (t <- tables) {
+      val a = spark.read.parquet(s"$wh/$t")
+      val b = spark.read.parquet(s"$scratch/$t")
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, t)
+    }
+  }
+
+  /** Snapshot of every table's files, to tell what a build rewrote. */
+  private def state(wh: String): Map[String, Set[Tables.DataFile]] =
+    tables.map(t => t -> files(wh, t)).toMap
+
+  private def unchanged(before: Map[String, Set[Tables.DataFile]], wh: String, ts: String*): Unit =
+    ts.foreach(t => assert(files(wh, t) === before(t), s"$t was rewritten"))
+
+  private def rebuilt(before: Map[String, Set[Tables.DataFile]], wh: String, t: String): Unit =
+    assert((files(wh, t) intersect before(t)).isEmpty, s"$t kept files of the old build")
+
+  /** Files of a fact outside the given year partitions. */
+  private def outside(fs: Set[Tables.DataFile], years: Int*): Set[Tables.DataFile] =
+    fs.filterNot(f => years.exists(y => f.path.contains(s"/year=$y/")))
+
+  test("nightly loads: incremental build equals a from-scratch build after every night") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    buildMatchesScratch(in, wh)
+    val orders = table(in, "orders")
+    val lineitem = table(in, "lineitem")
+    val lineitemCols = lineitem.columns.toSeq.map(col)
+    // the base load's lineitems of `os`, moved to the order keys `os` get
+    // `shift` added
+    def linesOf(os: DataFrame, shift: Long) = lineitem
+      .join(os.select("o_orderkey"), $"l_orderkey" === $"o_orderkey")
+      .withColumn("l_orderkey", $"l_orderkey" + shift).select(lineitemCols: _*)
+
+    // night 1: orders of a year the warehouse has not seen, with lineitems
+    val first = orders.orderBy("o_orderkey").limit(5)
+    land(in, "orders", "night-01.parquet", first
+      .withColumn("o_orderkey", $"o_orderkey" + 10000000L)
+      .withColumn("o_orderdate", lit(LocalDateTime.of(2010, 3, 15, 0, 0))))
+    land(in, "lineitem", "night-01.parquet", linesOf(first, 10000000L))
+    var before = state(wh)
+    buildMatchesScratch(in, wh)
+    unchanged(before, wh, "dim_customer", "dim_supplier", "dim_part", "dim_date")
+    // the new orders land as one file beside the old ones
+    assert(before("dim_order").subsetOf(files(wh, "dim_order")))
+    assert(files(wh, "dim_order").size === before("dim_order").size + 1)
+    for (f <- Seq("fact_daily_inventory", "fact_monthly_payment")) {
+      assert(files(wh, f).exists(_.path.contains("/year=2010/")), f)
+      assert(outside(files(wh, f), 2010) === outside(before(f), 2010), f)
+    }
+
+    // night 2: rows re-sent from night 1 and from the base load
+    land(in, "orders", "night-02.parquet", table(in, "orders").orderBy("o_orderkey").limit(3)
+      .unionByName(table(in, "orders").where($"o_orderkey" >= 10000000L)))
+    land(in, "lineitem", "night-02.parquet", lineitem.orderBy("l_orderkey", "l_linenumber").limit(4))
+    buildMatchesScratch(in, wh)
+
+    // night 3: lineitems only, of an order placed in 1996
+    val in1996 = orders.where(year($"o_orderdate") === 1996).orderBy("o_orderkey").limit(1)
+      .select("o_orderkey")
+    land(in, "lineitem", "night-03.parquet", lineitem.join(in1996, $"l_orderkey" === $"o_orderkey")
+      .withColumn("l_linenumber", $"l_linenumber" + 100).select(lineitemCols: _*))
+    before = state(wh)
+    buildMatchesScratch(in, wh)
+    unchanged(before, wh, "dim_order", "fact_monthly_payment")
+    assert(outside(files(wh, "fact_daily_inventory"), 1996) ===
+      outside(before("fact_daily_inventory"), 1996))
+    assert(files(wh, "fact_daily_inventory") !== before("fact_daily_inventory"))
+
+    // night 4: orders with a null date or a null customer, with lineitems
+    val four = orders.orderBy("o_orderkey").limit(4)
+    land(in, "orders", "night-04.parquet", four
+      .withColumn("o_orderkey", $"o_orderkey" + 20000000L)
+      .withColumn("o_orderdate", when($"o_orderkey" % 2 === 0, $"o_orderdate"))
+      .withColumn("o_custkey", when($"o_orderkey" % 2 =!= 0, $"o_custkey")))
+    land(in, "lineitem", "night-04.parquet", linesOf(four, 20000000L))
+    buildMatchesScratch(in, wh)
+
+    // night 5: a customer file, with new, re-sent and null-named customers
+    val customer = table(in, "customer")
+    land(in, "customer", "night-05.parquet", customer.orderBy("c_custkey").limit(3)
+      .withColumn("c_custkey", $"c_custkey" + 1000)
+      .unionByName(customer.orderBy("c_custkey").limit(2))
+      .unionByName(customer.orderBy("c_custkey").limit(1)
+        .withColumn("c_custkey", $"c_custkey" + 2000).withColumn("c_name", lit(null).cast("string"))))
+    before = state(wh)
+    buildMatchesScratch(in, wh)
+    unchanged(before, wh, tables.filter(_ != "dim_customer"): _*)
+    assert(files(wh, "dim_customer") !== before("dim_customer"))
+
+    // night 6: an input file removed — its tables rebuild in full
+    Files.delete(Paths.get(in, "orders.parquet", "night-02.parquet"))
+    before = state(wh)
+    buildMatchesScratch(in, wh)
+    Seq("dim_order", "fact_daily_inventory", "fact_monthly_payment").foreach(rebuilt(before, wh, _))
+    unchanged(before, wh, "dim_customer", "dim_supplier", "dim_part", "dim_date")
+
+    // night 7: an input file rewritten in place — its tables rebuild in full
+    val night1 = Paths.get(in, "lineitem.parquet", "night-01.parquet")
+    val rewritten = table(in, "lineitem").where($"l_orderkey" >= 10000000L).limit(1)
+      .localCheckpoint()
+    Files.delete(night1)
+    land(in, "lineitem", "night-01.parquet", rewritten)
+    Files.setLastModifiedTime(night1, java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
+    before = state(wh)
+    buildMatchesScratch(in, wh)
+    rebuilt(before, wh, "fact_daily_inventory")
+    unchanged(before, wh, tables.filter(_ != "fact_daily_inventory"): _*)
+  }
+
+  test("a build with no new file starts no Spark job and rewrites nothing") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    val first = Warehouse.buildAll(spark, in, wh)
+    val before = everyFile(wh)
+    var again: Seq[Warehouse.BuildReport] = Nil
+    assert(jobsStartedBy { again = Warehouse.buildAll(spark, in, wh) } === 0)
+    assert(again === first)
+    assert(everyFile(wh) === before)
+  }
+
+  test("a build that fails mid-facts is followed by one equal to a from-scratch build") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    val orders = table(in, "orders")
+    land(in, "orders", "night-01.parquet", orders.orderBy("o_orderkey").limit(5)
+      .withColumn("o_orderkey", $"o_orderkey" + 10000000L))
+    val bad = Paths.get(in, "lineitem.parquet", "night-01.parquet")
+    Files.write(bad, "not a parquet file".getBytes("UTF-8"))
+    val dimOrder = files(wh, "dim_order")
+    intercept[Exception](Warehouse.buildAll(spark, in, wh))
+    // the dimensions had landed the night's orders when the facts failed
+    assert(files(wh, "dim_order").size === dimOrder.size + 1)
+    Files.delete(bad)
+    buildMatchesScratch(in, wh)
+  }
+
+  test("a lost output file or an unreadable manifest rebuilds that table") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    var before = state(wh)
+    Files.delete(Paths.get(before("dim_part").head.path.stripPrefix("file:")))
+    buildMatchesScratch(in, wh)
+    rebuilt(before, wh, "dim_part")
+    unchanged(before, wh, tables.filter(_ != "dim_part"): _*)
+
+    before = state(wh)
+    Files.write(Paths.get(wh, "_manifest", "dim_supplier.json"), "{".getBytes("UTF-8"))
+    buildMatchesScratch(in, wh)
+    rebuilt(before, wh, "dim_supplier")
+    unchanged(before, wh, tables.filter(_ != "dim_supplier"): _*)
+  }
+}

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * block, so the first one's text silently drops out of the API docs
   * and usually describes a definition that moved elsewhere. A bare
   * `.read.parquet(` starts a schema-inference job per call; library reads
-  * go through `Tables.parquet`, which reads the schema on the driver.
+  * go through `Tables.parquet`, which reads the schema on the driver. A
+  * library call that sets a session conf changes every query other
+  * threads run on that session meanwhile; writers take per-write options
+  * instead.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -68,5 +71,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"read parquet through graft.io.Tables.parquet, not spark.read.parquet:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no session-conf mutation under src/main/scala but the documented nanosAsLong default") {
+    val tables = Paths.get("src/main/scala/graft/io/Tables.scala")
+    val sites = for {
+      f <- mainSources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("conf.set(")
+      // Tables.events sets it only where the session left it unset
+      if !(f == tables && line.contains("\"spark.sql.legacy.parquet.nanosAsLong\", \"true\""))
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"library code must not set session confs:\n${sites.sorted.mkString("\n")}")
   }
 }

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, TimestampType}
@@ -17,40 +12,11 @@ import graft.io.Tables
   * raises, and start no Spark job.
   */
 class TablesSpec extends AnyFunSuite {
-  import TestSpark.{spark, sfDir}
+  import TestSpark.{jobsStartedBy, spark, sfDir}
+  import spark.implicits._
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_tables").toString
-
-  /** Jobs started while `body` runs on this thread. A sentinel job run
-    * after `body` in the same job group marks the end: listener events
-    * arrive in order, so once the sentinel is seen every job `body`
-    * started has been counted.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      body
-      sc.setJobGroup(group, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("sentinel"), "the listener never saw the sentinel job")
-      seen.asScala.count(_ != "sentinel")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def sameRead(dir: String, name: String): DataFrame = {
     val got = Tables.table(spark, dir, name)
@@ -121,5 +87,27 @@ class TablesSpec extends AnyFunSuite {
       Tables.all.foreach(Tables.table(spark, sfDir, _))
       Tables.table(spark, dir, "parted")
     } === 0)
+  }
+
+  test("Tables.read reads exactly a listing's files, a subset with the table's schema") {
+    val dir = tmpDir()
+    val t = s"$dir/t.parquet"
+    Seq((1L, 1.5)).toDF("k", "v").coalesce(1).write.parquet(s"$t/a=1")
+    val listed = Tables.listing(spark, t)
+    assert(listed.files.size === 1)
+    // a file that lands after the listing is not read
+    Seq((2L, 2.5)).toDF("k", "v").coalesce(1).write.mode("append").parquet(s"$t/a=1")
+    assert(Tables.read(spark, listed).as[(Long, Double, Int)].collect().toSeq === Seq((1L, 1.5, 1)))
+    val now = Tables.listing(spark, t)
+    assert(now.files.size === 2)
+    val added = now.files.filterNot(listed.files.toSet)
+    val sub = Tables.read(spark, now, added)
+    assert(sub.schema === Tables.parquet(spark, t).schema)
+    assert(sub.as[(Long, Double, Int)].collect().toSeq === Seq((2L, 2.5, 1)))
+    // a table that is one file, and a missing one
+    val file = now.files.head.path
+    assert(Tables.read(spark, Tables.listing(spark, file)).count() === 1)
+    assert(Tables.listing(spark, s"$dir/none.parquet").files.isEmpty)
+    assert(jobsStartedBy(Tables.read(spark, now)) === 0)
   }
 }
