@@ -189,7 +189,7 @@ object SparkEntry {
     * the full corpus per execution (dedup_minhash, dedup_clusters,
     * dedup_clusters_star, dedup_survivors, dedup_best_survivors,
     * dedup_eval — round-14 optimization). Each query still pays its own
-    * band explode + self-join + pair dedup + estimate + threshold (and
+    * band explode + self-join + estimate + threshold (and
     * its cluster contraction / survivor pick / eval joins) per
     * invocation, so no query RESULT is memoized. Accurate-stats
     * checkpoint: the relation feeds self-joins downstream.

@@ -12,6 +12,8 @@ import graft.text.TextOps
   *
   *  1. exact        — content-hash group-by (one shuffle of 32-byte keys)
   *  2. minhash LSH  — shingle → minhash signature → banded bucket join
+  *                     (each candidate pair emitted once, from the first
+  *                     band it shares — no pair-dedup aggregate)
   *  3. simhash      — 64-bit bitwise sketch → chunk-banded hamming join
   *  4. n-gram Jaccard — inverted-index pair join with exact similarity
   *
@@ -111,15 +113,42 @@ object Dedup {
                        carry: Seq[String] = Nil): DataFrame = {
     require(numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
       "bands must be positive and divide a positive numHashes")
-    val r = numHashes / bands
     val keep = carry.map(col)
     sigs.select(col("doc_id") +: col("signature") +:
       explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"), xxhash64(slice(col("signature"), b * r + 1, r)).as("bh"))
+        struct(lit(b).as("band"), bandHash(col("signature"), b, numHashes / bands).as("bh"))
       }: _*)).as("bb") +: keep: _*)
       .select(col("doc_id") +: col("signature") +:
         col("bb.band").as("band") +: col("bb.bh").as("bh") +: keep: _*)
   }
+
+  /** Hash of band `b` (rows `b*r+1 .. b*r+r`) of a signature: the `bh` of
+    * [[bandRows]].
+    */
+  private def bandHash(sig: Column, b: Int, r: Int): Column =
+    xxhash64(slice(sig, b * r + 1, r))
+
+  /** The least band whose [[bandHash]] agrees between two signatures (null
+    * when none does). A bucket join that keeps only the row whose `band`
+    * equals it emits each candidate pair once — from the first band it
+    * shares — with no aggregate to drop the repeats. It compares the band
+    * HASHES, not the slices, so a 64-bit hash collision makes a pair a
+    * candidate at exactly the band where the bucket join matches it.
+    */
+  private def firstSharedBand(sigA: Column, sigB: Column, numHashes: Int,
+                              bands: Int): Column = {
+    val r = numHashes / bands
+    coalesce((0 until bands).map { b =>
+      when(bandHash(sigA, b, r) === bandHash(sigB, b, r), lit(b))
+    }: _*)
+  }
+
+  /** `threshold` is a Jaccard estimate: outside [0, 1] (or NaN) it would
+    * keep every candidate or none, silently.
+    */
+  private def requireThreshold(threshold: Double): Unit =
+    require(threshold >= 0.0 && threshold <= 1.0,
+      s"threshold must be in [0, 1], got $threshold")
 
   /** Fraction of agreeing signature positions — the unbiased minhash
     * Jaccard estimate both LSH variants verify candidates with.
@@ -139,18 +168,25 @@ object Dedup {
     * (doc_a, doc_b, est_jaccard) with est_jaccard ≥ threshold, doc_a < doc_b.
     * For exact similarities on the survivors, compose with [[ngramJaccard]].
     *
+    * Each pair is emitted once: the band join keeps a candidate only at
+    * the first band the two signatures share ([[firstSharedBand]]), so no
+    * aggregate drops repeats and the only shuffle is the band join's.
+    * `doc_id` is the documents' key: a repeated doc_id yields one pair row
+    * per combination of its rows (nothing collapses them).
+    *
     * `sigsPre` (round-14 optimization): a prebuilt [[minhashSignatures]]
     * relation for EXACTLY this (documents, shingleN, numHashes) — the
     * threshold/band-independent prefix a session running several dedup
     * analyses over ONE corpus builds once (six chunk-co-resident queries
     * each re-hashed the full corpus per execution). The caller owns the
     * relation's params and lifetime; everything from the band explode on
-    * (self-join, pair dedup, estimate, threshold) still runs per
-    * invocation, so no query RESULT is memoized.
+    * (self-join, estimate, threshold) still runs per invocation, so no
+    * query RESULT is memoized.
     */
   def minhashDedup(documents: DataFrame, shingleN: Int = 3, numHashes: Int = 32,
                    bands: Int = 8, threshold: Double = 0.5,
                    sigsPre: Option[DataFrame] = None): DataFrame = {
+    requireThreshold(threshold)
     val sigs = sigsPre.getOrElse(minhashSignatures(documents, shingleN, numHashes))
 
     // persisted, NOT eagerly materialized: both sides of the band
@@ -166,12 +202,12 @@ object Dedup {
     banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
+          col("a.doc_id") < col("b.doc_id") &&
+          col("a.band") === firstSharedBand(col("a.signature"), col("b.signature"),
+            numHashes, bands))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.signature").as("sig_a"), col("b.signature").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        sigAgreement(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
+        sigAgreement(col("a.signature"), col("b.signature"), numHashes)
+          .as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 
@@ -199,20 +235,26 @@ object Dedup {
     * incoming documents are near-dups of something already ingested (the
     * keep/drop decision is the caller's — typically drop batch_doc).
     * Batch-internal duplicates are [[minhashDedup]] on the batch alone.
+    *
+    * Each (batch_doc, corpus_doc) pair is emitted once, from the first
+    * band the two share ([[firstSharedBand]]) — no pair-dedup aggregate.
+    * `doc_id` is the key of both inputs: a repeated doc_id yields one pair
+    * row per combination of its rows (nothing collapses them).
     */
   def incrementalNearDup(corpus: DataFrame, batch: DataFrame,
                          shingleN: Int = 3, numHashes: Int = 32,
                          bands: Int = 8, threshold: Double = 0.5): DataFrame = {
+    requireThreshold(threshold)
     val idx = minhashIndex(corpus, shingleN, numHashes, bands)
     val probe = minhashIndex(batch, shingleN, numHashes, bands)
     probe.as("n")
       .join(idx.as("c"),
-        col("n.band") === col("c.band") && col("n.bh") === col("c.bh"))
+        col("n.band") === col("c.band") && col("n.bh") === col("c.bh") &&
+          col("n.band") === firstSharedBand(col("n.signature"), col("c.signature"),
+            numHashes, bands))
       .select(col("n.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"),
-        col("n.signature").as("sig_n"), col("c.signature").as("sig_c"))
-      .dropDuplicates("batch_doc", "corpus_doc")
-      .select(col("batch_doc"), col("corpus_doc"),
-        sigAgreement(col("sig_n"), col("sig_c"), numHashes).as("est_jaccard"))
+        sigAgreement(col("n.signature"), col("c.signature"), numHashes)
+          .as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 

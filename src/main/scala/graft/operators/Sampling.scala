@@ -162,6 +162,7 @@ object Sampling {
     */
   def hashSamplePerGroup(df: DataFrame, groupCol: String, idCol: String,
                          k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
     val w = Window.partitionBy(groupCol)
       .orderBy(md5(col(idCol).cast("string")), col(idCol))
     df.withColumn("rn", row_number().over(w))

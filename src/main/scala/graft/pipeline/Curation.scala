@@ -11,7 +11,9 @@ import graft.text.TextOps
   * individual operators exist for, in the canonical order —
   *
   *   1. quality filter   (cheap, no shuffle — shrink first)
-  *   2. exact dedup      (hash group-by — removes the bulk)
+  *   2. exact dedup      (one hash group-by of the text digest, then a
+  *                        semi-join keeps each digest's min doc_id — the
+  *                        scored batch is never joined with itself)
   *   3. near-dup removal (MinHash-LSH pairs → drop the higher doc_id of
   *                        each surviving pair)
   *   4. per-source deterministic sampling (reproducible splits)
@@ -29,7 +31,11 @@ object Curation {
 
   /** The quality-gate + exact-dedup PREFIX of [[curate]] (steps 1-2, no
     * optional gates): (doc_id, text, source, n_chars, quality_score) for
-    * the exact-dedup survivors. Factored out (round-13 optimization) so
+    * the exact-dedup survivors. The score is one projection
+    * ([[graft.text.TextOps.qualityScore]]) filtered in place; the exact
+    * dedup is one aggregation of the text digest ([[Dedup.exactDedup]])
+    * semi-joined back on `doc_id`, the documents' key. A null doc_id never
+    * survives. Factored out (round-13 optimization) so
     * a session running several curation composites over ONE corpus
     * (pipeline_curate and pipeline_corpus_prep share this full-corpus
     * scan + score + hash-dedup) builds it once and passes it via
@@ -40,12 +46,12 @@ object Curation {
     */
   def exactDedupedQuality(documents: DataFrame,
                           minQuality: Double = 0.2): DataFrame = {
-    val scored = TextOps.quality(documents)
+    val quality = documents
+      .filter(col("doc_id").isNotNull)
+      .withColumn("quality_score", TextOps.qualityScore(col("text"), col("n_chars")))
       .filter(col("quality_score") >= minQuality)
-      .select("doc_id", "quality_score")
-    val quality = documents.join(scored, "doc_id")
     val keepExact = Dedup.exactDedup(quality).select("doc_id")
-    quality.join(keepExact, "doc_id")
+    quality.join(keepExact, Seq("doc_id"), "left_semi")
   }
 
   /** Returns the curated corpus:
@@ -65,6 +71,11 @@ object Curation {
              exactPre: Option[DataFrame] = None): DataFrame = {
     require(exactPre.isEmpty || (langAllow.isEmpty && !repetitionGate),
       "exactPre is built without the optional gates; pass gates OR exactPre")
+    require(samplePerSource >= 1, s"samplePerSource must be >= 1, got $samplePerSource")
+    require(minQuality >= 0.0 && minQuality <= 1.0,
+      s"minQuality must be in [0, 1], got $minQuality")
+    require(nearDupThreshold >= 0.0 && nearDupThreshold <= 1.0,
+      s"nearDupThreshold must be in [0, 1], got $nearDupThreshold")
     // 0a. optional repetition gate (Gopher thresholds) — like the language
     // gate, a cheap projection+filter that belongs in the shrink-first
     // prefix; default-off is the oracle-checked configuration
@@ -84,8 +95,8 @@ object Curation {
 
     // 1-2. quality gate + exact dedup (the shared prefix; see
     // exactDedupedQuality). When self-built: persisted, because the
-    // minhash band self-join + anti-join below reference this relation
-    // ~5×, and each reference would otherwise re-derive the whole
+    // minhash signatures and the anti-join below reference this relation
+    // twice, and each reference would otherwise re-derive the whole
     // quality+dedup lineage (at cluster scale: a stage-boundary write;
     // locally: MEMORY_AND_DISK). Caller may clearCache() after. An
     // injected exactPre is already materialized by its owner.
@@ -93,9 +104,10 @@ object Curation {
       exactDedupedQuality(base, minQuality)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-    // 3. near-dup removal: minhash pairs vote out the larger doc_id
+    // 3. near-dup removal: minhash pairs vote out the larger doc_id (the
+    // anti-join ignores a loser's repeats, so no distinct)
     val losers = Dedup.minhashDedup(exact, threshold = nearDupThreshold)
-      .select(col("doc_b").as("doc_id")).distinct()
+      .select(col("doc_b").as("doc_id"))
     val nearDeduped = exact.join(losers, Seq("doc_id"), "left_anti")
 
     // 4. reproducible per-source cap

@@ -63,19 +63,32 @@ object TextOps {
       col("doc_id"),
       col("n_chars"),
       size(toks).as("n_tokens"),
-      (length(col("text")) - length(regexp_replace(col("text"), PunctClass, "")))
-        .as("n_punct"),
+      punctCount(col("text")).as("n_punct"),
       size(filter(toks, t => array_contains(stopArr, t))).as("n_stopwords"))
-      .withColumn("punct_ratio",
-        when(col("n_chars") > 0, col("n_punct").cast("double") / col("n_chars"))
-          .otherwise(lit(0.0)))
+      .withColumn("punct_ratio", punctRatio(col("n_punct"), col("n_chars")))
       .withColumn("stopword_ratio",
         when(col("n_tokens") > 0, col("n_stopwords").cast("double") / col("n_tokens"))
           .otherwise(lit(0.0)))
-      .withColumn("quality_score",
-        least(col("n_tokens").cast("double") / 100.0, lit(1.0))
-          * (lit(1.0) - col("punct_ratio")))
+      .withColumn("quality_score", score(col("n_tokens"), col("punct_ratio")))
   }
+
+  /** The composite `quality_score` of [[quality]] as one expression over a
+    * document's text and character count — for a caller that filters on
+    * the score without the other ratios (curation's quality gate).
+    * Bit-identical to [[quality]]'s column: both are built from the same
+    * three pieces below.
+    */
+  def qualityScore(text: Column, nChars: Column): Column =
+    score(size(tokens(text)), punctRatio(punctCount(text), nChars))
+
+  private def punctCount(text: Column): Column =
+    length(text) - length(regexp_replace(text, PunctClass, ""))
+
+  private def punctRatio(nPunct: Column, nChars: Column): Column =
+    when(nChars > 0, nPunct.cast("double") / nChars).otherwise(lit(0.0))
+
+  private def score(nTokens: Column, punctRatio: Column): Column =
+    least(nTokens.cast("double") / 100.0, lit(1.0)) * (lit(1.0) - punctRatio)
 
   /** Filter-cascade attrition audit: run the ordered quality cascade
     * (length → token count → punctuation → stopwords) and report, per

@@ -1,13 +1,60 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+import org.apache.spark.sql.functions.{col, length}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.dedup.Dedup
 import graft.io.Tables
 import graft.pipeline.Curation
+import graft.text.TextOps
 
 class CurationSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
+
+  /** The quality + exact-dedup prefix as it was composed with two
+    * self-joins on doc_id: documents ⋈ their scores, then ⋈ the exact
+    * survivors — the reference the single-filter prefix must equal.
+    */
+  private def selfJoinPrefix(documents: DataFrame, minQuality: Double = 0.2): DataFrame = {
+    val scored = TextOps.quality(documents)
+      .filter(col("quality_score") >= minQuality)
+      .select("doc_id", "quality_score")
+    val quality = documents.join(scored, "doc_id")
+    val keepExact = Dedup.exactDedup(quality).select("doc_id")
+    quality.join(keepExact, "doc_id")
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.columns.toSeq == b.columns.toSeq && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** 20 plain words, no punctuation: quality_score = 20/100 = 0.2 exactly. */
+  private val atThreshold = ('a' to 't').map(c => s"w$c").mkString(" ")
+
+  /** A null doc_id, a null text, an exact-duplicate triple and a document
+    * scoring exactly the default minQuality, next to ordinary prose.
+    */
+  private def edgeFixture: DataFrame = {
+    val prose = "the data pipeline reads parquet files and aggregates daily " +
+      "metrics for every customer region then writes results back to storage " +
+      "with a clean schema and stable partitioning for downstream consumers"
+    val other = "completely different content about cooking pasta with tomato " +
+      "sauce and fresh basil leaves in a large copper pot on a warm evening"
+    Seq[(Option[Long], Option[String], String)](
+      (None, Some(other + " again"), "srcA"),          // null doc_id
+      (Some(2L), None, "srcA"),                        // null text
+      (Some(3L), Some(prose), "srcA"),                 // exact-duplicate triple
+      (Some(4L), Some(prose), "srcB"),
+      (Some(5L), Some(prose), "srcA"),
+      (Some(6L), Some(atThreshold), "srcB"),           // scores exactly 0.2
+      (Some(7L), Some(other), "srcB"),
+      (Some(8L), Some("a b"), "srcA")                  // below minQuality
+    ).toDF("doc_id", "text", "source")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+  }
 
   test("curate: planted junk, exact dupes, and near-dupes are all removed") {
     val base = "the data pipeline reads parquet files and aggregates daily " +
@@ -111,6 +158,49 @@ class CurationSpec extends AnyFunSuite {
     val expected = graft.pipeline.Curation.curate(pre)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(gated.nonEmpty && gated === expected)
+    spark.catalog.clearCache()
+  }
+
+  test("quality + exact-dedup prefix equals the self-join composition; curate agrees on both") {
+    val fixture = edgeFixture
+    assert(TextOps.quality(fixture).filter(col("doc_id") === 6L)
+      .select("quality_score").as[Double].head() === 0.2)
+    for (docs <- Seq(Tables.documents(spark, sfDir), fixture)) {
+      val prefix = Curation.exactDedupedQuality(docs)
+      assert(sameRows(prefix, selfJoinPrefix(docs)))
+      val viaSelfJoins = Curation.curate(docs, exactPre = Some(selfJoinPrefix(docs)))
+      val viaPrefix = Curation.curate(docs, exactPre = Some(prefix))
+      assert(sameRows(viaPrefix, viaSelfJoins))
+      assert(sameRows(Curation.curate(docs), viaSelfJoins))
+      spark.catalog.clearCache()
+    }
+    // on the fixture: no null key, one copy of the triple, the document
+    // at exactly minQuality kept — and the null text kept too: its token
+    // count is null, which least() skips, so it scores 1.0 on both paths
+    assert(TextOps.quality(fixture).filter(col("doc_id") === 2L)
+      .select("quality_score").as[Double].head() === 1.0)
+    assert(Curation.exactDedupedQuality(fixture).select("doc_id").as[Long]
+      .collect().toSet === Set(2L, 3L, 6L, 7L))
+  }
+
+  test("curate rejects out-of-range parameters up front") {
+    val docs = Tables.documents(spark, sfDir)
+    assertThrows[IllegalArgumentException](Curation.curate(docs, samplePerSource = 0))
+    for (bad <- Seq(-0.1, 1.5, Double.NaN)) {
+      assertThrows[IllegalArgumentException](Curation.curate(docs, minQuality = bad))
+      assertThrows[IllegalArgumentException](Curation.curate(docs, nearDupThreshold = bad))
+    }
+  }
+
+  test("curate plans one aggregation (the digest's) and no sort aggregate") {
+    val out = Curation.curate(Tables.documents(spark, sfDir))
+    out.collect()
+    val aggs = TestSpark.aggregateNodes(out.queryExecution.executedPlan)
+    assert(aggs.forall(_.isInstanceOf[HashAggregateExec]), aggs.map(_.nodeName))
+    assert(aggs.flatMap(_.aggregateExpressions.map(_.mode)).toSet === Set(Partial, Final),
+      aggs.mkString("\n"))
+    assert(aggs.size === 2 && aggs.forall(_.aggregateExpressions
+      .exists(_.aggregateFunction.prettyName == "min")), aggs.mkString("\n"))
     spark.catalog.clearCache()
   }
 }

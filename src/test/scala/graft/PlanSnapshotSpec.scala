@@ -34,8 +34,11 @@ class PlanSnapshotSpec extends AnyFunSuite {
   private val sfDir = TestSpark.sfDir
   private val snapPath = "src/test/resources/plan_snapshots.txt"
 
-  /** The heaviest queries by BENCH_r09 suite seconds — the set whose
-    * plans are worth pinning (together ~40% of total bench time).
+  /** The pinned queries: the 20 heaviest by the suite seconds of the
+    * retired per-query timing harness (BENCH_r09), plus the two that the
+    * `corpus_ingest` benchmark runs — `pipeline_curate` (`Curation.curate`,
+    * otherwise pinned only inside `pipeline_corpus_prep`) and
+    * `dedup_incremental` (`Dedup.incrementalNearDup`, otherwise unpinned).
     */
   private val pinned = Seq(
     "q_link_pred", "q_ktruss_converged", "q_ktruss", "embed_dbscan",
@@ -43,7 +46,8 @@ class PlanSnapshotSpec extends AnyFunSuite {
     "q_hyperball_closeness", "q_modularity", "q_cf_eval", "q_salted_join",
     "q_random_walks", "dedup_cosine_pairs", "q_clustering_coef",
     "pipeline_corpus_prep", "q_label_prop", "q_poisson_bootstrap",
-    "ann_topk_ivfpq", "text_nb_eval", "text_unigram_train")
+    "ann_topk_ivfpq", "text_nb_eval", "text_unigram_train",
+    "pipeline_curate", "dedup_incremental")
 
   // dedicated child session: AQE off for static-plan determinism,
   // without flipping the shared TestSpark session's conf under

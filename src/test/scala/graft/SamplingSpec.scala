@@ -22,6 +22,11 @@ class SamplingSpec extends AnyFunSuite {
     assert(perGroup.keySet.size === 10) // labels 0..9 all present
   }
 
+  test("hashSamplePerGroup rejects k < 1") {
+    val emb = Tables.embeddings(spark, sfDir)
+    assertThrows[IllegalArgumentException](Sampling.hashSamplePerGroup(emb, "label", "vec_id", 0))
+  }
+
   test("BottomKSample aggregator: uniform deterministic k-sample per group") {
     val agg = new Sampling.BottomKSample(5).toColumn
     val ds = Tables.embeddings(spark, sfDir)

@@ -6,6 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** One shared local SparkSession for the whole test JVM (sbt forks one). */
 object TestSpark {
@@ -54,4 +59,27 @@ object TestSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Every node of an executed plan, each once: through AQE stages and
+    * into each in-memory relation's cached plan (a relation scanned twice
+    * is walked once). A reused exchange is a leaf — the subtree it reuses
+    * is counted where it first appears.
+    */
+  def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val walked = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case m: InMemoryTableScanExec =>
+        m +: (if (walked.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan) else Nil)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(plan)
+  }
+
+  /** The aggregate operators (hash, sort or object-hash) of an executed plan. */
+  def aggregateNodes(plan: SparkPlan): Seq[BaseAggregateExec] =
+    planNodes(plan).collect { case a: BaseAggregateExec => a }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
@@ -103,6 +104,90 @@ class TextDedupSpec extends AnyFunSuite {
       .select("est_jaccard").as[Double].head()
     // 32 hashes → σ = sqrt(J(1-J)/32) ≈ 0.08; allow 2.5σ
     assert(math.abs(est - trueJ) <= 0.2, s"est $est vs true $trueJ")
+  }
+
+  /** Pair relations as the band joins produced them with a pair-dedup
+    * aggregate: every shared band emits the pair and `dropDuplicates`
+    * keeps one row of each — the reference the first-shared-band joins
+    * must equal.
+    */
+  private def dropDupPairs(left: DataFrame, right: DataFrame, ordered: Boolean,
+                           threshold: Double): DataFrame = {
+    val (l, r) = (Dedup.minhashIndex(left).as("l"), Dedup.minhashIndex(right).as("r"))
+    val on = $"l.band" === $"r.band" && $"l.bh" === $"r.bh"
+    l.join(r, if (ordered) on && $"l.doc_id" < $"r.doc_id" else on)
+      .select($"l.doc_id".as("x"), $"r.doc_id".as("y"),
+        $"l.signature".as("sig_x"), $"r.signature".as("sig_y"))
+      .dropDuplicates("x", "y")
+      .select($"x", $"y", Dedup.sigAgreement($"sig_x", $"sig_y", 32).as("est_jaccard"))
+      .filter($"est_jaccard" >= threshold)
+  }
+
+  private def pairRows(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.as[(Long, Long, Double)].collect().toSeq.sorted
+
+  /** Bands whose hashes two documents share. */
+  private def sharedBands(fixture: DataFrame, a: Long, b: Long): Set[Int] = {
+    val bh = Dedup.minhashIndex(fixture).select("doc_id", "band", "bh")
+      .as[(Long, Int, Long)].collect()
+    def of(d: Long) = bh.filter(_._1 == d).map(r => r._2 -> r._3).toSet
+    (of(a) intersect of(b)).map(_._1)
+  }
+
+  test("LSH pairs: each pair once, equal to a dropDuplicates reference") {
+    val base = "the data pipeline reads parquet files and aggregates daily " +
+      "metrics for every customer region then writes results back to storage"
+    val fixture = docs(
+      1L -> base,
+      2L -> base,                                   // shares all 8 bands with 1
+      3L -> "delta golf kilo oscar",
+      4L -> "delta golf kilo alphax",               // shares only band 7 with 3
+      5L -> base.replace("daily", "weekly"),
+      6L -> base.replace("metrics", "numbers"),
+      7L -> "unrelated text about cooking pasta with tomato sauce and basil")
+    assert(sharedBands(fixture, 1L, 2L) === (0 until 8).toSet)
+    assert(sharedBands(fixture, 3L, 4L) === Set(7))
+    val sf = Tables.documents(spark, sfDir)
+    for ((docs, t) <- Seq(fixture -> 0.0, sf -> 0.0, sf -> 0.5)) {
+      val got = pairRows(Dedup.minhashDedup(docs, threshold = t))
+      assert(got === pairRows(dropDupPairs(docs, docs, ordered = true, t)))
+      assert(got.map(p => (p._1, p._2)).distinct.size === got.size)
+      val (batch, corpus) =
+        if (docs eq fixture) (docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1))
+        else (docs.filter($"doc_id" % 5 === 0), docs.filter($"doc_id" % 5 =!= 0))
+      val inc = pairRows(Dedup.incrementalNearDup(corpus, batch, threshold = t))
+      assert(inc === pairRows(dropDupPairs(batch, corpus, ordered = false, t)))
+      assert(inc.map(p => (p._1, p._2)).distinct.size === inc.size)
+      if (docs eq fixture) {
+        assert(got.map(p => (p._1, p._2)).toSet.subsetOf(
+          Set((1L, 2L), (3L, 4L), (1L, 5L), (1L, 6L), (2L, 5L), (2L, 6L), (5L, 6L))))
+        assert(got.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 1.0))
+        assert(got.exists(p => p._1 == 3L && p._2 == 4L))
+        assert(inc.exists(p => p._1 == 2L && p._2 == 1L && p._3 == 1.0))
+        assert(inc.exists(p => p._1 == 4L && p._2 == 3L))
+      }
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("LSH pair joins plan no aggregate") {
+    val sf = Tables.documents(spark, sfDir)
+    for (pairs <- Seq(Dedup.minhashDedup(sf),
+        Dedup.incrementalNearDup(sf.filter($"doc_id" % 5 =!= 0), sf.filter($"doc_id" % 5 === 0)))) {
+      pairs.collect()
+      val aggs = TestSpark.aggregateNodes(pairs.queryExecution.executedPlan)
+      assert(aggs.isEmpty, aggs.map(_.nodeName))
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("minhashDedup and incrementalNearDup reject a threshold outside [0, 1]") {
+    val fixture = docs(1L -> "alpha beta gamma", 2L -> "delta epsilon zeta")
+    for (bad <- Seq(-0.1, 1.5, Double.NaN)) {
+      assertThrows[IllegalArgumentException](Dedup.minhashDedup(fixture, threshold = bad))
+      assertThrows[IllegalArgumentException](
+        Dedup.incrementalNearDup(fixture, fixture, threshold = bad))
+    }
   }
 
   test("minhash rejects shingleN < 1: every shingle would be the empty string") {
