@@ -59,6 +59,7 @@ object Breadth {
     * runs before the join so only K rows join to the dim.
     */
   def topCustomers(orders: DataFrame, customer: DataFrame, k: Int = 10): DataFrame = {
+    require(k >= 1, "k must be at least 1")
     val spend = orders.groupBy("o_custkey")
       .agg(sum(dec("o_totalprice")).cast("double").as("total_spend"))
       .orderBy(desc("total_spend"), asc("o_custkey"))

@@ -197,32 +197,27 @@ object Breadth2 {
       lead(col("o_orderdate"), 1).over(w).as("next_date"))
   }
 
-  /** Time-series gap fill + forward fill: the sparse per-day item count
-    * for one supplier, left-joined onto a complete date spine
-    * (`sequence` + `explode` — generated distributedly, not on the
-    * driver) and forward-filled with an IGNORE NULLS last() window.
-    * The single-partition window is bounded by the calendar, not the
-    * data volume.
+  /** Time-series gap fill + forward fill: one supplier's per-day item
+    * count on every day from its first to its last data day, null on gap
+    * days (`n_items`) and carried forward (`n_items_filled`). Each data
+    * day starts a run that ends the day before the next one, and an
+    * IGNORE NULLS last() over a gap-filled spine is, on every day of a
+    * run, the count of the day that starts it: so one query explodes the
+    * runs, with no spine, no join and nothing cached. The single-partition
+    * `lead` window holds one row per data day (calendar-bounded).
     */
   def gapFillDaily(lineitem: DataFrame, orders: DataFrame, suppkey: Long = 1L): DataFrame = {
-    // persisted: both the spine-bounds agg and the left join consume
-    // `daily`; without the cache the lineitem⋈orders aggregation runs
-    // TWICE (visible as two BroadcastHashJoins in the plan). Post-agg
-    // it is ≤ #days rows, so the cache is tiny at any input scale.
-    // Cache contract as in dedup/Curation: callers that care should
-    // clearCache() after consuming the result (Verify does).
-    val daily = graft.Caching.materialize(
-      lineitem.filter(col("l_suppkey") === suppkey)
-        .join(orders, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(to_date(col("o_orderdate")).as("d"))
-        .agg(count(lit(1)).as("n")))
-    val spine = daily.agg(min("d").as("lo"), max("d").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("d"))
-    val w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(daily, Seq("d"), "left")
-      .select(col("d").as("order_day"),
-        col("n").as("n_items"),
-        last("n", ignoreNulls = true).over(w).as("n_items_filled"))
+    lineitem.filter(col("l_suppkey") === suppkey)
+      .join(orders, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(to_date(col("o_orderdate")).as("d"))
+      .agg(count(lit(1)).as("n"))
+      .where(col("d").isNotNull)
+      .select(col("d"), col("n"), lead("d", 1).over(Window.orderBy("d")).as("next"))
+      .select(col("d"), col("n"),
+        explode(sequence(col("d"), coalesce(date_sub(col("next"), 1), col("d")))).as("order_day"))
+      .select(col("order_day"),
+        when(col("order_day") === col("d"), col("n")).as("n_items"),
+        col("n").as("n_items_filled"))
   }
 
   /** Distinct aggregation: SUM(DISTINCT) + COUNT(DISTINCT) per year —

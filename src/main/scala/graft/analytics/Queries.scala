@@ -41,6 +41,7 @@ object Queries {
     */
   def q2TopParts(lineitem: DataFrame, orders: DataFrame, part: DataFrame,
                  k: Int = 10): DataFrame = {
+    require(k >= 1, "k must be at least 1")
     val fact = Facts.factDailyInventory(lineitem, orders)
     fact
       .join(part.select("p_partkey", "p_name"),

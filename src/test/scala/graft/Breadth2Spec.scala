@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -200,6 +202,92 @@ class Breadth2Spec extends AnyFunSuite {
       if (!r.isNullAt(1)) lastSeen = r.getLong(1)
       assert(r.getLong(2) == lastSeen)
     }
+  }
+
+  /** The gap fill as composed before the run-start rewrite: a cached
+    * daily aggregate, a min..max date spine, a left join and an IGNORE
+    * NULLS last() window. Returns the result and the cache to release.
+    */
+  private def spineGapFill(lineitem: DataFrame, orders: DataFrame,
+                           suppkey: Long): (DataFrame, DataFrame) = {
+    val daily = graft.Caching.materialize(
+      lineitem.filter(col("l_suppkey") === suppkey)
+        .join(orders, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(to_date(col("o_orderdate")).as("d"))
+        .agg(count(lit(1)).as("n")))
+    val spine = daily.agg(min("d").as("lo"), max("d").as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("d"))
+    val w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val out = spine.join(daily, Seq("d"), "left")
+      .select(col("d").as("order_day"), col("n").as("n_items"),
+        last("n", ignoreNulls = true).over(w).as("n_items_filled"))
+    (out, daily)
+  }
+
+  private def gapFillRows(df: DataFrame): Seq[(String, Option[Long], Option[Long])] =
+    df.collect().toSeq.map { r =>
+      (r.getDate(0).toString, Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Long]))
+    }.sortBy(_._1)
+
+  /** Asserts the two compositions agree for one supplier; returns the rows. */
+  private def assertSameAsSpine(lineitem: DataFrame, orders: DataFrame,
+                                suppkey: Long): Seq[(String, Option[Long], Option[Long])] = {
+    val (want, daily) = spineGapFill(lineitem, orders, suppkey)
+    val got = Breadth2.gapFillDaily(lineitem, orders, suppkey)
+    try {
+      assert(got.dtypes.toSeq === want.dtypes.toSeq)
+      val rows = gapFillRows(got)
+      assert(rows === gapFillRows(want), s"suppkey $suppkey")
+      rows
+    } finally daily.unpersist(blocking = true)
+  }
+
+  test("gapFillDaily equals the spine + left join + last(ignoreNulls) composition on sf0.001") {
+    val li = Tables.lineitem(spark, dir)
+    val ord = Tables.orders(spark, dir)
+    val suppliers = li.select("l_suppkey").distinct().collect().map(_.getLong(0)).sorted
+    assert(suppliers.nonEmpty)
+    val filled = suppliers.map(s => assertSameAsSpine(li, ord, s))
+    assert(filled.forall(_.nonEmpty))
+    assert(filled.exists(_.exists(_._2.isEmpty)), "no supplier has a gap day")
+    assert(assertSameAsSpine(li, ord, suppliers.max + 1).isEmpty)
+  }
+
+  test("gapFillDaily equals the spine composition on gaps, adjacent days, one day and nulls") {
+    import spark.implicits._
+    // supplier 1: 01-01 ×3 (two orders), adjacent 01-02, gap 01-03..01-04,
+    //   01-05, adjacent 01-06 ×3; plus an order with a null date and a
+    //   lineitem with no order; supplier 2: one day; supplier 3: only the
+    //   null-date order; supplier 4: only the orphan lineitem
+    val orders = Seq[(Long, Option[String])](
+      (1L, Some("2024-01-01 09:00:00")), (2L, Some("2024-01-01 18:00:00")),
+      (3L, Some("2024-01-02 00:00:00")), (4L, Some("2024-01-05 12:00:00")),
+      (5L, Some("2024-01-06 23:59:59")), (6L, None), (7L, Some("2024-03-10 08:00:00")))
+      .toDF("o_orderkey", "d")
+      .select(col("o_orderkey"), to_timestamp(col("d")).as("o_orderdate"))
+    val lineitem = Seq(
+      (1L, 1L), (1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (5L, 1L), (5L, 1L),
+      (6L, 1L), (99L, 1L), (7L, 2L), (7L, 2L), (6L, 3L), (99L, 4L))
+      .toDF("l_orderkey", "l_suppkey")
+    assert(assertSameAsSpine(lineitem, orders, 1L) === Seq(
+      ("2024-01-01", Some(3L), Some(3L)), ("2024-01-02", Some(1L), Some(1L)),
+      ("2024-01-03", None, Some(1L)), ("2024-01-04", None, Some(1L)),
+      ("2024-01-05", Some(1L), Some(1L)), ("2024-01-06", Some(3L), Some(3L))))
+    assert(assertSameAsSpine(lineitem, orders, 2L) === Seq(("2024-03-10", Some(2L), Some(2L))))
+    Seq(3L, 4L, 5L).foreach(s => assert(assertSameAsSpine(lineitem, orders, s).isEmpty))
+  }
+
+  test("gapFillDaily collects in one SQL execution, half the jobs, and caches nothing") {
+    spark.catalog.clearCache()
+    val li = Tables.lineitem(spark, dir)
+    val ord = Tables.orders(spark, dir)
+    val starts = TestSpark.startedBy(Breadth2.gapFillDaily(li, ord).collect())
+    // the cached-aggregate + spine + join composition ran 2 executions
+    // and 8 jobs here; this query starts 4
+    assert(starts.sqlExecutions === 1, s"$starts")
+    assert(starts.jobs <= 8 / 2, s"$starts")
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("distinctAgg matches a dedup-then-sum formulation") {

@@ -28,6 +28,12 @@ class BreadthSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$plan")
   }
 
+  test("topCustomers rejects k < 1 up front") {
+    val (ord, cust) = (Tables.orders(spark, sfDir), Tables.customer(spark, sfDir))
+    for (k <- Seq(0, -1))
+      assertThrows[IllegalArgumentException](Breadth.topCustomers(ord, cust, k))
+  }
+
   test("window top parts: at most 3 per supplier, rank starts at 1") {
     val got = Breadth.windowTopParts(Tables.lineitem(spark, sfDir)).cache()
     val maxPerSupp = got.groupBy("l_suppkey").count()

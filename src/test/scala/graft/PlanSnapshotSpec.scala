@@ -38,7 +38,8 @@ class PlanSnapshotSpec extends AnyFunSuite {
     * retired per-query timing harness (BENCH_r09), plus the two that the
     * `corpus_ingest` benchmark runs — `pipeline_curate` (`Curation.curate`,
     * otherwise pinned only inside `pipeline_corpus_prep`) and
-    * `dedup_incremental` (`Dedup.incrementalNearDup`, otherwise unpinned).
+    * `dedup_incremental` (`Dedup.incrementalNearDup`, otherwise unpinned) —
+    * and the seven panels the `bi_dashboard` benchmark runs.
     */
   private val pinned = Seq(
     "q_link_pred", "q_ktruss_converged", "q_ktruss", "embed_dbscan",
@@ -47,7 +48,9 @@ class PlanSnapshotSpec extends AnyFunSuite {
     "q_random_walks", "dedup_cosine_pairs", "q_clustering_coef",
     "pipeline_corpus_prep", "q_label_prop", "q_poisson_bootstrap",
     "ann_topk_ivfpq", "text_nb_eval", "text_unigram_train",
-    "pipeline_curate", "dedup_incremental")
+    "pipeline_curate", "dedup_incremental",
+    "q1_monthly_revenue", "q2_top_parts", "q3_daily_series", "q_top_customers",
+    "q_rollup_revenue", "q_range_frame", "q_gap_fill")
 
   // dedicated child session: AQE off for static-plan determinism,
   // without flipping the shared TestSpark session's conf under

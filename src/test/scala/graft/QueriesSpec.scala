@@ -17,6 +17,13 @@ class QueriesSpec extends AnyFunSuite {
     assert(got.map(_._2).sliding(2).forall { case Array(a, b) => a >= b; case _ => true })
   }
 
+  test("q2 rejects k < 1 up front") {
+    val (li, ord, part) =
+      (Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir), Tables.part(spark, sfDir))
+    for (k <- Seq(0, -1))
+      assertThrows[IllegalArgumentException](Queries.q2TopParts(li, ord, part, k))
+  }
+
   test("q1: one row per month, revenue positive") {
     val got = Queries.q1MonthlyRevenue(Tables.orders(spark, sfDir))
     assert(got.count() === got.select("month_start").distinct().count())

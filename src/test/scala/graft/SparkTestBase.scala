@@ -1,16 +1,18 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** One shared local SparkSession for the whole test JVM (sbt forks one). */
 object TestSpark {
@@ -35,14 +37,28 @@ object TestSpark {
     * arrive in order, so once the sentinel is seen every job `body`
     * started has been counted.
     */
-  def jobsStartedBy(body: => Unit): Int = {
+  def jobsStartedBy(body: => Unit): Int = startedBy(body).jobs
+
+  final case class Starts(jobs: Int, sqlExecutions: Int)
+
+  /** Jobs and SQL executions (one per Dataset action, an eager cache
+    * build included) started while `body` runs on this thread, both
+    * counted up to the same sentinel.
+    */
+  def startedBy(body: => Unit): Starts = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     val seen = new ConcurrentLinkedQueue[String]()
+    val executions = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
           seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+          executions.incrementAndGet()
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -53,7 +69,7 @@ object TestSpark {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(seen.contains("sentinel"), "the listener never saw the sentinel job")
-      seen.asScala.count(_ != "sentinel")
+      Starts(seen.asScala.count(_ != "sentinel"), executions.get())
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
