@@ -1,5 +1,8 @@
 package graft.etl
 
+import java.time.LocalDate
+import java.time.format.DateTimeParseException
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,13 +45,22 @@ object Dims {
     * Generated declaratively with `sequence` + `explode` — a single-row
     * seed exploded on an executor, no driver-side loop, trivially
     * parallelizable (a calendar is tiny at any data scale).
+    *
+    * @throws IllegalArgumentException where a bound is not an ISO date
+    *         (`yyyy-MM-dd`) or `end` is before `start`
     */
   def dimDate(spark: SparkSession,
               start: String = "1995-01-01",
               end: String   = "2001-12-31"): DataFrame = {
+    def date(d: String) =
+      try LocalDate.parse(d)
+      catch {
+        case e: DateTimeParseException => throw new IllegalArgumentException(s"not an ISO date: $d", e)
+      }
+    val (first, last) = (date(start), date(end))
+    require(!last.isBefore(first), s"dim_date ends before it starts: $start..$end")
     spark.range(1)
-      .select(explode(sequence(
-        to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")))
+      .select(explode(sequence(lit(first), lit(last), expr("interval 1 day")))
         .as("full_date"))
       .select(
         dateKey(col("full_date")).as("date_id"),

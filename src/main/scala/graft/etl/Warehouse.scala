@@ -5,6 +5,7 @@ import java.time.LocalDateTime
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +13,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.io.Tables
-import graft.io.Tables.{DataFile, Listing}
+import graft.io.Tables.{DataFile, Listing, Range}
 
 /** Incremental warehouse build — the engine's equivalent of the reference's
   * Airflow DAG `etl_dimensional_model` (`rentalFilmDAG.py:99-164`, SURVEY.md
@@ -29,7 +30,12 @@ import graft.io.Tables.{DataFile, Listing}
   * warehouse to land a few new rows. [[buildAll]] is idempotent and
   * rewrites little: each table keeps a manifest of the input files it was built from, and a build
   * folds in only the files that are new since — the delta rule of
-  * incremental view maintenance (`operators/Ivm`), at file grain.
+  * incremental view maintenance (`operators/Ivm`), at file grain. A night
+  * is planned from metadata, as a columnar engine reads zone maps before
+  * data: the parquet footers' key and date ranges
+  * ([[graft.io.Tables.range]]) tell which dimension files a new row can
+  * already be in and which years new orders fall in, so a night that lands
+  * new keys on one day writes its tables without first querying them.
   */
 object Warehouse {
 
@@ -56,34 +62,65 @@ object Warehouse {
     *  - Otherwise only the new input files count, and a table with none is
     *    skipped without a Spark job. A dimension is a set (`Clean.clean` is
     *    null-drop + distinct), so it appends the builder's rows over the
-    *    new files that it does not hold yet, re-sent rows included. A fact
-    *    row's year is its order's, so a fact recomputes from the whole
-    *    snapshot the years of its new orders (and, for the inventory, of
-    *    the orders its new lineitems belong to), found for both facts in
-    *    one job, and overwrites just those year partitions. Only a removed
+    *    new files that it does not hold yet, re-sent rows included: an
+    *    anti-join on all columns against just the dimension files whose
+    *    range of its first column meets that column's range in the new
+    *    files, and no join where none does.
+    *  - A fact row's year is its order's, so a fact overwrites just the
+    *    year partitions of its new orders (and, for the inventory, of the
+    *    orders its new lineitems belong to). The footers decide them where
+    *    they pin exactly that set: new orders whose `o_orderdate` range
+    *    lies in one year have that year, and new lineitems add none where
+    *    every orders file whose `o_orderkey` range can hold one of their
+    *    keys is itself new. The rest are found in one query over the new
+    *    orders and the orders files those keys can reach. Only a removed
     *    or rewritten input file can take rows out of a year, and that
     *    rebuilds in full. `dim_date` has no input.
+    *  - A missing range (no statistics, an INT96 timestamp) or ranges of
+    *    two parquet types count as overlapping, so they cost a join or a
+    *    query, never a row.
     *
     * Row counts are summed on the driver from the parquet footers of the
     * output files; the manifest keeps each file's count, so a build reads
-    * only the footers of the files it wrote. (The C3 cleaning audit is a
+    * only the footers of the files it wrote. The build copies the
+    * session's Hadoop configuration once, for every listing, footer and
+    * manifest it touches. (The C3 cleaning audit is a
     * per-frame concern: use `Clean.cleanCounted`/`cleanObserved` around
     * individual builders when the removed-count is needed.)
     */
   def buildAll(spark: SparkSession, inDir: String, outDir: String): Seq[BuildReport] = {
+    val conf = spark.sessionState.newHadoopConf()
     val snap = Seq("customer", "supplier", "part", "orders", "lineitem")
-      .map(t => t -> Tables.listing(spark, s"$inDir/$t.parquet")).toMap
-    def full(t: String): DataFrame = Tables.read(spark, snap(t))
+      .map(t => t -> Tables.listing(conf, s"$inDir/$t.parquet")).toMap
+    def read(t: String, files: Seq[DataFile]): DataFrame = Tables.read(spark, snap(t), files, conf)
+    def full(t: String): DataFrame = read(t, snap(t).files)
     def load(name: String, inputs: String*) =
-      new Load(spark, outDir, name, inputs.map(t => t -> snap(t)).toMap)
+      new Load(conf, outDir, name, inputs.map(t => t -> snap(t)).toMap)
+    // `column`'s range over `files`, where each has one and all are of one kind
+    def span(files: Seq[DataFile], column: String): Option[Range] =
+      files.map(Tables.range(spark, conf, _, column))
+        .reduceOption((a, b) => for (x <- a; y <- b; u <- x union y) yield u).flatten
+    // the files whose range of `column` can hold a value in `r`; a file
+    // without a range, or any file where `r` is unknown, can
+    def reach(files: Seq[DataFile], column: String, r: Option[Range]): Seq[DataFile] =
+      files.filter(f => r.forall(k => Tables.range(spark, conf, f, column).forall(_.overlaps(k))))
 
     // --- dimensions (reference cells 4-8) ---
     def dim(name: String, input: String, build: DataFrame => DataFrame): BuildReport = {
       val l = load(name, input)
       l(build(full(input))) { delta =>
-        val fresh = build(Tables.read(spark, snap(input), delta(input)))
-        val unseen = if (l.out.files.isEmpty) fresh
-          else fresh.join(Tables.parquet(spark, l.dir), fresh.columns.toSeq, "left_anti")
+        val fresh = build(read(input, delta(input)))
+        // the builders project their input's columns unchanged, so a held
+        // row equal to a fresh one shares the first column's value with a
+        // new file's row: only files whose range of it meets theirs can hold one
+        val key = fresh.columns.head
+        val held = reach(l.out.files, key, span(delta(input), key))
+        val unseen =
+          if (held.isEmpty) fresh
+          else fresh.join(
+            if (held == l.out.files) Tables.parquet(spark, l.dir, conf)
+            else Tables.read(spark, l.out, held, conf),
+            fresh.columns.toSeq, "left_anti")
         Tables.write(unseen, l.dir, mode = "append")
       }
     }
@@ -97,18 +134,33 @@ object Warehouse {
     // --- facts (reference cells 9-10), after dims, partitioned by year ---
     val daily = load("fact_daily_inventory", "lineitem", "orders")
     val monthly = load("fact_monthly_payment", "orders")
-    def added(l: Load, t: String): Option[DataFrame] =
-      l.delta.map(_(t)).filter(_.nonEmpty).map(Tables.read(spark, snap(t), _))
-    val touching = added(monthly, "orders").map(monthly.name -> _).toSeq ++
-      added(daily, "orders").map(daily.name -> _) ++
-      added(daily, "lineitem").map(li => daily.name ->
-        full("orders").join(li, col("o_orderkey") === col("l_orderkey"), "left_semi"))
+    def added(l: Load, t: String): Seq[DataFile] = l.delta.fold(Seq.empty[DataFile])(_(t))
+    // The years of orders `fs`: pinned by the footers where their dates lie
+    // in one year and are stored as the table reads them, else the orders
+    // to find them in.
+    lazy val dates = snap("orders").files.headOption
+      .flatMap(Tables.range(spark, conf, _, "o_orderdate")).map(_.kind)
+    def yearsOf(fs: Seq[DataFile]): Either[Seq[Int], DataFrame] =
+      span(fs, "o_orderdate").filter(r => dates.contains(r.kind)).flatMap(_.years)
+        .collect { case (a, b) if a == b => Seq(a) }.toLeft(read("orders", fs))
+    val touching = Seq(monthly, daily).map(l => l.name -> added(l, "orders"))
+      .collect { case (t, fs) if fs.nonEmpty => t -> yearsOf(fs) } ++
+      Some(added(daily, "lineitem")).filter(_.nonEmpty).map { li =>
+        // an order of the new lineitems lies in an orders file whose keys
+        // reach theirs; where each is new, its years are counted above
+        val owners = reach(snap("orders").files, "o_orderkey", span(li, "l_orderkey"))
+        daily.name -> (
+          if (owners.forall(added(daily, "orders").contains)) Left(Nil)
+          else Right(read("orders", owners)
+            .join(read("lineitem", li), col("o_orderkey") === col("l_orderkey"), "left_semi")))
+      }
+    val found = touching
+      .collect { case (t, Right(o)) => o.select(lit(t).as("table"), year(col("o_orderdate")).as("year")) }
+      .reduceOption(_ unionByName _).toSeq
+      .flatMap(_.where(col("year").isNotNull).distinct().collect().map(r => r.getString(0) -> r.getInt(1)))
     val years: Map[String, Seq[Int]] =
-      if (touching.isEmpty) Map.empty
-      else touching
-        .map { case (t, o) => o.select(lit(t).as("table"), year(col("o_orderdate")).as("year")) }
-        .reduce(_ unionByName _).where(col("year").isNotNull).distinct().collect().toSeq
-        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getInt(1)).sorted }
+      (touching.flatMap { case (t, ys) => ys.left.getOrElse(Nil).map(t -> _) } ++ found)
+        .groupMap(_._1)(_._2).map { case (t, ys) => t -> ys.distinct.sorted }
     // a range on the date itself reaches the parquet reader; year() does not
     def ordersIn(ys: Seq[Int]): DataFrame = full("orders").where(ys.map { y =>
       col("o_orderdate") >= lit(LocalDateTime.of(y, 1, 1, 0, 0)) &&
@@ -131,11 +183,11 @@ object Warehouse {
   /** One warehouse table of a build: its manifest, where still valid, and
     * the input files that are new since.
     */
-  private final class Load(spark: SparkSession, outDir: String, val name: String,
+  private final class Load(conf: Configuration, outDir: String, val name: String,
                            inputs: Map[String, Listing]) {
     val dir = s"$outDir/$name"
-    val out: Listing = Tables.listing(spark, dir)
-    private val manifest = Manifest.read(spark, outDir, name)
+    val out: Listing = Tables.listing(conf, dir)
+    private val manifest = Manifest.read(conf, outDir, name)
 
     /** The new files of each input; None where the table is rebuilt in full. */
     val delta: Option[Map[String, Seq[DataFile]]] = manifest
@@ -152,13 +204,13 @@ object Warehouse {
         update: Map[String, Seq[DataFile]] => Unit): BuildReport = delta match {
       case Some(d) if d.values.forall(_.isEmpty) => BuildReport(name, manifest.get.rows)
       case _ =>
-        Manifest.delete(spark, outDir, name)
+        Manifest.delete(conf, outDir, name)
         delta.fold(Tables.write(full, dir, partitionBy))(update)
         val known = if (delta.isDefined) manifest.get.output else Map.empty[DataFile, Long]
-        val output = Tables.listing(spark, dir).files
-          .map(f => f -> known.getOrElse(f, Tables.rowCount(spark, f))).toMap
+        val output = Tables.listing(conf, dir).files
+          .map(f => f -> known.getOrElse(f, Tables.rowCount(conf, f))).toMap
         val m = Manifest(output.values.sum, inputs.map { case (t, l) => t -> l.files }, output)
-        Manifest.write(spark, outDir, name, m)
+        Manifest.write(conf, outDir, name, m)
         BuildReport(name, m.rows)
     }
   }
@@ -174,7 +226,6 @@ object Warehouse {
     private implicit val formats: Formats = DefaultFormats
 
     private def path(outDir: String, table: String) = new Path(s"$outDir/_manifest/$table.json")
-    private def fs(spark: SparkSession, p: Path) = p.getFileSystem(spark.sessionState.newHadoopConf())
 
     private def file(f: DataFile): List[JField] =
       List("path" -> JString(f.path), "length" -> JLong(f.length), "mtime" -> JLong(f.mtime))
@@ -184,10 +235,10 @@ object Warehouse {
     /** The table's manifest; None where it is missing, unreadable or of
       * another format.
       */
-    def read(spark: SparkSession, outDir: String, table: String): Option[Manifest] = {
+    def read(conf: Configuration, outDir: String, table: String): Option[Manifest] = {
       val p = path(outDir, table)
       try {
-        val in = fs(spark, p).open(p)
+        val in = p.getFileSystem(conf).open(p)
         val j = try JsonMethods.parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
         if ((j \ "format").extract[Int] != Format) None
         else Some(Manifest(
@@ -198,14 +249,15 @@ object Warehouse {
       } catch { case NonFatal(_) => None }
     }
 
-    def delete(spark: SparkSession, outDir: String, table: String): Unit = {
+    def delete(conf: Configuration, outDir: String, table: String): Unit = {
       val p = path(outDir, table)
-      fs(spark, p).delete(p, false)
+      p.getFileSystem(conf).delete(p, false)
     }
 
     /** Publish `m` whole: written beside its place, then renamed into it. */
-    def write(spark: SparkSession, outDir: String, table: String, m: Manifest): Unit = {
+    def write(conf: Configuration, outDir: String, table: String, m: Manifest): Unit = {
       val p = path(outDir, table)
+      val fs = p.getFileSystem(conf)
       val tmp = new Path(p.getParent, s".${p.getName}.tmp")
       val json = JObject(
         "format" -> JInt(Format),
@@ -214,9 +266,9 @@ object Warehouse {
           t -> JArray(files.map(f => JObject(file(f))).toList) }),
         "output" -> JArray(m.output.toList.sortBy(_._1.path).map { case (f, rows) =>
           JObject(file(f) :+ ("rows" -> JLong(rows))) }))
-      val o = fs(spark, p).create(tmp, true)
+      val o = fs.create(tmp, true)
       try o.write(JsonMethods.compact(JsonMethods.render(json)).getBytes(UTF_8)) finally o.close()
-      if (!fs(spark, p).rename(tmp, p)) throw new java.io.IOException(s"could not publish $p")
+      if (!fs.rename(tmp, p)) throw new java.io.IOException(s"could not publish $p")
     }
   }
 

@@ -1,14 +1,24 @@
 package graft.io
 
+import java.time.{Instant, LocalDate}
+import java.time.temporal.ChronoUnit
+
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{
+  DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.parquet.schema.Type.Repetition.REPEATED
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -36,6 +46,13 @@ import org.apache.spark.sql.types.StructType
   * whose inputs receive new files while it runs — lists them once
   * ([[listing]]) and reads exactly those ([[read]]), with the same listing
   * and schema rules.
+  *
+  * Footers also give a file's rows ([[rowCount]]) and the least and
+  * greatest value of an integer, date or timestamp column ([[range]]), so
+  * a planner can tell from metadata alone which files can hold a key and
+  * which years a file's dates fall in. The calls that take a Hadoop
+  * configuration let a caller that touches many files copy the session's
+  * once.
   *
   * Scale note (100 TB posture): `spark.read.parquet` on a directory of
   * files partitions by `spark.sql.files.maxPartitionBytes` (128 MB default),
@@ -76,7 +93,10 @@ object Tables {
     * back with them.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
+    parquet(spark, path, spark.sessionState.newHadoopConf())
+
+  def parquet(spark: SparkSession, path: String, conf: Configuration): DataFrame =
+    footerSchema(spark, conf, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
@@ -93,9 +113,12 @@ object Tables {
     * without parquet summary files, recursively; no file where the path is
     * missing. Driver-side, no Spark job.
     */
-  def listing(spark: SparkSession, path: String): Listing = {
+  def listing(spark: SparkSession, path: String): Listing =
+    listing(spark.sessionState.newHadoopConf(), path)
+
+  def listing(conf: Configuration, path: String): Listing = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = root.getFileSystem(conf)
     def walk(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
       else fs.listStatus(st.getPath).toSeq
@@ -116,12 +139,13 @@ object Tables {
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
     * are looked up by a Spark job.
     */
-  def read(spark: SparkSession, table: Listing, files: Seq[DataFile]): DataFrame = {
-    if (table.files.isEmpty) return parquet(spark, table.root)
+  def read(spark: SparkSession, table: Listing, files: Seq[DataFile],
+           conf: Configuration): DataFrame = {
+    if (table.files.isEmpty) return parquet(spark, table.root, conf)
     require(files.nonEmpty, s"no file of ${table.root} to read")
     val schema =
       if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-      else try Some(footerSchema(spark, spark.sessionState.newHadoopConf(), status(table.files.head)))
+      else try Some(footerSchema(spark, conf, status(table.files.head)))
       catch { case NonFatal(_) => None }
     val reader = schema.fold(spark.read)(spark.read.schema)
     // a partition directory's files read back with its columns; a table
@@ -130,25 +154,99 @@ object Tables {
       .parquet(files.map(_.path): _*)
   }
 
+  def read(spark: SparkSession, table: Listing, files: Seq[DataFile]): DataFrame =
+    read(spark, table, files, spark.sessionState.newHadoopConf())
+
   def read(spark: SparkSession, table: Listing): DataFrame = read(spark, table, table.files)
 
   /** Rows of a parquet file, summed from its footer's row groups on the
     * driver.
     */
-  def rowCount(spark: SparkSession, file: DataFile): Long =
+  def rowCount(conf: Configuration, file: DataFile): Long =
+    footer(conf, file).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** The least and greatest value of one column in one file, as parquet
+    * stores them: a signed integer, a DATE's days or a TIMESTAMP's ticks
+    * since the epoch. `kind` names the stored type, and ranges of two kinds
+    * never compare as disjoint. `years` spans Spark's `year()` of the
+    * values, for a date or a millisecond or microsecond timestamp from 1900
+    * on (Spark rebases older values of a legacy-calendar file on read).
+    */
+  final case class Range(kind: String, min: Long, max: Long, years: Option[(Int, Int)]) {
+    /** Whether a value can lie in both ranges. */
+    def overlaps(o: Range): Boolean = kind != o.kind || (min <= o.max && o.min <= max)
+
+    /** The range of the values of both, where they are of one kind. */
+    def union(o: Range): Option[Range] = Option.when(kind == o.kind)(Range(kind,
+      min min o.min, max max o.max, for ((a, b) <- years; (c, d) <- o.years) yield (a min c, b max d)))
+  }
+
+  /** The [[Range]] of top-level `column` in `file`, from the row-group
+    * statistics of its footer, read on the driver. An all-null row group
+    * adds nothing. None where a row group lacks statistics, where every
+    * value is null or the file lacks the column, and unless the column is
+    * a signed integer, a DATE or an INT64 TIMESTAMP (so never for an INT96
+    * one). A TIMESTAMP's year is taken where Spark's `year()` takes it: a
+    * UTC-adjusted one's (or any one's, with `inferTimestampNTZ` off) in
+    * the session time zone, a local one's as it is stored.
+    */
+  def range(spark: SparkSession, conf: Configuration, file: DataFile,
+            column: String): Option[Range] = {
+    val meta = footer(conf, file)
+    val sqlConf = spark.sessionState.conf
+    def yearAt(zone: String)(micros: Long) = Instant.EPOCH.plus(micros, ChronoUnit.MICROS)
+      .atZone(DateTimeUtils.getZoneId(zone)).getYear
+    // (kind, the year of a stored value where it has one)
+    val typed: Option[(String, Option[Long => Int])] = meta.getFileMetaData.getSchema.getFields
+      .asScala.find(f => f.getName == column && f.isPrimitive && !f.isRepetition(REPEATED))
+      .map(_.asPrimitiveType).flatMap(t => (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+        case (p @ (INT32 | INT64), null) => Some((p.toString, None))
+        case (p @ (INT32 | INT64), i: IntLogicalTypeAnnotation) if i.isSigned => Some((p.toString, None))
+        case (INT32, _: DateLogicalTypeAnnotation) => Some(("DATE", Some(LocalDate.ofEpochDay(_).getYear)))
+        case (INT64, ts: TimestampLogicalTypeAnnotation) =>
+          val zone = if (ts.isAdjustedToUTC || !sqlConf.parquetInferTimestampNTZEnabled)
+            sqlConf.sessionLocalTimeZone else "UTC"
+          Some((ts.toString, ts.getUnit match {
+            case TimeUnit.MILLIS => Some(v => yearAt(zone)(v * 1000))
+            case TimeUnit.MICROS => Some(yearAt(zone))
+            case TimeUnit.NANOS => None
+          }))
+        case _ => None
+      })
+    // per row group: Some(values' (min, max)), Some(None) where all are
+    // null, None where unknown
+    def groups = meta.getBlocks.asScala.toSeq.map { b =>
+      b.getColumns.asScala.find(_.getPath == ColumnPath.get(column)).flatMap { c =>
+        val s: Statistics[_] = c.getStatistics
+        if (s == null) None
+        else if (s.hasNonNullValue) Some(Some((
+          s.genericGetMin.asInstanceOf[Number].longValue, s.genericGetMax.asInstanceOf[Number].longValue)))
+        else Option.when(s.isNumNullsSet && s.getNumNulls == c.getValueCount)(None)
+      }
+    }
+    for {
+      (kind, year) <- typed
+      gs = groups if gs.forall(_.isDefined) && gs.exists(_.get.isDefined)
+    } yield {
+      val values = gs.flatten.flatten
+      val (lo, hi) = (values.map(_._1).min, values.map(_._2).max)
+      Range(kind, lo, hi, year.map(y => (y(lo), y(hi))).filter(_._1 >= 1900))
+    }
+  }
+
+  private def footer(conf: Configuration, file: DataFile): ParquetMetadata =
     ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(status(file), spark.sessionState.newHadoopConf()),
-      ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+      HadoopInputFile.fromStatus(status(file), conf), ParquetMetadataConverter.NO_FILTER)
 
   private def status(f: DataFile) = new FileStatus(f.length, false, 0, 0, f.mtime, new Path(f.path))
 
   /** The schema Spark would infer for `path` with schema merging off, or
     * None where [[parquet]] leaves the read to Spark.
     */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private def footerSchema(spark: SparkSession, hadoopConf: Configuration,
+                           path: String): Option[StructType] = {
     val root = new Path(path)
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled || !listed(root.getName)) return None
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(hadoopConf)
     // Spark infers from a summary file if there is one, else from the
     // least data file path. Depth-first over siblings ordered by how their

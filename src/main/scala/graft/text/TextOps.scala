@@ -69,7 +69,8 @@ object TextOps {
       .withColumn("stopword_ratio",
         when(col("n_tokens") > 0, col("n_stopwords").cast("double") / col("n_tokens"))
           .otherwise(lit(0.0)))
-      .withColumn("quality_score", score(col("n_tokens"), col("punct_ratio")))
+      // n_punct is null exactly where the text is
+      .withColumn("quality_score", score(col("n_punct").isNotNull, col("n_tokens"), col("punct_ratio")))
   }
 
   /** The composite `quality_score` of [[quality]] as one expression over a
@@ -79,7 +80,7 @@ object TextOps {
     * three pieces below.
     */
   def qualityScore(text: Column, nChars: Column): Column =
-    score(size(tokens(text)), punctRatio(punctCount(text), nChars))
+    score(text.isNotNull, size(tokens(text)), punctRatio(punctCount(text), nChars))
 
   private def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, PunctClass, ""))
@@ -87,8 +88,10 @@ object TextOps {
   private def punctRatio(nPunct: Column, nChars: Column): Column =
     when(nChars > 0, nPunct.cast("double") / nChars).otherwise(lit(0.0))
 
-  private def score(nTokens: Column, punctRatio: Column): Column =
-    least(nTokens.cast("double") / 100.0, lit(1.0)) * (lit(1.0) - punctRatio)
+  // NULL where there is no text, which every gate then drops: least()
+  // skips a null token count, which would otherwise score it 1.0
+  private def score(hasText: Column, nTokens: Column, punctRatio: Column): Column =
+    when(hasText, least(nTokens.cast("double") / 100.0, lit(1.0)) * (lit(1.0) - punctRatio))
 
   /** Filter-cascade attrition audit: run the ordered quality cascade
     * (length → token count → punctuation → stopwords) and report, per

@@ -175,12 +175,12 @@ class CurationSpec extends AnyFunSuite {
       spark.catalog.clearCache()
     }
     // on the fixture: no null key, one copy of the triple, the document
-    // at exactly minQuality kept — and the null text kept too: its token
-    // count is null, which least() skips, so it scores 1.0 on both paths
+    // at exactly minQuality kept — and the null text dropped: it scores
+    // NULL, which no quality gate keeps
     assert(TextOps.quality(fixture).filter(col("doc_id") === 2L)
-      .select("quality_score").as[Double].head() === 1.0)
+      .select("quality_score").as[Option[Double]].head() === None)
     assert(Curation.exactDedupedQuality(fixture).select("doc_id").as[Long]
-      .collect().toSet === Set(2L, 3L, 6L, 7L))
+      .collect().toSet === Set(3L, 6L, 7L))
   }
 
   test("curate rejects out-of-range parameters up front") {

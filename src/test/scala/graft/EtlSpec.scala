@@ -21,6 +21,15 @@ class EtlSpec extends AnyFunSuite {
     dd.unpersist()
   }
 
+  test("dim_date rejects a bound that is not an ISO date, and an end before the start, up front") {
+    for ((start, end) <- Seq(("1995-13-01", "1996-01-01"), ("1995-01-01", "yesterday"),
+      ("1995-1-1", "1996-01-01"), ("2001-01-02", "2001-01-01")))
+      assertThrows[IllegalArgumentException](Dims.dimDate(spark, start, end))
+    // a one-day calendar is a range
+    assert(Dims.dimDate(spark, "2001-01-01", "2001-01-01").select("date_id").as[Int]
+      .collect().toSeq === Seq(20010101))
+  }
+
   test("date keys: integer YYYYMMDD equals the formatted key, and maps back, for years 1..9999") {
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
     val dates = Seq("0001-01-01", "0999-12-31", "1000-01-01", "1900-02-28", "2000-02-29",

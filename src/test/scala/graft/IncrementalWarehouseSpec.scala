@@ -18,7 +18,7 @@ import graft.io.Tables
   * it must rewrite only what the night's files change.
   */
 class IncrementalWarehouseSpec extends AnyFunSuite {
-  import TestSpark.{jobsStartedBy, spark, sfDir}
+  import TestSpark.{jobsStartedBy, spark, sfDir, startedBy}
   import spark.implicits._
 
   private val inputs = Seq("customer", "supplier", "part", "orders", "lineitem")
@@ -177,6 +177,79 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
     buildMatchesScratch(in, wh)
     rebuilt(before, wh, "fact_daily_inventory")
     unchanged(before, wh, tables.filter(_ != "fact_daily_inventory"): _*)
+  }
+
+  /** A night's new orders, keyed past every order so far and placed on
+    * `day`, with their lineitems.
+    */
+  private def night(in: String, name: String, day: LocalDateTime, shift: Long,
+                    orders: DataFrame): Unit = {
+    val lineitem = table(in, "lineitem")
+    val lines = lineitem.join(orders.select("o_orderkey"), $"l_orderkey" === $"o_orderkey")
+      .withColumn("l_orderkey", $"l_orderkey" + shift).select(lineitem.columns.toSeq.map(col): _*)
+    val moved = orders.withColumn("o_orderkey", $"o_orderkey" + shift)
+      .withColumn("o_orderdate", lit(day).cast(orders.schema("o_orderdate").dataType))
+    land(in, "orders", name, moved)
+    land(in, "lineitem", name, lines)
+  }
+
+  test("a benchmark-shaped night plans from the footers: one SQL execution per table it writes") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    val base = table(in, "orders").orderBy("o_orderkey").limit(8)
+      // null customers, and rows re-sent within the night
+      .withColumn("o_custkey", when($"o_orderkey" % 3 =!= 0, $"o_custkey"))
+      .localCheckpoint()
+    night(in, "night-01.parquet", LocalDateTime.of(1996, 7, 4, 0, 0), 30000000L,
+      base.unionByName(base.limit(2)))
+    val before = state(wh)
+    // dim_order, fact_daily_inventory and fact_monthly_payment: one write
+    // each, and neither a years query nor an anti-join against dim_order
+    assert(startedBy(Warehouse.buildAll(spark, in, wh)).sqlExecutions === 3)
+    unchanged(before, wh, "dim_customer", "dim_supplier", "dim_part", "dim_date")
+    assert(files(wh, "dim_order").size === before("dim_order").size + 1)
+    for (f <- Seq("fact_daily_inventory", "fact_monthly_payment")) {
+      assert(outside(files(wh, f), 1996) === outside(before(f), 1996), f)
+      assert(files(wh, f) !== before(f), f)
+    }
+    buildMatchesScratch(in, wh)
+  }
+
+  test("orders with INT96 timestamps have no date statistics and rewrite the same years") {
+    val in = fixtures()
+    // the orders as Spark writes a TIMESTAMP by default: INT96
+    val int96 = spark.newSession()
+    int96.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val orders = Tables.table(int96, in, "orders")
+      .withColumn("o_orderdate", $"o_orderdate".cast("timestamp")).localCheckpoint()
+    Files.delete(Paths.get(in, "orders.parquet", "part-00000.parquet"))
+    land(in, "orders", "part-00000.parquet", orders)
+    val wh = tmp("graft_inc_wh")
+    buildMatchesScratch(in, wh)
+
+    // new orders in 2010 with their lineitems, and a lineitem of an order
+    // placed in 1996
+    night(in, "night-01.parquet", LocalDateTime.of(2010, 3, 15, 0, 0), 10000000L,
+      table(in, "orders").orderBy("o_orderkey").limit(5))
+    val lineitem = table(in, "lineitem")
+    val in1996 = table(in, "orders").where(year($"o_orderdate") === 1996).orderBy("o_orderkey").limit(1)
+    land(in, "lineitem", "night-01b.parquet", lineitem
+      .join(in1996.select("o_orderkey"), $"l_orderkey" === $"o_orderkey")
+      .withColumn("l_linenumber", $"l_linenumber" + 100).select(lineitem.columns.toSeq.map(col): _*))
+    val conf = spark.sessionState.newHadoopConf()
+    val landed = Tables.listing(conf, s"$in/orders.parquet").files
+    assert(landed.size === 2 && landed.forall(Tables.range(spark, conf, _, "o_orderdate").isEmpty))
+    val before = state(wh)
+    buildMatchesScratch(in, wh)
+    val daily = "fact_daily_inventory"
+    assert(outside(files(wh, daily), 1996, 2010) === outside(before(daily), 1996, 2010))
+    assert(files(wh, daily).exists(_.path.contains("/year=2010/")))
+    assert((files(wh, daily) -- outside(files(wh, daily), 1996)) !==
+      (before(daily) -- outside(before(daily), 1996)))
+    val monthly = "fact_monthly_payment"
+    assert(outside(files(wh, monthly), 2010) === outside(before(monthly), 2010))
+    assert(files(wh, monthly).exists(_.path.contains("/year=2010/")))
   }
 
   test("a build with no new file starts no Spark job and rewrites nothing") {

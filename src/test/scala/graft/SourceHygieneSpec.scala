@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * block, so the first one's text silently drops out of the API docs
   * and usually describes a definition that moved elsewhere. A bare
   * `.read.parquet(` starts a schema-inference job per call; library reads
-  * go through `Tables.parquet`, which reads the schema on the driver. A
+  * go through `Tables.parquet`, which reads the schema on the driver, and
+  * every footer read (schema, row count, column range) goes through
+  * `Tables`, so all of them take one path. A
   * library call that sets a session conf changes every query other
   * threads run on that session meanwhile; writers take per-write options
   * instead.
@@ -84,5 +86,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"library code must not set session confs:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no ParquetFooterReader under src/main/scala outside io/Tables.scala") {
+    val tables = Paths.get("src/main/scala/graft/io/Tables.scala")
+    assert(Files.readAllLines(tables).asScala.exists(_.contains("ParquetFooterReader")))
+    val sites = for {
+      f <- mainSources if f != tables
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("ParquetFooterReader")
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"read parquet footers through graft.io.Tables:\n${sites.sorted.mkString("\n")}")
   }
 }

@@ -1,15 +1,20 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.time.{Instant, LocalDate, LocalDateTime}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Tables
+import graft.io.Tables.Range
 
 /** `Tables.parquet` reads the schema from one footer on the driver: it
   * must give the schema `spark.read.parquet` infers, raise the errors it
-  * raises, and start no Spark job.
+  * raises, and start no Spark job. `Tables.range` reads a column's least
+  * and greatest value from the row-group statistics, and gives none
+  * where they cannot tell.
   */
 class TablesSpec extends AnyFunSuite {
   import TestSpark.{jobsStartedBy, spark, sfDir}
@@ -109,5 +114,92 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.read(spark, Tables.listing(spark, file)).count() === 1)
     assert(Tables.listing(spark, s"$dir/none.parquet").files.isEmpty)
     assert(jobsStartedBy(Tables.read(spark, now)) === 0)
+  }
+
+  /** The one data file `df` is written as, with the writer `options`. */
+  private def written(df: DataFrame, options: (String, String)*): Tables.DataFile = {
+    val path = s"${tmpDir()}/t.parquet"
+    df.coalesce(1).write.options(options.toMap).parquet(path)
+    val files = Tables.listing(spark, path).files
+    assert(files.size === 1)
+    files.head
+  }
+
+  private def range(f: Tables.DataFile, column: String, s: SparkSession = spark): Option[Range] =
+    Tables.range(s, s.sessionState.newHadoopConf(), f, column)
+
+  private def micros(t: Instant): Long = t.getEpochSecond * 1000000L + t.getNano / 1000
+
+  test("range: signed INT64 and INT32 keys, none for a missing column") {
+    val f = written(Seq((5L, 3), (-2L, 9), (7L, -4)).toDF("k", "i"))
+    assert(range(f, "k") === Some(Range("INT64", -2, 7, None)))
+    assert(range(f, "i") === Some(Range("INT32", -4, 9, None)))
+    assert(range(f, "missing") === None)
+  }
+
+  test("range: DATE days and TIMESTAMP_NTZ micros, with their years") {
+    val days = Seq("1999-12-31", "2001-01-01", "2000-06-15").map(LocalDate.parse)
+    val f = written(days.toDF("d"))
+    assert(range(f, "d") ===
+      Some(Range("DATE", days(0).toEpochDay, days(1).toEpochDay, Some((1999, 2001)))))
+    val times = Seq(LocalDateTime.of(2003, 1, 1, 0, 0), LocalDateTime.of(2003, 12, 31, 23, 59, 59, 999999000))
+    val g = written(times.toDF("t"))
+    val r = range(g, "t").get
+    assert(r.kind.startsWith("TIMESTAMP(MICROS") && r.years === Some((2003, 2003)))
+    assert((r.min, r.max) === (micros(times(0).toInstant(java.time.ZoneOffset.UTC)),
+      micros(times(1).toInstant(java.time.ZoneOffset.UTC))))
+  }
+
+  test("range: a UTC-adjusted TIMESTAMP takes its year in the session time zone, an INT96 one gives none") {
+    def session(zone: String, tsType: String) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", zone)
+      s.conf.set("spark.sql.parquet.outputTimestampType", tsType)
+      s
+    }
+    val at = Instant.parse("2000-12-31T23:30:00Z")
+    val utc = session("UTC", "TIMESTAMP_MICROS")
+    val f = {
+      val path = s"${tmpDir()}/t.parquet"
+      utc.range(1).select(lit(at).as("t")).coalesce(1).write.parquet(path)
+      Tables.listing(utc, path).files.head
+    }
+    val plus1 = session("+01:00", "TIMESTAMP_MICROS")
+    assert(range(f, "t", utc).map(r => (r.min, r.max, r.years)) ===
+      Some((micros(at), micros(at), Some((2000, 2000)))))
+    assert(range(f, "t", plus1).flatMap(_.years) === Some((2001, 2001)))
+    // as year() takes it
+    assert(plus1.read.parquet(f.path).select(year(col("t"))).as[Int].head() === 2001)
+    val int96 = session("UTC", "INT96")
+    val g = {
+      val path = s"${tmpDir()}/t.parquet"
+      int96.range(1).select(lit(at).as("t")).coalesce(1).write.parquet(path)
+      Tables.listing(int96, path).files.head
+    }
+    assert(range(g, "t", int96) === None)
+  }
+
+  test("range: spans row groups, skips all-null ones, none for an all-null column or no statistics") {
+    val oneRowGroups = "parquet.block.row.count.limit" -> "1"
+    val f = written(Seq(Some(4L), None, Some(-3L), Some(11L)).toDF("k")
+      .withColumn("n", lit(null).cast("long")), oneRowGroups)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.path), spark.sessionState.newHadoopConf()))
+    try assert(reader.getRowGroups.size === 4) finally reader.close()
+    assert(range(f, "k") === Some(Range("INT64", -3, 11, None)))
+    assert(range(f, "n") === None)
+    val g = written(Seq(1L, 2L).toDF("k"), "parquet.column.statistics.enabled" -> "false")
+    assert(range(g, "k") === None)
+  }
+
+  test("range: ranges of two parquet types never compare as disjoint") {
+    val f = written(Seq((1, LocalDate.ofEpochDay(100))).toDF("i", "d"))
+    val (i, d) = (range(f, "i").get, range(f, "d").get)
+    assert(i.kind === "INT32" && d.kind === "DATE" && i.max < d.min)
+    assert(i.overlaps(d) && d.overlaps(i))
+    assert(i.union(d) === None)
+    assert(!i.overlaps(i.copy(min = d.min, max = d.max)))
+    assert(i.union(i.copy(min = d.min, max = d.max)) === Some(Range("INT32", 1, 100, None)))
   }
 }
