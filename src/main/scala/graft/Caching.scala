@@ -61,18 +61,31 @@ object Caching {
     * `Dataset.checkpoint` — same eager materialization, same LogicalRDD
     * leaf plan truncation, storage in the shared filesystem instead of
     * executor memory. The trade is a write+read of the relation per
-    * checkpoint, which is why it is opt-in: the memo/loop intermediates
-    * here are small (edge lists, label maps, model tables — MBs at sf0.1,
-    * ≪ inputs at any scale), so the write cost is bounded, and a failed
-    * query can always be re-run from parquet (the engine holds no state
-    * across runs) — recompute-on-failure is the documented default.
+    * checkpoint, which is why it is opt-in: the per-query and loop
+    * intermediates here are small (edge lists, label maps, model tables —
+    * MBs at sf0.1, ≪ inputs at any scale), so the write cost is bounded,
+    * and a failed query can always be re-run from parquet (the engine
+    * holds no state across runs) — recompute-on-failure is the
+    * documented default.
+    *
+    * `SparkContext.setCheckpointDir(dir)` checkpoints into a fresh
+    * `<qualified dir>/<random UUID>` subdirectory, so the context is
+    * pointed at the configured dir only when its current checkpoint
+    * dir's parent is not already that dir: every checkpoint of one
+    * context then shares one subdirectory.
     */
   def checkpointed(df: DataFrame): DataFrame = {
     val dir = df.sparkSession.conf.get("spark.graft.checkpointDir", "")
     if (dir.isEmpty) df.localCheckpoint(true)
     else {
       val sc = df.sparkSession.sparkContext
-      if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
+      val wanted = {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
+      }
+      if (!sc.getCheckpointDir.exists(
+          cur => new org.apache.hadoop.fs.Path(cur).getParent == wanted))
+        sc.setCheckpointDir(dir)
       df.checkpoint(true)
     }
   }
@@ -88,8 +101,8 @@ object Caching {
     * 2-task frontier-loop collapse, root-caused in OPTIMIZATION_r14.md).
     * Materializing to an InMemoryRelation FIRST makes the forwarded
     * stats the IMR's real ones (size AND row count); the transient cache
-    * is dropped once the checkpoint holds its own copy. Worth the extra pass exactly for
-    * session memos consumed by many downstream joins.
+    * is dropped once the checkpoint holds its own copy. Worth the extra
+    * pass exactly for relations consumed by many downstream joins.
     */
   def checkpointedAccurate(df: DataFrame): DataFrame = {
     val im = df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -19,6 +19,12 @@ import graft.text.TextOps
   * `oracleSql` for the driver's DuckDB differential check. Column names are
   * aligned between the two on purpose — the driver sorts columns by name
   * before hashing.
+  *
+  * Each query builds everything it reads from its input directory on every
+  * call: nothing is shared or remembered between queries, so a re-run after
+  * new files land in that directory sees them. Where several queries read
+  * the same derived relation (the co-bought graph, the purchase graph), a
+  * private helper builds it per call.
   */
 object SparkEntry {
 
@@ -77,249 +83,95 @@ object SparkEntry {
     */
   private val ktrussOracleRounds = 10
 
-  /** Session-scoped memo of the CANONICAL co-bought-parts edge relation
-    * (distinct item_a < item_b pairs), shared by all seven graph queries
-    * (triangles, clustering coef, LPA, modularity, BFS, k-core,
-    * assortativity). Within one session each of those queries used to
-    * rebuild the basket group-by + pair expansion — the single most
-    * expensive shared stage — from scratch; a warehouse user computing
-    * several statistics over ONE graph builds its edge list once, and so
-    * does this wiring.
-    *
-    * The memo holds a `localCheckpoint`ed relation: checkpoint storage is
-    * RDD-level (never registered with the CacheManager), so it survives
-    * the harness's per-query `spark.catalog.clearCache()` — exactly the
-    * property that makes cross-query sharing real — and the checkpointed
-    * plan is a LogicalRDD leaf, so consumers pay O(1) plan depth. Keyed
-    * on (session, data dir); entries live for the session (the relation
-    * is |E|-sized — ~20 MB at sf0.1 — and a replaced entry's blocks are
-    * reclaimed by the ContextCleaner once unreferenced). Consumers pass
-    * `canonical = true` so the canonicalization/symmetrization distinct
-    * is skipped too ([[graft.analytics.GraphEdges]]).
-    */
-  private val coBoughtMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Counted co-bought pairs (item_a, item_b, c_pair) — the widened base
-    * relation: its projection is the distinct edge set the seven graph
+  /** Counted co-bought part pairs (item_a, item_b, c_pair) — the widened
+    * base relation: its projection is the distinct edge set the graph
     * queries consume, `c_pair >= minSupport` recovers the market-basket/
     * item-CF pair relation losslessly, and `10^6 div c_pair` is the SSSP
-    * affinity weight — ONE quadratic basket expansion serving eleven
-    * queries (the count column costs the same shuffle the old distinct
-    * paid, plus 8 bytes/row).
+    * affinity weight — one quadratic basket expansion per query (the
+    * count column costs the same shuffle a distinct pays, plus
+    * 8 bytes/row). The checkpoint makes it a LogicalRDD leaf, so
+    * consumers pay O(1) plan depth; they pass `canonical = true` so the
+    * canonicalization/symmetrization distinct is skipped too
+    * ([[graft.analytics.GraphEdges]]).
     */
-  // Deliberately the plain (origin-estimate) checkpoint, NOT
+  // NOTE: deliberately the plain (origin-estimate) checkpoint, NOT
   // checkpointedAccurate: an interleaved A/B (round 14) measured the
   // accurate-stats variant catastrophically worse for the triangle
   // family (q_triangles first-job task time 7.7 s -> 460 s; the real
   // ~29 MiB size pushes the edge relation over the broadcast threshold
   // and the degree-oriented closure join loses its broadcast build
   // side). The under-read estimate is load-bearing for the engineered
-  // join strategy of the seven graph consumers; coBoughtSym (whose
-  // consumers NEED real stats to avoid the frontier 2-task collapse)
-  // stays accurate - the two memos differ on purpose.
+  // join strategy of the graph consumers; coBoughtSym (whose consumers
+  // NEED real stats to avoid the frontier 2-task collapse) stays
+  // accurate - the two differ on purpose.
   private def coBoughtCounts(s: SparkSession, d: String): DataFrame =
-    coBoughtMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.analytics.Baskets.coOccurrenceCounts(
-          Tables.lineitem(s, d), "l_orderkey", "l_partkey")))
+    graft.Caching.checkpointed(
+      graft.analytics.Baskets.coOccurrenceCounts(
+        Tables.lineitem(s, d), "l_orderkey", "l_partkey"))
   private def coBoughtEdges(s: SparkSession, d: String): DataFrame =
     coBoughtCounts(s, d).select(col("item_a"), col("item_b"))
 
-  /** Session-scoped memo of the SYMMETRIC co-bought relation — the
-    * canonical half-edges unioned with their swap, named (item_a,
-    * item_b) like the half relation. Eight graph queries (BFS, k-core,
-    * assortativity, harmonic, betweenness, LPA, modularity, HyperBall)
-    * each re-persisted + counted this identical 2|E| relation on EVERY
-    * execution before round 13; one session analyzing one graph
-    * symmetrizes it once (same justification as [[coBoughtMemo]]).
-    * Checkpointed → survives the harness's per-query clearCache; 2|E|
-    * rows of two longs.
+  /** The SYMMETRIC co-bought relation — the canonical half-edges unioned
+    * with their swap, named (item_a, item_b) like the half relation; the
+    * input of the k-core, assortativity, LPA, modularity and HyperANF
+    * queries. 2|E| rows of two longs.
     */
-  private val coBoughtSymMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def coBoughtSym(s: SparkSession, d: String): DataFrame =
-    coBoughtSymMemo.computeIfAbsent((s, d), _ => {
-      val half = coBoughtEdges(s, d).select(
-        col("item_a").cast("long").as("item_a"),
-        col("item_b").cast("long").as("item_b"))
-      // accurate-stats checkpoint (round 14): the plain checkpoint's
-      // forwarded size estimate (2.8 MiB vs 36.5 MiB real at sf0.1) was
-      // small enough to make this 2|E| relation the broadcast BUILD side
-      // of consumer joins — the root cause of the round-13 frontier-loop
-      // 2-task collapse (measurements in OPTIMIZATION_r14.md)
-      graft.Caching.checkpointedAccurate(half.union(half.select(
-        col("item_b").as("item_a"), col("item_a").as("item_b"))))
-    })
+  private def coBoughtSym(s: SparkSession, d: String): DataFrame = {
+    val half = coBoughtEdges(s, d).select(
+      col("item_a").cast("long").as("item_a"),
+      col("item_b").cast("long").as("item_b"))
+    // accurate-stats checkpoint (round 14): the plain checkpoint's
+    // forwarded size estimate (2.8 MiB vs 36.5 MiB real at sf0.1) was
+    // small enough to make this 2|E| relation the broadcast BUILD side
+    // of consumer joins — the root cause of the round-13 frontier-loop
+    // 2-task collapse (measurements in OPTIMIZATION_r14.md)
+    graft.Caching.checkpointedAccurate(half.union(half.select(
+      col("item_b").as("item_a"), col("item_a").as("item_b"))))
+  }
 
-  /** Session-scoped memo of the round-1 k-truss support relation
-    * (u, v, sup) over the co-bought graph — ONE full degree-oriented
-    * triangle enumeration (the single most expensive stage of the whole
-    * suite) shared by q_ktruss and q_ktruss_converged, whose peels both
-    * start from exactly this relation (round-13 optimization; the peel
-    * never releases an injected initial support — see
-    * [[graft.analytics.Triangles.initialSupportRelation]]).
+  /** The trained unigram-LM model (piece, cnt, p_nano) — bounded driver
+    * state (≤ alphabet + 40 rows) the encode and fertility queries read.
     */
-  private val trussSupportMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def trussSupport(s: SparkSession, d: String): DataFrame =
-    trussSupportMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.analytics.Triangles.initialSupportRelation(
-          coBoughtEdges(s, d), "item_a", "item_b", canonical = true)))
-
-  /** Session-scoped memo of the deduped LSH candidate ID pairs over the
-    * embeddings corpus (default 8×8 tables/bits) — the threshold-
-    * INDEPENDENT blocking half shared by embed_neardup and embed_dbscan
-    * (both verify at cosine ≥ 0.35): each query still pays its own
-    * vector attach + exact-cosine verify + filter per run, so no query
-    * RESULT is ever memoized — only the block/dedup intermediate
-    * (round-13 optimization; [[graft.similarity.Ann.candidatePairs]]).
-    */
-  private val embCandMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def embCandidatePairs(s: SparkSession, d: String): DataFrame =
-    embCandMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.similarity.Ann.candidatePairs(Tables.embeddings(s, d))))
-
-  /** Session-scoped memo of the default-parameter MinHash signature
-    * relation (doc_id, 32-hash signature) over the raw documents corpus
-    * — the threshold/band-INDEPENDENT prefix shared by the six
-    * chunk-co-resident dedup queries that each re-shingled and re-hashed
-    * the full corpus per execution (dedup_minhash, dedup_clusters,
-    * dedup_clusters_star, dedup_survivors, dedup_best_survivors,
-    * dedup_eval — round-14 optimization). Each query still pays its own
-    * band explode + self-join + estimate + threshold (and
-    * its cluster contraction / survivor pick / eval joins) per
-    * invocation, so no query RESULT is memoized. Accurate-stats
-    * checkpoint: the relation feeds self-joins downstream.
-    */
-  private val dedupSigsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def dedupSigs(s: SparkSession, d: String): DataFrame =
-    dedupSigsMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointedAccurate(
-        graft.dedup.Dedup.minhashSignatures(Tables.documents(s, d),
-          shingleN = 3, numHashes = 32)))
-
-  /** Session-scoped memo of the curation prefix — quality-gated,
-    * exact-deduped documents (default minQuality) — shared by
-    * pipeline_curate and pipeline_corpus_prep, which both start from
-    * this full-corpus scan + score + hash-dedup before diverging into
-    * their own near-dup vote / sampling / vocab / encode / pack stages
-    * (round-13 optimization; [[graft.pipeline.Curation.exactDedupedQuality]]).
-    */
-  private val curateExactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def curateExact(s: SparkSession, d: String): DataFrame =
-    curateExactMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.pipeline.Curation.exactDedupedQuality(Tables.documents(s, d))))
-
-  /** Session-scoped memo of the trained Naive-Bayes source model
-    * (classes + likelihoods over the doc_id %5 ≠ 0 split) shared by
-    * text_nb_classify and text_nb_eval — the eval re-ran the whole train
-    * side before round 13. Each query still tokenizes and scores its own
-    * held-out split per invocation.
-    */
-  private val nbModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def nbModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    nbModelMemo.computeIfAbsent((s, d), _ => {
-      val (classes, lik) =
-        graft.text.NaiveBayes.trainBySource(Tables.documents(s, d))
-      (graft.Caching.checkpointed(classes), graft.Caching.checkpointed(lik))
-    })
-
-  /** Session-scoped memo of the BM25 posting index shared by
-    * text_bm25_topk and text_prf_topk (identical index build; each query
-    * keeps its own query-term derivation + ranking per invocation).
-    */
-  private val bm25PostingMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bm25Posting(s: SparkSession, d: String): DataFrame =
-    bm25PostingMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.text.Bm25.bm25Posting(Tables.documents(s, d))))
-
-  /** Session-scoped memo of the 3-round LPA label map (id, lbl) over the
-    * co-bought graph — q_label_prop and q_modularity run the IDENTICAL
-    * propagation rounds over the identical relation; one session pays
-    * them once (round-13 optimization). `lpaLabelMap` returns the final
-    * round checkpointed, so the memo holds a clearCache-surviving leaf.
-    */
-  private val lpaLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaLabelsMemo.computeIfAbsent((s, d), _ =>
-      graft.analytics.LabelProp.lpaLabelMap(
-        coBoughtSym(s, d), "item_a", "item_b", symmetric = true))
-
-  /** Session-scoped memo of the trained unigram-LM model (piece, cnt,
-    * p_nano) — bounded driver state (≤ alphabet + 40 rows), shared by the
-    * encode and fertility queries so EM runs once per (session, dir),
-    * not once per query.
-    */
-  private val unigramMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Long, Long)]]()
   private def unigramProbs(s: SparkSession, d: String): Seq[(String, Long, Long)] =
-    unigramMemo.computeIfAbsent((s, d), _ =>
-      graft.text.Unigram.finalProbs(Tables.documents(s, d)))
+    graft.text.Unigram.finalProbs(Tables.documents(s, d))
 
-  /** Session-scoped memo of the HyperANF N(t) curve — rounds+1 DECIMAL
-    * scalars (bounded model state), shared by the effective-diameter
-    * and spid queries so the register iteration runs once per
-    * (session, dir).
+  /** The HyperANF N(t) curve — rounds+1 DECIMAL scalars (bounded model
+    * state) the effective-diameter and spid queries read.
     */
-  private val hanfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[java.math.BigDecimal]]()
   private def hanfCurve(s: SparkSession, d: String): Seq[java.math.BigDecimal] =
-    hanfMemo.computeIfAbsent((s, d), _ =>
-      graft.analytics.HyperAnf.nfCurve(
-        coBoughtSym(s, d), "item_a", "item_b", rounds = 4, symmetric = true))
+    graft.analytics.HyperAnf.nfCurve(
+      coBoughtSym(s, d), "item_a", "item_b", rounds = 4, symmetric = true)
 
-  /** Item incidence counts + basket count shared by the market-basket /
-    * item-CF pair (same memo contract).
+  /** Item incidence counts + basket count of the market-basket / item-CF
+    * pair.
     */
-  private val itemStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
   private def basketItemStats(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    itemStatsMemo.computeIfAbsent((s, d), _ =>
-      graft.analytics.Baskets.itemStats(
-        Tables.lineitem(s, d), "l_orderkey", "l_partkey"))
+    graft.analytics.Baskets.itemStats(
+      Tables.lineitem(s, d), "l_orderkey", "l_partkey")
 
-  /** Same memo contract for the DIRECTED distinct customer→supplier
-    * purchase graph shared by q_hits / q_pagerank / q_ppr: all three
-    * rank the same bipartite relation, so the lineitem⋈orders distinct
-    * build runs once per (session, dir). PageRank/PPR symmetrize it
-    * without any further distinct (parity disjointness —
+  /** The DIRECTED distinct customer→supplier purchase graph that q_hits,
+    * q_pagerank and q_ppr rank. PageRank/PPR symmetrize it without any
+    * further distinct (parity disjointness —
     * [[graft.analytics.PageRank.symmetrized]]).
     */
-  private val purchaseMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def purchaseEdges(s: SparkSession, d: String): DataFrame =
-    purchaseMemo.computeIfAbsent((s, d), _ =>
-      graft.Caching.checkpointed(
-        graft.analytics.PageRank.directedPurchaseEdges(
-          Tables.lineitem(s, d), Tables.orders(s, d))))
+    graft.Caching.checkpointed(
+      graft.analytics.PageRank.directedPurchaseEdges(
+        Tables.lineitem(s, d), Tables.orders(s, d)))
 
-  /** q_pagerank and q_ppr additionally share the degree-attached walk
-    * state derived from the symmetric relation — the (edgesDeg, deg)
-    * pair [[graft.analytics.PageRank.prepareWalk]] would otherwise
-    * rebuild per query. Checkpointed for the same clearCache-survival
-    * reason as the edge memos.
+  /** The degree-attached walk state (edgesDeg, deg) of q_pagerank and
+    * q_ppr, derived from the symmetric purchase relation
+    * ([[graft.analytics.PageRank.prepareWalk]]'s shape). Checkpointed so
+    * each iteration's plan starts from LogicalRDD leaves.
     */
-  private val purchaseWalkMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private def purchaseWalk(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    purchaseWalkMemo.computeIfAbsent((s, d), _ => {
-      import org.apache.spark.sql.functions.{count, lit}
-      val sym = graft.Caching.checkpointed(
-        graft.analytics.PageRank.symmetrized(purchaseEdges(s, d)))
-      val deg = graft.Caching.checkpointed(
-        sym.groupBy("src").agg(count(lit(1)).as("od")))
-      (graft.Caching.checkpointed(sym.join(deg, "src")), deg)
-    })
+  private def purchaseWalk(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.count
+    val sym = graft.Caching.checkpointed(
+      graft.analytics.PageRank.symmetrized(purchaseEdges(s, d)))
+    val deg = graft.Caching.checkpointed(
+      sym.groupBy("src").agg(count(lit(1)).as("od")))
+    (graft.Caching.checkpointed(sym.join(deg, "src")), deg)
+  }
 
   /** One entry per implemented operator group from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -651,8 +503,8 @@ object SparkEntry {
     "text_fertility" -> ((s, d) =>
       graft.text.Bpe.fertilityBySource(Tables.documents(s, d), bpeMerges)),
     // --- unigram-LM (SentencePiece) tokenizer: the OTHER family beside BPE.
-    // Train runs the distributed 2-round hard-EM; encode/fertility share ONE
-    // session-memoized trained model instead of re-running EM per query ---
+    // Train runs the distributed 2-round hard-EM; encode/fertility train
+    // the driver-local model (unigramProbs) and apply it ---
     "text_unigram_train" -> ((s, d) =>
       graft.text.Unigram.trainVocab(Tables.documents(s, d))),
     "text_unigram_encode" -> ((s, d) =>
@@ -675,8 +527,7 @@ object SparkEntry {
     "text_heaps_law"   -> ((s, d) => TextOps.heapsLaw(Tables.documents(s, d))),
     // --- deduplication (north star) ---
     "dedup_exact"         -> ((s, d) => Dedup.exactDedup(Tables.documents(s, d))),
-    "dedup_minhash"       -> ((s, d) => Dedup.minhashDedup(Tables.documents(s, d),
-      sigsPre = Some(dedupSigs(s, d)))),
+    "dedup_minhash"       -> ((s, d) => Dedup.minhashDedup(Tables.documents(s, d))),
     // --- incremental dedup: new batch (doc_id%5=0) probes the corpus index ---
     "dedup_incremental"   -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -687,17 +538,14 @@ object SparkEntry {
     "dedup_ngram_jaccard" -> ((s, d) =>
       Dedup.ngramJaccard(Tables.documents(s, d), threshold = 0.5)),
     "dedup_clusters" -> ((s, d) =>
-      Dedup.dupClusters(Dedup.minhashDedup(Tables.documents(s, d),
-        sigsPre = Some(dedupSigs(s, d))))),
+      Dedup.dupClusters(Dedup.minhashDedup(Tables.documents(s, d)))),
     // same labelling via large/small-star contraction (the O(log n)-round
     // scale path) — oracled against the same recursive CTE
     "dedup_clusters_star" -> ((s, d) =>
-      Dedup.dupClustersStar(Dedup.minhashDedup(Tables.documents(s, d),
-        sigsPre = Some(dedupSigs(s, d))))),
+      Dedup.dupClustersStar(Dedup.minhashDedup(Tables.documents(s, d)))),
     "dedup_survivors" -> ((s, d) =>
       Dedup.clusterSurvivors(
-        Dedup.dupClusters(Dedup.minhashDedup(Tables.documents(s, d),
-          sigsPre = Some(dedupSigs(s, d)))))),
+        Dedup.dupClusters(Dedup.minhashDedup(Tables.documents(s, d))))),
     // split by near-dup CLUSTER so eval never holds a soft copy of train
     "q_leakage_split" -> ((s, d) =>
       graft.pipeline.Splits.leakageSafeSplit(Tables.documents(s, d))),
@@ -705,8 +553,7 @@ object SparkEntry {
     "dedup_best_survivors" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.clusterSurvivorsBy(
-        Dedup.dupClusters(Dedup.minhashDedup(docs,
-          sigsPre = Some(dedupSigs(s, d)))),
+        Dedup.dupClusters(Dedup.minhashDedup(docs)),
         TextOps.quality(docs).select(col("doc_id"), col("quality_score")),
         "quality_score")
     }),
@@ -719,25 +566,20 @@ object SparkEntry {
         minShared = 2)
     }),
     // BM25 lexical search top-k (micro-unit exact score sums)
-    "text_bm25_topk" -> ((s, d) => graft.text.Bm25.topK(Tables.documents(s, d),
-      posting = Some(bm25Posting(s, d)))),
+    "text_bm25_topk" -> ((s, d) => graft.text.Bm25.topK(Tables.documents(s, d))),
     // --- Rocchio/RM3 pseudo-relevance-feedback expanded retrieval ---
-    "text_prf_topk" -> ((s, d) => graft.text.Bm25.prfTopK(Tables.documents(s, d),
-      postingPre = Some(bm25Posting(s, d)))),
+    "text_prf_topk" -> ((s, d) => graft.text.Bm25.prfTopK(Tables.documents(s, d))),
     // --- hybrid retrieval: RRF fusion of BM25 + dense cosine ranks ---
     "q_hybrid_rrf" -> ((s, d) => graft.pipeline.Retrieval.hybridTopK(
-      Tables.documents(s, d), Tables.embeddings(s, d),
-      posting = Some(bm25Posting(s, d)))),
+      Tables.documents(s, d), Tables.embeddings(s, d))),
     // unigram LM quality scoring (CCNet-style perplexity filter)
     "text_lm_score" -> ((s, d) => graft.text.Bm25.unigramLogprob(Tables.documents(s, d))),
     // --- multinomial Naive Bayes source classifier on the 20% holdout ---
     "text_nb_classify" -> ((s, d) =>
-      graft.text.NaiveBayes.classifyBySource(Tables.documents(s, d),
-        model = Some(nbModel(s, d)))),
+      graft.text.NaiveBayes.classifyBySource(Tables.documents(s, d))),
     // --- per-class P/R/F1 margins of the NB classifier ---
     "text_nb_eval" -> ((s, d) =>
-      graft.text.NaiveBayes.evaluateBySource(Tables.documents(s, d),
-        model = Some(nbModel(s, d)))),
+      graft.text.NaiveBayes.evaluateBySource(Tables.documents(s, d))),
     // --- kNN majority-vote label classification of the embedding holdout ---
     "embed_knn_classify" -> ((s, d) =>
       graft.similarity.Ann.knnClassify(Tables.embeddings(s, d))),
@@ -780,8 +622,7 @@ object SparkEntry {
     "embed_semdedup" -> ((s, d) => Ann.semDedup(Tables.embeddings(s, d))),
     // synthetic corpus peaks near cosine 0.5 → 0.35 keeps output non-empty
     "embed_neardup"  -> ((s, d) =>
-      Ann.nearDupPairs(Tables.embeddings(s, d), threshold = 0.35,
-        candidates = Some(embCandidatePairs(s, d)))),
+      Ann.nearDupPairs(Tables.embeddings(s, d), threshold = 0.35)),
     // hard negatives: informative-but-not-duplicate band below the
     // near-dup ceiling (contrastive-training curriculum)
     "embed_hard_negatives" -> ((s, d) =>
@@ -847,8 +688,7 @@ object SparkEntry {
         .orderBy(desc("weight_micro"), col("doc_id")).limit(50)),
     // --- end-to-end curation composite (quality → dedup → near-dup → sample) ---
     "pipeline_curate" -> ((s, d) =>
-      graft.pipeline.Curation.curate(Tables.documents(s, d),
-        exactPre = Some(curateExact(s, d)))),
+      graft.pipeline.Curation.curate(Tables.documents(s, d))),
     // --- cross-modal curation manifest: text MinHash losers + the
     // image/audio/video perceptual near-dup losers pivoted into one
     // keep/drop flag row per document (round-7 verdict #6) ---
@@ -859,8 +699,7 @@ object SparkEntry {
       graft.operators.Packing.packSequences(Tables.documents(s, d))),
     // --- the whole corpus→sequences pipeline, differentially checked ---
     "pipeline_corpus_prep" -> ((s, d) =>
-      graft.pipeline.Curation.prepareCorpus(Tables.documents(s, d),
-        exactPre = Some(curateExact(s, d)))),
+      graft.pipeline.Curation.prepareCorpus(Tables.documents(s, d))),
     // --- market-basket lift: co-bought part pairs, exact integer lift ---
     "q_market_basket" -> ((s, d) => {
       val (itemCnt, nBaskets) = basketItemStats(s, d)
@@ -878,8 +717,7 @@ object SparkEntry {
     // triple join - a real differential) ---
     "q_ktruss" -> ((s, d) =>
       graft.analytics.Triangles.kTruss(
-        coBoughtEdges(s, d), "item_a", "item_b", canonical = true,
-        initialSupport = Some(trussSupport(s, d)))),
+        coBoughtEdges(s, d), "item_a", "item_b", canonical = true)),
     // --- k-truss peeled to FIXPOINT (unchanged-count early exit): the
     // TRUE maximal 4-truss, not a bounded demonstration. maxRounds is
     // TIED to the oracle unroll (ktrussOracleRounds threshold rounds +
@@ -889,8 +727,7 @@ object SparkEntry {
     "q_ktruss_converged" -> ((s, d) =>
       graft.analytics.Triangles.kTrussConverged(
         coBoughtEdges(s, d), "item_a", "item_b", canonical = true,
-        maxRounds = ktrussOracleRounds + 1, requireConverged = true,
-        initialSupport = Some(trussSupport(s, d)))),
+        maxRounds = ktrussOracleRounds + 1, requireConverged = true)),
     // --- per-part local clustering coefficient over the co-bought graph ---
     "q_clustering_coef" -> ((s, d) =>
       graft.analytics.Triangles.clusteringCoefficient(
@@ -898,12 +735,11 @@ object SparkEntry {
     // --- deterministic synchronous LPA communities over the same graph ---
     "q_label_prop" -> ((s, d) =>
       graft.analytics.LabelProp.labelPropagation(
-        coBoughtSym(s, d), "item_a", "item_b", symmetric = true,
-        labelMap = Some(lpaLabels(s, d)))),
+        coBoughtSym(s, d), "item_a", "item_b", symmetric = true)),
     // --- multi-source BFS hop distance from the top-degree hubs ---
     // NOTE (round 13): bfs/harmonic/betweenness/hyperball KEEP the
-    // per-query canonical materialize — switching them to the shared
-    // checkpointed sym relation was tried and REVERTED: their frontier
+    // canonical materialize — switching them to the checkpointed sym
+    // relation (coBoughtSym) was tried and REVERTED: their frontier
     // rounds' post-shuffle stages collapsed to 2 AQE-coalesced tasks
     // against the LogicalRDD-leaf edge relation and the four queries
     // measured 1.4-2.3x SLOWER (bench 2026-08-19; A/B details in
@@ -928,8 +764,7 @@ object SparkEntry {
     // --- Newman modularity of the LPA partition (one exact expression) ---
     "q_modularity" -> ((s, d) =>
       graft.analytics.LabelProp.modularity(
-        coBoughtSym(s, d), "item_a", "item_b", symmetric = true,
-        labelMap = Some(lpaLabels(s, d)))),
+        coBoughtSym(s, d), "item_a", "item_b", symmetric = true)),
     // --- bounded k-core peeling over the co-bought graph ---
     "q_kcore" -> ((s, d) =>
       graft.analytics.GraphStats.kCore(
@@ -974,8 +809,7 @@ object SparkEntry {
       Breadth5.survivalCurve(Tables.orders(s, d))),
     // --- nDCG@10 of the BM25 ranking vs source/lang graded relevance ---
     "q_ndcg" -> ((s, d) =>
-      Breadth5.ndcgAtK(Tables.documents(s, d),
-        posting = Some(bm25Posting(s, d)))),
+      Breadth5.ndcgAtK(Tables.documents(s, d))),
     // --- reliability bins + Brier score: balance score vs repeat label ---
     "q_calibration" -> ((s, d) =>
       Breadth5.calibrationBins(Tables.customer(s, d), Tables.orders(s, d))),
@@ -992,8 +826,7 @@ object SparkEntry {
         coBoughtEdges(s, d), "item_a", "item_b", canonical = true)),
     // --- MAP@10 / MRR of the BM25 ranking (binary source relevance) ---
     "q_map_mrr" -> ((s, d) =>
-      Breadth5.mapMrrAtK(Tables.documents(s, d),
-        posting = Some(bm25Posting(s, d)))),
+      Breadth5.mapMrrAtK(Tables.documents(s, d))),
     // --- Jensen-Shannon divergence: each source vs the corpus ---
     "text_jsd" -> ((s, d) =>
       graft.text.Divergence.sourceTokenJsd(Tables.documents(s, d))),
@@ -1017,7 +850,7 @@ object SparkEntry {
       graft.analytics.Drift.wassersteinDrift(Tables.documents(s, d))),
     // --- LSH audit: precision/recall of banded MinHash vs exact Jaccard ---
     "dedup_eval" -> ((s, d) =>
-      Dedup.lshEval(Tables.documents(s, d), sigsPre = Some(dedupSigs(s, d)))),
+      Dedup.lshEval(Tables.documents(s, d))),
     // --- TextRank keywords: PageRank over the word co-occurrence graph ---
     "text_textrank" -> ((s, d) =>
       graft.text.TextRank.keywords(Tables.documents(s, d))),
@@ -1141,8 +974,7 @@ object SparkEntry {
     }),
     // --- DBSCAN density clustering over embeddings (LSH blocks + components) ---
     "embed_dbscan" -> ((s, d) =>
-      graft.similarity.Dbscan.dbscan(Tables.embeddings(s, d),
-        candidates = Some(embCandidatePairs(s, d)))),
+      graft.similarity.Dbscan.dbscan(Tables.embeddings(s, d))),
     // --- incremental view maintenance: monthly agg updated from a CDC delta ---
     // updates are delete(before-image)+insert(after-image) pairs; the
     // oracle RECOMPUTES the view from the merged snapshot, so the hash

@@ -157,8 +157,7 @@ object Baskets {
     * distinct by construction), `c_pair >= minSupport` recovers the
     * Apriori-pruned pair relation losslessly (c_pair ≤ min(c_a, c_b),
     * so no pair of an infrequent item survives the filter), and
-    * `10^6 div c_pair` is the SSSP affinity weight. Build it once per
-    * (session, input) and share ([[graft.SparkEntry]] memo).
+    * `10^6 div c_pair` is the SSSP affinity weight.
     *
     * NOTE the `maxBasketSize` explode guard applies to FULL baskets
     * (distinct items, before any frequency prune) — the one semantic

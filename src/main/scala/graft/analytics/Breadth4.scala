@@ -159,7 +159,7 @@ object Breadth4 {
     * since |edges| is unbounded at corpus scale.
     *
     * `edges` must be the canonical DISTINCT (src < dst) half-edge
-    * relation (the session-shared co-bought cache).
+    * relation (the co-bought edges `SparkEntry` builds).
     *
     * ADAPTIVE PAIR-EXCHANGE WIDTH (round 11): the exchange-first shape
     * moves |wedges| rows through one hash exchange, and |wedges| grows

@@ -169,10 +169,9 @@ object Breadth5 {
     * against the corpus once (O(corpus × nQueries)); IDCG needs only
     * per-level counts — never a global sort of the corpus per query.
     */
-  def ndcgAtK(documents: DataFrame, k: Int = 10, nQueries: Int = 10,
-              posting: Option[DataFrame] = None): DataFrame = {
+  def ndcgAtK(documents: DataFrame, k: Int = 10, nQueries: Int = 10): DataFrame = {
     require(k >= 1 && k <= DiscountNano.size, s"k must be in 1..${DiscountNano.size}")
-    val ranked = graft.text.Bm25.topK(documents, k, nQueries, posting)
+    val ranked = graft.text.Bm25.topK(documents, k, nQueries)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val attrs = documents.select(col("doc_id"), col("source"), col("lang"))
     val qa = attrs.filter(col("doc_id") < nQueries)
@@ -285,9 +284,8 @@ object Breadth5 {
     * rows. MAP itself is the mean of ap_nano over queries — left to the
     * caller, since the per-query rows are the informative artifact.
     */
-  def mapMrrAtK(documents: DataFrame, k: Int = 10, nQueries: Int = 10,
-                posting: Option[DataFrame] = None): DataFrame = {
-    val ranked = graft.text.Bm25.topK(documents, k, nQueries, posting)
+  def mapMrrAtK(documents: DataFrame, k: Int = 10, nQueries: Int = 10): DataFrame = {
+    val ranked = graft.text.Bm25.topK(documents, k, nQueries)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val attrs = documents.select(col("doc_id"), col("source"))
     val qa = attrs.filter(col("doc_id") < nQueries)

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * as soon as the symmetric relation is materialized.
   *
   * When the producer already guarantees DISTINCT canonical (u < v)
-  * pairs from a materialized relation (e.g. the session-shared
-  * co-bought edge cache in `SparkEntry`), pass `canonical = true`:
+  * pairs from a materialized relation (e.g. the checkpointed
+  * co-bought edges in `SparkEntry`), pass `canonical = true`:
   * the union of such a relation with its swap is automatically
   * distinct (u < v on one branch, u > v on the other, never u = v),
   * so the full-relation distinct shuffle — the widest exchange in the
@@ -32,12 +32,9 @@ import org.apache.spark.sql.functions._
 object GraphEdges {
 
   /** `symmetric = true`: the input ALREADY is the materialized symmetric
-    * distinct relation (e.g. the session-shared checkpointed co-bought
-    * sym cache in `SparkEntry`) — return it projected/cast only, with no
-    * per-query re-materialization. Round-13 optimization: eight graph
-    * queries each re-persisted + counted the identical 2|E| relation on
-    * every execution; a session computing several statistics over ONE
-    * graph symmetrizes it once.
+    * distinct relation (e.g. the checkpointed symmetric co-bought
+    * relation in `SparkEntry`) — return it projected/cast only, with no
+    * second materialization.
     */
   def symmetricDistinct(edges: DataFrame, srcCol: String, dstCol: String,
                         canonical: Boolean = false,

@@ -66,9 +66,8 @@ object Hits {
       PageRank.directedPurchaseEdges(lineitem, orders)), rounds, renormEachRound)
 
   /** [[hits]] over a prebuilt DIRECTED distinct (src, dst) purchase-edge
-    * relation the caller has already materialized/checkpointed — the
-    * session-shared-graph entry point ([[PageRank.directedPurchaseEdges]]
-    * is the matching builder).
+    * relation the caller has already materialized/checkpointed
+    * ([[PageRank.directedPurchaseEdges]] is the matching builder).
     */
   def hitsOnEdges(edges: DataFrame, rounds: Int = 3,
                   renormEachRound: Boolean = false): DataFrame = {

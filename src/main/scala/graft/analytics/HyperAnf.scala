@@ -391,9 +391,8 @@ object HyperAnf {
     effectiveDiameterFromCurve(edges.sparkSession,
       nfCurve(edges, srcCol, dstCol, rounds, canonical))
 
-  /** Build the d90 view from an already-computed curve — the session
-    * shares ONE register iteration between this and [[distanceStats]]
-    * (the trained-model memo pattern).
+  /** Build the d90 view from an already-computed curve, so one register
+    * iteration can feed both this and [[distanceStats]].
     */
   def effectiveDiameterFromCurve(spark: org.apache.spark.sql.SparkSession,
                                  curve: Seq[java.math.BigDecimal]): DataFrame = {

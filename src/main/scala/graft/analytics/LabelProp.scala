@@ -36,19 +36,16 @@ object LabelProp {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 3, canonical: Boolean = false,
-                       symmetric: Boolean = false,
-                       labelMap: Option[DataFrame] = None): DataFrame = {
+                       symmetric: Boolean = false): DataFrame = {
     // symmetric distinct edge relation — materialized once, consumed by
     // every round's join; built via the half-edge-cached union so the
     // upstream pipeline runs once, not once per union branch
     // (canonical = true: input is already distinct u < v pairs, skip the
     // symmetrization distinct; symmetric = true: input IS the shared
     // materialized sym relation — see GraphEdges)
-    val labels = labelMap.getOrElse {
-      val e = GraphEdges.symmetricDistinct(edges, srcCol, dstCol, canonical,
-        symmetric)
-      assignments(e, rounds)
-    }
+    val e = GraphEdges.symmetricDistinct(edges, srcCol, dstCol, canonical,
+      symmetric)
+    val labels = assignments(e, rounds)
     val out = labels.select(col("id").as("node"), col("lbl").as("community"))
     val sizes = out.groupBy("community").agg(count(lit(1)).as("n_members"))
     out.join(sizes, "community").select("node", "community", "n_members")
@@ -97,22 +94,6 @@ object LabelProp {
       .select(col("id"), col("m.lbl").as("lbl"))
   }
 
-  /** The session-shareable LPA label map (id, lbl): build ONCE per
-    * (session, graph) and pass to both [[labelPropagation]] and
-    * [[modularity]] via `labelMap` — the two declared queries run the
-    * identical `rounds` propagation rounds over the identical relation,
-    * so a session computing both pays the rounds once (round-13
-    * optimization; same memo discipline as the co-bought edge cache).
-    * Returned CHECKPOINTED ([[assignments]]); the caller owns its
-    * lifetime.
-    */
-  def lpaLabelMap(edges: DataFrame, srcCol: String, dstCol: String,
-                  rounds: Int = 3, canonical: Boolean = false,
-                  symmetric: Boolean = false): DataFrame =
-    assignments(
-      GraphEdges.symmetricDistinct(edges, srcCol, dstCol, canonical, symmetric),
-      rounds)
-
   /** Newman modularity of the LPA partition (Newman & Girvan, "Finding
     * and evaluating community structure in networks", Phys. Rev. E
     * 2004): Q = Σ_c [ m_c/m − (d_c/2m)² ] over communities c, with m_c
@@ -133,11 +114,10 @@ object LabelProp {
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  rounds: Int = 3, canonical: Boolean = false,
-                 symmetric: Boolean = false,
-                 labelMap: Option[DataFrame] = None): DataFrame = {
+                 symmetric: Boolean = false): DataFrame = {
     val e = GraphEdges.symmetricDistinct(edges, srcCol, dstCol, canonical,
       symmetric)
-    val labels = labelMap.getOrElse(assignments(e, rounds))
+    val labels = assignments(e, rounds)
     val lblE = e
       .join(labels.select(col("id").as("src"), col("lbl").as("la")), "src")
       .join(labels.select(col("id").as("dst"), col("lbl").as("lb")), "dst")

@@ -103,8 +103,7 @@ object PageRank {
       iters, checkpointEvery, tolUnits)
 
   /** [[pagerank]] over a prebuilt SYMMETRIC distinct edge relation
-    * (src, dst) that the caller has already materialized/checkpointed —
-    * the session-shared-graph entry point.
+    * (src, dst) that the caller has already materialized/checkpointed.
     */
   def pagerankOnEdges(edges: DataFrame, iters: Int = 5,
                       checkpointEvery: Int = 8, tolUnits: Long = -1L): DataFrame = {
@@ -144,7 +143,7 @@ object PageRank {
         (lit(teleport) + expr("(85 * s) div 100")).as("r"))
 
   /** [[pagerank]] over caller-prepared walk state ([[prepareWalk]] or a
-    * session-shared checkpointed equivalent).
+    * checkpointed equivalent).
     */
   def pagerankPrepared(edgesDeg: DataFrame, deg: DataFrame, iters: Int = 5,
                        checkpointEvery: Int = 8, tolUnits: Long = -1L): DataFrame = {

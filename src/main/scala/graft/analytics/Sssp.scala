@@ -36,7 +36,7 @@ object Sssp {
       Baskets.coOccurrenceCounts(basketItems, basketCol, itemCol))
 
   /** The affinity-weight projection over a prebuilt
-    * [[Baskets.coOccurrenceCounts]] relation (the session-shared base).
+    * [[Baskets.coOccurrenceCounts]] relation.
     */
   def affinityEdgesFromCounts(counts: DataFrame): DataFrame =
     counts.select(col("item_a").cast("long").as("src"),

@@ -114,7 +114,6 @@ object Triangles {
   def kTruss(edges: DataFrame, uCol: String, vCol: String, k: Int = 4,
              rounds: Int = 2, canonical: Boolean = false,
              maxDeltaBroadcast: Long = 1000000L,
-             initialSupport: Option[DataFrame] = None,
              maxDeltaDistributed: Long = 64000000L): DataFrame = {
     require(k >= 3 && rounds >= 1, "k-truss needs k >= 3 and rounds >= 1")
     // the bounded peel ALSO runs on the incremental loop (one full
@@ -123,8 +122,7 @@ object Triangles {
     // the early fixpoint exit is idempotence-safe for a bounded count —
     // output is identical to the full-recompute reference (spec-pinned)
     peelIncremental(canonicalEdges(edges, uCol, vCol, canonical), k, rounds,
-      maxDeltaBroadcast, initialSupport = initialSupport,
-      maxDeltaDistributed = maxDeltaDistributed)
+      maxDeltaBroadcast, maxDeltaDistributed = maxDeltaDistributed)
   }
 
   /** Full-recompute bounded peel — the differential reference for the
@@ -154,30 +152,10 @@ object Triangles {
                       canonical: Boolean = false,
                       maxDeltaBroadcast: Long = 1000000L,
                       requireConverged: Boolean = false,
-                      initialSupport: Option[DataFrame] = None,
                       maxDeltaDistributed: Long = 64000000L): DataFrame = {
     require(k >= 3 && maxRounds >= 1, "k-truss needs k >= 3 and maxRounds >= 1")
     peelIncremental(canonicalEdges(edges, uCol, vCol, canonical), k, maxRounds,
-      maxDeltaBroadcast, requireConverged, initialSupport, maxDeltaDistributed)
-  }
-
-  /** The round-1 whole-graph support relation (u, v, sup) the incremental
-    * peel starts from: canonical edges inner-joined to their triangle
-    * support (edges in no triangle are absent — correctly dropped by the
-    * first threshold since k ≥ 3 ⇒ threshold ≥ 1).
-    *
-    * Exposed (round 13, optimization) so a session computing BOTH the
-    * bounded and the converged truss over the SAME graph can build this —
-    * the peel's single most expensive stage, one full degree-oriented
-    * triangle enumeration — once and pass it to each query via
-    * `initialSupport` (the same session-memo discipline as the co-bought
-    * edge cache). The caller owns the returned relation's lifetime; the
-    * peel never releases an injected initial support.
-    */
-  def initialSupportRelation(edges: DataFrame, uCol: String, vCol: String,
-                             canonical: Boolean = false): DataFrame = {
-    val e0 = canonicalEdges(edges, uCol, vCol, canonical)
-    e0.join(support(e0), Seq("u", "v"))
+      maxDeltaBroadcast, requireConverged, maxDeltaDistributed)
   }
 
   /** The full-recompute converged peel — the differential REFERENCE for
@@ -363,19 +341,13 @@ object Triangles {
   private def peelIncremental(e0: DataFrame, k: Int, maxRounds: Int,
                               maxDeltaBroadcast: Long = 1000000L,
                               requireConverged: Boolean = false,
-                              initialSupport: Option[DataFrame] = None,
                               maxDeltaDistributed: Long = 64000000L)
       : DataFrame = {
     val thr = k - 2
     // invariant: cur = (u, v, sup) — the current graph's edges with their
     // EXACT in-graph support (edges in no triangle have no sup row in
     // round 1 and are correctly dropped: k ≥ 3 ⇒ threshold ≥ 1).
-    // An injected initialSupport (session-shared, already checkpointed)
-    // is NOT owned by this peel: it must survive for the next caller, so
-    // it is never released below (ownsCur flips once round 1 replaces it)
-    var cur = initialSupport.getOrElse(
-      graft.Caching.checkpointed(e0.join(support(e0), Seq("u", "v"))))
-    var ownsCur = initialSupport.isEmpty
+    var cur = graft.Caching.checkpointed(e0.join(support(e0), Seq("u", "v")))
     var out: DataFrame = null
     var r = 0
     val spark = e0.sparkSession
@@ -467,8 +439,7 @@ object Triangles {
             }
           }
         val nextC = graft.Caching.checkpointed(next)
-        if (ownsCur) graft.Caching.releaseCheckpoint(cur)
-        ownsCur = true
+        graft.Caching.releaseCheckpoint(cur)
         cur = nextC
       }
     }

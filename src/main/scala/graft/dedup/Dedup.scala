@@ -173,21 +173,11 @@ object Dedup {
     * aggregate drops repeats and the only shuffle is the band join's.
     * `doc_id` is the documents' key: a repeated doc_id yields one pair row
     * per combination of its rows (nothing collapses them).
-    *
-    * `sigsPre` (round-14 optimization): a prebuilt [[minhashSignatures]]
-    * relation for EXACTLY this (documents, shingleN, numHashes) — the
-    * threshold/band-independent prefix a session running several dedup
-    * analyses over ONE corpus builds once (six chunk-co-resident queries
-    * each re-hashed the full corpus per execution). The caller owns the
-    * relation's params and lifetime; everything from the band explode on
-    * (self-join, estimate, threshold) still runs per invocation, so no
-    * query RESULT is memoized.
     */
   def minhashDedup(documents: DataFrame, shingleN: Int = 3, numHashes: Int = 32,
-                   bands: Int = 8, threshold: Double = 0.5,
-                   sigsPre: Option[DataFrame] = None): DataFrame = {
+                   bands: Int = 8, threshold: Double = 0.5): DataFrame = {
     requireThreshold(threshold)
-    val sigs = sigsPre.getOrElse(minhashSignatures(documents, shingleN, numHashes))
+    val sigs = minhashSignatures(documents, shingleN, numHashes)
 
     // persisted, NOT eagerly materialized: both sides of the band
     // self-join are the SAME projection of this relation, so Spark's
@@ -966,10 +956,9 @@ object Dedup {
     * Scale: runs the two existing bucketed pipelines (nothing all-pairs)
     * plus one pair-keyed semi-join and three 1-row broadcast aggregates.
     */
-  def lshEval(documents: DataFrame, threshold: Double = 0.5,
-              sigsPre: Option[DataFrame] = None): DataFrame = {
+  def lshEval(documents: DataFrame, threshold: Double = 0.5): DataFrame = {
     val pred = graft.Caching.materialize(
-      minhashDedup(documents, threshold = threshold, sigsPre = sigsPre)
+      minhashDedup(documents, threshold = threshold)
         .select("doc_a", "doc_b"))
     val truth = graft.Caching.materialize(
       ngramJaccard(documents, threshold = threshold).select("doc_a", "doc_b"))

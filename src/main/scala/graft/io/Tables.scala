@@ -336,38 +336,6 @@ object Tables {
     }
   }
 
-  /** Memoized scan split counts, keyed by (sessionUUID, path): the split
-    * count is a property of the file layout + the session's read conf,
-    * not of the consuming query, but reading it off `df.rdd` forces full
-    * physical planning + RDD lineage construction — a measurable
-    * per-call driver cost when every documents/embeddings load probes it
-    * (round-9 advice finding). First call per (session, path) pays the
-    * probe; the rest read the cache. Keys are (sessionUUID, path)
-    * STRINGS, not the session object, so stopped sessions are never
-    * pinned — and unlike an identity hash (which the JVM can reuse after
-    * a stopped session is GC'd) the UUID never aliases two sessions, so
-    * a new session with different read conf can't inherit a stale split
-    * count (round-10 advice finding). The residual entries are two boxed
-    * values per (session, fixture table) — bounded noise. Known, accepted staleness: rewriting the parquet
-    * at a memoized path within one session keeps the old split count
-    * (the driver fixtures are immutable; a rewriting caller should use a
-    * fresh session or the uncached overload).
-    */
-  private val scanSplits =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Stable per-session key for the split-count memo. Classic sessions
-    * carry a true UUID (`sessionUUID` — Scala-private[sql] but
-    * bytecode-public, hence the reflective read); any runtime without it
-    * falls back to the identity hash (same no-pinning property, with the
-    * documented reuse caveat — acceptable because such runtimes don't
-    * share this JVM-local memo across session restarts in practice).
-    */
-  private def sessionUuid(spark: SparkSession): String =
-    try spark.getClass.getMethod("sessionUUID").invoke(spark).toString
-    catch { case _: ReflectiveOperationException | _: ClassCastException =>
-      System.identityHashCode(spark).toHexString }
-
   /** documents/embeddings feed CPU-heavy PER-ROW stages (tokenization,
     * shingle/md5 chains, winnowing folds, codecs, vector arithmetic)
     * whose parallelism is otherwise capped by the SCAN's split count —
@@ -381,30 +349,19 @@ object Tables {
     * splits and this is a no-op — the condition, not the repartition,
     * is the contract.
     *
-    * `cacheKey = null` (caller-built relations whose split count is a
-    * property of the upstream plan, not a stable file layout) probes on
-    * every call; a non-null key memoizes the probe per session.
+    * The split count is probed (`df.rdd.getNumPartitions`) on every call,
+    * so a rewritten file layout is seen by the next read.
     */
-  private[graft] def cpuSpread(df: DataFrame, key: String,
-                               cacheKey: String = null): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
-    val splits =
-      if (cacheKey == null) df.rdd.getNumPartitions
-      // sessionUUID, not the session object (no pinning of stopped
-      // sessions) and not an identity hash (reusable after GC — a fresh
-      // session could silently inherit a stale split count)
-      else scanSplits.computeIfAbsent(
-        s"${sessionUuid(spark)}:$cacheKey",
-        _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue()
-    if (splits >= n) df
+  private[graft] def cpuSpread(df: DataFrame, key: String): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (df.rdd.getNumPartitions >= n) df
     else df.repartition(n, org.apache.spark.sql.functions.col(key))
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame  =
-    cpuSpread(table(spark, dir, "documents"), "doc_id", s"$dir/documents.parquet")
+    cpuSpread(table(spark, dir, "documents"), "doc_id")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    cpuSpread(table(spark, dir, "embeddings"), "vec_id", s"$dir/embeddings.parquet")
+    cpuSpread(table(spark, dir, "embeddings"), "vec_id")
 
   /** CSV source with an explicit schema. Schema inference is deliberately
     * not offered: at 100 TB inference costs an extra full scan and can

@@ -35,14 +35,7 @@ object Curation {
     * ([[graft.text.TextOps.qualityScore]]) filtered in place; the exact
     * dedup is one aggregation of the text digest ([[Dedup.exactDedup]])
     * semi-joined back on `doc_id`, the documents' key. A null doc_id never
-    * survives. Factored out (round-13 optimization) so
-    * a session running several curation composites over ONE corpus
-    * (pipeline_curate and pipeline_corpus_prep share this full-corpus
-    * scan + score + hash-dedup) builds it once and passes it via
-    * `exactPre` — each composite still runs its OWN near-dup vote,
-    * sampling, vocab/encode/pack per invocation, so only the shared
-    * intermediate is reused, never a query result. The caller owns the
-    * returned relation's lifetime.
+    * survives.
     */
   def exactDedupedQuality(documents: DataFrame,
                           minQuality: Double = 0.2): DataFrame = {
@@ -67,10 +60,7 @@ object Curation {
              nearDupThreshold: Double = 0.7,
              samplePerSource: Int = 1000000,
              langAllow: Seq[String] = Nil,
-             repetitionGate: Boolean = false,
-             exactPre: Option[DataFrame] = None): DataFrame = {
-    require(exactPre.isEmpty || (langAllow.isEmpty && !repetitionGate),
-      "exactPre is built without the optional gates; pass gates OR exactPre")
+             repetitionGate: Boolean = false): DataFrame = {
     require(samplePerSource >= 1, s"samplePerSource must be >= 1, got $samplePerSource")
     require(minQuality >= 0.0 && minQuality <= 1.0,
       s"minQuality must be in [0, 1], got $minQuality")
@@ -94,15 +84,13 @@ object Curation {
         "doc_id")
 
     // 1-2. quality gate + exact dedup (the shared prefix; see
-    // exactDedupedQuality). When self-built: persisted, because the
-    // minhash signatures and the anti-join below reference this relation
-    // twice, and each reference would otherwise re-derive the whole
-    // quality+dedup lineage (at cluster scale: a stage-boundary write;
-    // locally: MEMORY_AND_DISK). Caller may clearCache() after. An
-    // injected exactPre is already materialized by its owner.
-    val exact = exactPre.getOrElse(
-      exactDedupedQuality(base, minQuality)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // exactDedupedQuality). Persisted, because the minhash signatures
+    // and the anti-join below reference this relation twice, and each
+    // reference would otherwise re-derive the whole quality+dedup lineage
+    // (at cluster scale: a stage-boundary write; locally:
+    // MEMORY_AND_DISK). Caller may clearCache() after.
+    val exact = exactDedupedQuality(base, minQuality)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // 3. near-dup removal: minhash pairs vote out the larger doc_id (the
     // anti-join ignores a loser's repeats, so no distinct)
@@ -220,14 +208,12 @@ object Curation {
                     minQuality: Double = 0.2,
                     nearDupThreshold: Double = 0.7,
                     vocabSize: Int = 1 << 16,
-                    capacity: Int = 2048,
-                    exactPre: Option[DataFrame] = None): DataFrame = {
+                    capacity: Int = 2048): DataFrame = {
     // persisted, not eagerly materialized: the vocab build collects model
     // state (an action) before encode/pack consume the relation, so the
     // cache populates sequentially anyway — an extra materialize pass
     // measured ~1s slower at sf0.1 (see graft.Caching's doc)
-    val curated = curate(documents, minQuality, nearDupThreshold,
-        exactPre = exactPre)
+    val curated = curate(documents, minQuality, nearDupThreshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocabulary = TextOps.vocab(curated, vocabSize)
     val encoded = TextOps.encodeTokens(curated, vocabulary)

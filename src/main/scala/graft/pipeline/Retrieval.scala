@@ -30,9 +30,8 @@ object Retrieval {
     */
   def hybridTopK(documents: DataFrame, embeddings: DataFrame,
                  k: Int = 10, perSystem: Int = 20, kRrf: Int = 60,
-                 nQueries: Int = 10,
-                 posting: Option[DataFrame] = None): DataFrame = {
-    val lex = graft.text.Bm25.topK(documents, perSystem, nQueries, posting)
+                 nQueries: Int = 10): DataFrame = {
+    val lex = graft.text.Bm25.topK(documents, perSystem, nQueries)
       .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
     val dense = graft.similarity.Ann.bruteForceTopK(embeddings, perSystem, nQueries)
       .select(col("query_id"), col("vec_id").as("doc_id"), col("rank").as("dense_rank"))

@@ -1049,23 +1049,15 @@ object Ann {
   }
 
   /** Deduped LSH candidate ID pairs (vec_a < vec_b) — the block/dedup
-    * half of [[nearDupPairs]], factored out (round-13 optimization) for
-    * two reasons, both guide-§8 "decide with small rows, move big rows
-    * once":
-    *
-    *  - the bucket self-join and the pair dedup used to carry BOTH
-    *    64-dim double vectors (~1 KB/row) through every exchange; on ID
-    *    pairs the same shuffles move 16-24 B/row, and the materialized
-    *    bucket cache drops the vector column too (~25× narrower);
-    *  - the candidate relation is THRESHOLD-INDEPENDENT, so a session
-    *    running several same-family queries over one embedding corpus
-    *    (embed_neardup + embed_dbscan both verify at 0.35) builds it
-    *    once and each query re-runs only its own attach + exact-cosine
-    *    verify + filter (the memo shares an intermediate, never a query
-    *    result).
+    * half of [[nearDupPairs]], built on ID pairs per guide-§8 "decide
+    * with small rows, move big rows once": the bucket self-join and the
+    * pair dedup used to carry BOTH 64-dim double vectors (~1 KB/row)
+    * through every exchange; on ID pairs the same shuffles move
+    * 16-24 B/row, and the materialized bucket cache drops the vector
+    * column too (~25× narrower).
     */
-  def candidatePairs(embeddings: DataFrame, tables: Int = 8, bits: Int = 8,
-                     dim: Int = 64): DataFrame = {
+  private def candidatePairs(embeddings: DataFrame, tables: Int = 8, bits: Int = 8,
+                             dim: Int = 64): DataFrame = {
     val e = corpus(embeddings)
     // eagerly materialized: both sides of the bucket self-join are
     // CONCURRENT shuffle-map stages — a bare persist would let each
@@ -1088,10 +1080,9 @@ object Ann {
     * then exact cosine ≥ threshold. doc pairs ordered vec_a < vec_b.
     */
   def nearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
-                   tables: Int = 8, bits: Int = 8, dim: Int = 64,
-                   candidates: Option[DataFrame] = None): DataFrame = {
+                   tables: Int = 8, bits: Int = 8, dim: Int = 64): DataFrame = {
     val e = corpus(embeddings)
-    val cand = candidates.getOrElse(candidatePairs(embeddings, tables, bits, dim))
+    val cand = candidatePairs(embeddings, tables, bits, dim)
     // attach vectors to the DEDUPED id pairs only, exact-verify, filter:
     // the cosine evaluates once per distinct pair (the old shape paid it
     // per bucket-collision occurrence) and no wide vector row ever

@@ -36,10 +36,9 @@ import graft.dedup.Dedup
 object Dbscan {
 
   def dbscan(embeddings: DataFrame, eps: Double = 0.35, minPts: Int = 3,
-             tables: Int = 8, bits: Int = 8, dim: Int = 64,
-             candidates: Option[DataFrame] = None): DataFrame = {
+             tables: Int = 8, bits: Int = 8, dim: Int = 64): DataFrame = {
     require(minPts >= 1, "minPts must be >= 1")
-    val pairs = Ann.nearDupPairs(embeddings, eps, tables, bits, dim, candidates)
+    val pairs = Ann.nearDupPairs(embeddings, eps, tables, bits, dim)
       .select("vec_a", "vec_b")
     // sym feeds degree counting, core-edge construction, AND border
     // attachment — eagerly materialized so the whole LSH+verify pipeline

@@ -171,28 +171,14 @@ object Bm25 {
     * per query document (queries = doc_id < nQueries), scored by BM25
     * over the queries' distinct tokens. Self-matches excluded.
     */
-  def topK(documents: DataFrame, k: Int = 5, nQueries: Int = 10,
-           posting: Option[DataFrame] = None): DataFrame = {
-    val (p, toks) = posting match {
-      case Some(pp) => (pp, tokensOf(documents))
-      case None     => postingAndTokens(documents)
-    }
+  def topK(documents: DataFrame, k: Int = 5, nQueries: Int = 10): DataFrame = {
+    val (p, toks) = postingAndTokens(documents)
     val queryTerms = toks.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("query_id"), col("token")).distinct()
     rankedTopK(p, queryTerms, k)
       .select(col("query_id"), col("doc_id"), col("score_micro"),
         (col("score_micro").cast("double") / 1.0e6).as("score"), col("rank"))
   }
-
-  /** The (doc, token, micro-score) BM25 posting relation alone — the
-    * index-build half shared by text_bm25_topk and text_prf_topk, which
-    * both ranked over an identically-built index (round-13 optimization:
-    * a session builds the index once and passes it via `posting`; each
-    * query still derives its own query terms and runs its own ranking
-    * per invocation). Caller owns the returned relation's lifetime.
-    */
-  def bm25Posting(documents: DataFrame): DataFrame =
-    postingAndTokens(documents)._1
 
   /** The lowered non-empty (doc_id, token) explosion. */
   private def tokensOf(documents: DataFrame): DataFrame = documents
@@ -273,17 +259,11 @@ object Bm25 {
     * `n_query_terms` the expanded term-set size, constant per query.
     */
   def prfTopK(documents: DataFrame, k: Int = 5, fbDocs: Int = 5,
-              fbTerms: Int = 3, nQueries: Int = 10,
-              postingPre: Option[DataFrame] = None): DataFrame = {
+              fbTerms: Int = 3, nQueries: Int = 10): DataFrame = {
     require(k >= 1 && fbDocs >= 1 && fbTerms >= 0, "need positive depths")
-    // an injected posting (session-shared, checkpointed) is already
-    // materialized; the self-built one must be — three consumers
-    val (posting, toks) = postingPre match {
-      case Some(pp) => (pp, tokensOf(documents))
-      case None =>
-        val (postingRaw, t) = postingAndTokens(documents)
-        (graft.Caching.materialize(postingRaw), t)
-    }
+    // materialized: three consumers (first pass, term harvest, re-score)
+    val (postingRaw, toks) = postingAndTokens(documents)
+    val posting = graft.Caching.materialize(postingRaw)
     val queryTerms = toks.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("query_id"), col("token")).distinct()
     val fb = rankedTopK(posting, queryTerms, fbDocs)

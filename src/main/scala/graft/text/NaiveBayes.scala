@@ -50,14 +50,8 @@ object NaiveBayes {
 
   /** The trained NB model — (classes: cls, prior_micro, oov_micro;
     * lik: lcls, ltoken, lik_micro) over the doc_id % 5 ≠ 0 train split.
-    * Factored out (round-13 optimization) so a session running both the
-    * classifier AND its evaluation over one corpus (text_nb_classify +
-    * text_nb_eval — the eval re-ran the whole train side) trains once
-    * and passes the model via `model`; each query still tokenizes and
-    * scores its own held-out split per invocation. Caller owns the
-    * returned relations' lifetime.
     */
-  def trainBySource(documents: DataFrame): (DataFrame, DataFrame) = {
+  private def trainBySource(documents: DataFrame): (DataFrame, DataFrame) = {
     // the train explosion feeds FIVE independent model subtrees (class
     // docs, class totals, token counts, vocab stats) — materialized so
     // the tokenize pass runs once, not per consumer
@@ -102,11 +96,9 @@ object NaiveBayes {
     * non-empty doc; `score_micro` is the winning class's total log-score
     * in micro-units (prior + token likelihoods).
     */
-  def classifyBySource(documents: DataFrame,
-                       model: Option[(DataFrame, DataFrame)] = None)
-      : DataFrame = {
+  def classifyBySource(documents: DataFrame): DataFrame = {
     val test = tokensOf(documents).filter(col("doc_id") % 5 === 0)
-    val (classes, lik) = model.getOrElse(trainBySource(documents))
+    val (classes, lik) = trainBySource(documents)
 
     // score every held-out token under every class; absent (class, token)
     // pairs fall to the class OOV floor
@@ -147,12 +139,10 @@ object NaiveBayes {
     *
     * Output: (cls, n_true, n_pred, n_correct, precision, recall, f1).
     */
-  def evaluateBySource(documents: DataFrame,
-                       model: Option[(DataFrame, DataFrame)] = None)
-      : DataFrame = {
+  def evaluateBySource(documents: DataFrame): DataFrame = {
     // the scored relation feeds three margin aggregates — materialized
     // so the classify pipeline runs once
-    val scored = graft.Caching.materialize(classifyBySource(documents, model))
+    val scored = graft.Caching.materialize(classifyBySource(documents))
     val nTrue = scored.groupBy(col("source").as("cls"))
       .agg(count(lit(1)).as("n_true"))
     val nPred = scored.groupBy(col("pred").as("cls"))

@@ -256,10 +256,7 @@ object Unigram {
     encodeStatsWith(documents,
       finalProbs(documents, seedMultis, vocabMultis, rounds))
 
-  /** Viterbi-encode with an already-trained model (the session shares
-    * ONE trained model across the encode and fertility queries rather
-    * than re-running EM per query — the co-bought edge-cache pattern).
-    */
+  /** Viterbi-encode with an already-trained model ([[finalProbs]]). */
   def encodeStatsWith(documents: DataFrame,
                       probs: Seq[(String, Long, Long)]): DataFrame = {
     val pmap = map(probs.flatMap { case (p, _, nano) =>

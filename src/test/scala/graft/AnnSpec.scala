@@ -211,25 +211,6 @@ class AnnSpec extends AnyFunSuite {
     assert(!got.exists(p => p._1 >= 12L && p._2 >= 12L))
   }
 
-  test("near-dup pairs: injected shared candidates reproduce the default path") {
-    // the round-13 session-memo path: ONE checkpointed candidate relation
-    // feeds both the raw pair query and dbscan — outputs must equal the
-    // self-built path exactly (rows AND cosines)
-    val shared = graft.Caching.checkpointed(Ann.candidatePairs(planted))
-    val inj = Ann.nearDupPairs(planted, threshold = 0.95,
-      candidates = Some(shared)).collect().map(_.toSeq).toSet
-    val deflt = Ann.nearDupPairs(planted, threshold = 0.95)
-      .collect().map(_.toSeq).toSet
-    assert(inj === deflt)
-    val dInj = graft.similarity.Dbscan.dbscan(planted, eps = 0.95,
-      candidates = Some(shared)).collect().map(_.toSeq).toSet
-    val dDef = graft.similarity.Dbscan.dbscan(planted, eps = 0.95)
-      .collect().map(_.toSeq).toSet
-    assert(dInj === dDef)
-    graft.Caching.releaseCheckpoint(shared)
-    spark.catalog.clearCache()
-  }
-
   test("fixture corpus: brute force returns k rows per query") {
     val got = Ann.bruteForceTopK(Tables.embeddings(spark, sfDir), k = 5, nQueries = 10)
     assert(got.count() === 50)

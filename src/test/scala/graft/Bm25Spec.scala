@@ -25,24 +25,6 @@ class Bm25Spec extends AnyFunSuite {
     assert(ranked(10L) === 1, s"zebra doc must rank first: $ranked")
   }
 
-  test("injected shared posting reproduces topK and prfTopK default outputs") {
-    // round-13 session-memo path: ONE checkpointed index feeds both
-    // ranking queries; outputs must equal the self-built path exactly
-    val d = docs(
-      (0L, "alpha beta gamma delta"), (1L, "alpha beta common common"),
-      (2L, "gamma delta epsilon zeta"), (3L, "common common common alpha"),
-      (4L, "beta epsilon zeta alpha"), (5L, "delta gamma beta zeta"))
-    val shared = graft.Caching.checkpointed(Bm25.bm25Posting(d))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Bm25.topK(d, k = 3, nQueries = 2, posting = Some(shared)))
-      === rows(Bm25.topK(d, k = 3, nQueries = 2)))
-    assert(rows(Bm25.prfTopK(d, k = 3, nQueries = 2, postingPre = Some(shared)))
-      === rows(Bm25.prfTopK(d, k = 3, nQueries = 2)))
-    graft.Caching.releaseCheckpoint(shared)
-    spark.catalog.clearCache()
-  }
-
   test("scores are exact micro-unit sums: deterministic across partitioning") {
     val base = (1L to 200L).map(i =>
       i -> s"token${i % 7} token${i % 11} token${i % 13} filler common words")

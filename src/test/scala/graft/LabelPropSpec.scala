@@ -45,26 +45,24 @@ class LabelPropSpec extends AnyFunSuite {
   }
 
   test("shared labelMap + symmetric edges reproduce both queries' default outputs") {
-    // the round-13 session-memo path: ONE checkpointed label map + ONE
-    // pre-symmetrized relation feed labelPropagation AND modularity;
-    // outputs must equal the self-built (canonical/default) path
+    // ONE checkpointed pre-symmetrized relation (symmetric = true) feeds
+    // labelPropagation AND modularity; outputs must equal the self-built
+    // (default) path over the half edges
     val cliqueA = for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)
     val cliqueB = for (i <- 10L to 13L; j <- (i + 1) to 13L) yield (i, j)
     val half = (cliqueA ++ cliqueB :+ (4L, 10L)).toDF("a", "b")
     val sym = graft.Caching.checkpointed(
       half.union(half.select(col("b").as("a"), col("a").as("b"))))
-    val labels = LabelProp.lpaLabelMap(sym, "a", "b", symmetric = true)
-    val lpGot = LabelProp.labelPropagation(sym, "a", "b", symmetric = true,
-      labelMap = Some(labels)).collect().map(_.toSeq).toSet
+    val lpGot = LabelProp.labelPropagation(sym, "a", "b", symmetric = true)
+      .collect().map(_.toSeq).toSet
     val lpDef = LabelProp.labelPropagation(half, "a", "b")
       .collect().map(_.toSeq).toSet
     assert(lpGot === lpDef)
-    val mGot = LabelProp.modularity(sym, "a", "b", symmetric = true,
-      labelMap = Some(labels)).collect().map(_.toSeq).toSet
+    val mGot = LabelProp.modularity(sym, "a", "b", symmetric = true)
+      .collect().map(_.toSeq).toSet
     val mDef = LabelProp.modularity(half, "a", "b")
       .collect().map(_.toSeq).toSet
     assert(mGot === mDef)
-    graft.Caching.releaseCheckpoint(labels)
     graft.Caching.releaseCheckpoint(sym)
     spark.catalog.clearCache()
   }

@@ -33,24 +33,6 @@ class NaiveBayesSpec extends AnyFunSuite {
     assert(out.forall(_._4 < 0L))
   }
 
-  test("injected shared model reproduces classify and evaluate default outputs") {
-    // round-13 session-memo path: ONE trained (classes, lik) model feeds
-    // both queries; outputs must equal the self-trained path exactly
-    val d = corpus()
-    val (classes, lik) = NaiveBayes.trainBySource(d)
-    val shared = (graft.Caching.checkpointed(classes),
-      graft.Caching.checkpointed(lik))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(NaiveBayes.classifyBySource(d, model = Some(shared)))
-      === rows(NaiveBayes.classifyBySource(d)))
-    assert(rows(NaiveBayes.evaluateBySource(d, model = Some(shared)))
-      === rows(NaiveBayes.evaluateBySource(d)))
-    graft.Caching.releaseCheckpoint(shared._1)
-    graft.Caching.releaseCheckpoint(shared._2)
-    spark.catalog.clearCache()
-  }
-
   test("empty and whitespace-only docs are excluded from scoring") {
     val d = Seq(
       (5L, "", "en", "web", 0L),

@@ -119,8 +119,13 @@ class PlanSnapshotSpec extends AnyFunSuite {
     out
   }
 
+  /** Each pinned query starts from an empty cache, as Verify runs it: a
+    * relation an earlier query persisted would otherwise stand in for a
+    * whole subtree of a later one, so a pin would depend on list order.
+    */
   private def currentFingerprints(): Seq[(String, String)] =
     pinned.map { n =>
+      planSession.catalog.clearCache()
       n -> PlanFingerprint.fingerprint(SparkEntry.queries(n)(planSession, sfDir))
     } ++ loopFingerprints()
 

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 optimization-round changes: the reliable-checkpoint gate on
-  * Caching.checkpointed and injected MinHash signatures in minhashDedup.
-  */
+/** The reliable-checkpoint gate on Caching.checkpointed. */
 class Round14OpsSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -29,15 +27,21 @@ class Round14OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("minhashDedup with injected signatures matches the self-built path") {
-    val docs = graft.io.Tables.documents(spark, TestSpark.sfDir)
-    val self = graft.dedup.Dedup.minhashDedup(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    val sigs = Caching.checkpointedAccurate(
-      graft.dedup.Dedup.minhashSignatures(docs, shingleN = 3, numHashes = 32))
-    val injected = graft.dedup.Dedup.minhashDedup(docs, sigsPre = Some(sigs))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
-    assert(self.nonEmpty && injected.sameElements(self))
+  test("checkpointed with spark.graft.checkpointDir reuses one checkpoint subdirectory") {
+    // SparkContext.setCheckpointDir(dir) makes a fresh <dir>/<UUID>; two
+    // checkpoints under one configured dir must share the first one
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    spark.conf.set("spark.graft.checkpointDir", dir)
+    try {
+      Caching.checkpointed(spark.range(10).toDF("id"))
+      Caching.checkpointed(spark.range(20).toDF("id"))
+      val subdirs = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isDirectory(p)).count()
+      assert(subdirs === 1L)
+    } finally {
+      spark.conf.unset("spark.graft.checkpointDir")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("checkpointed without the conf stays local (no checkpoint files)") {

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Tables`, so all of them take one path. A
   * library call that sets a session conf changes every query other
   * threads run on that session meanwhile; writers take per-write options
-  * instead.
+  * instead. A JVM-wide map of results (a `ConcurrentHashMap` memo) keeps
+  * serving what it saw before a write and keeps every session it saw
+  * reachable; queries build their inputs per call instead.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -98,5 +100,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"read parquet footers through graft.io.Tables:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no ConcurrentHashMap under src/main/scala") {
+    val sites = for {
+      f <- mainSources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("ConcurrentHashMap")
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"no JVM-wide memo in library code; build inputs per call:\n${sites.sorted.mkString("\n")}")
   }
 }

@@ -94,6 +94,22 @@ class TablesSpec extends AnyFunSuite {
     } === 0)
   }
 
+  test("documents: a rewritten layout's split count is probed again in the same session") {
+    val dir = tmpDir()
+    val src = Tables.table(spark, sfDir, "documents")
+    val width = spark.sessionState.conf.numShufflePartitions
+    def scanSplits = Tables.table(spark, dir, "documents").rdd.getNumPartitions
+    src.repartition(16).write.parquet(s"$dir/documents.parquet")
+    assert(scanSplits >= width, "the first layout must be at least the shuffle width")
+    assert(Tables.documents(spark, dir).rdd.getNumPartitions === scanSplits)
+    src.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(scanSplits === 1)
+    // one split is narrower than the shuffle width: spread again
+    val again = Tables.documents(spark, dir)
+    assert(again.rdd.getNumPartitions === width)
+    assert(again.count() === src.count())
+  }
+
   test("Tables.read reads exactly a listing's files, a subset with the table's schema") {
     val dir = tmpDir()
     val t = s"$dir/t.parquet"

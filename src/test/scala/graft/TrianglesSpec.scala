@@ -169,36 +169,6 @@ class TrianglesSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("injected initialSupport: shared relation reproduces both peels, survives both") {
-    // the round-13 session-memo path: ONE checkpointed round-1 support
-    // relation feeds the bounded AND the converged peel; outputs must be
-    // identical to the self-built path, and the shared relation must
-    // still be alive (not released by either peel) for the next consumer
-    val raw: Seq[(Long, Long)] = Seq(
-      (0, 1), (0, 2), (0, 3), (0, 4), (0, 7), (0, 10), (1, 2), (1, 3),
-      (1, 4), (1, 9), (1, 10), (1, 11), (2, 3), (2, 4), (2, 8), (2, 12),
-      (3, 4), (3, 6), (3, 8), (3, 11), (3, 12), (4, 12), (5, 7), (5, 9),
-      (6, 7), (6, 11), (6, 12), (7, 9), (8, 9), (8, 12), (9, 10), (9, 11),
-      (9, 12), (10, 12), (11, 12)).map { case (a, b) => (a.toLong, b.toLong) }
-    val edges = raw.toDF("u", "v")
-    val shared = graft.Caching.checkpointed(
-      Triangles.initialSupportRelation(edges, "u", "v"))
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    val bInj = asMap(Triangles.kTruss(edges, "u", "v", k = 4, rounds = 2,
-      initialSupport = Some(shared)))
-    val bDef = asMap(Triangles.kTruss(edges, "u", "v", k = 4, rounds = 2))
-    assert(bInj === bDef)
-    val cInj = asMap(Triangles.kTrussConverged(edges, "u", "v", k = 4,
-      initialSupport = Some(shared)))
-    val cDef = asMap(Triangles.kTrussConverged(edges, "u", "v", k = 4))
-    assert(cInj === cDef)
-    // the shared relation must still be consumable after both peels
-    assert(shared.count() > 0)
-    graft.Caching.releaseCheckpoint(shared)
-    spark.catalog.clearCache()
-  }
-
   test("incremental peel equals the full-recompute reference and the local model") {
     // seeded random graphs — the incremental decrement identity
     // S_{G∖D}(e) = S_G(e) − lost-triangles(e) must reproduce the
