@@ -42,14 +42,10 @@ object Clean {
     * `original_shape[0] - cleaned_shape[0]` (`filmETLs.ipynb#cell2:12-23`).
     * Use only where the audit number is actually needed.
     */
-  def cleanCounted(df: DataFrame, label: String = "table"): (DataFrame, Long) = {
+  def cleanCounted(df: DataFrame): (DataFrame, Long) = {
     val before  = df.count()
     val cleaned = clean(df)
     val after   = cleaned.count()
-    val removed = before - after
-    // Mirrors the reference's audit line `[table] Cleaned: N rows removed`
-    // (`filmETLs.ipynb#cell2:22-23`).
-    println(s"[$label] Cleaned: $removed rows removed")
-    (cleaned, removed)
+    (cleaned, before - after)
   }
 }

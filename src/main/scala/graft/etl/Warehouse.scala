@@ -34,8 +34,11 @@ import graft.io.Tables.{DataFile, Listing, Range}
   * is planned from metadata, as a columnar engine reads zone maps before
   * data: the parquet footers' key and date ranges
   * ([[graft.io.Tables.range]]) tell which dimension files a new row can
-  * already be in and which years new orders fall in, so a night that lands
-  * new keys on one day writes its tables without first querying them.
+  * already be in, which years new orders fall in and whether a night's
+  * fact rows can meet a held one. A night that lands new keys on a new day
+  * appends its own fact rows, as the reference does, but only where the
+  * footers prove that append exact, so it neither queries nor rewrites
+  * the rows it holds.
   */
 object Warehouse {
 
@@ -66,27 +69,41 @@ object Warehouse {
     *    anti-join on all columns against just the dimension files whose
     *    range of its first column meets that column's range in the new
     *    files, and no join where none does.
-    *  - A fact row's year is its order's, so a fact overwrites just the
-    *    year partitions of its new orders (and, for the inventory, of the
-    *    orders its new lineitems belong to). The footers decide them where
-    *    they pin exactly that set: new orders whose `o_orderdate` range
-    *    lies in one year have that year, and new lineitems add none where
-    *    every orders file whose `o_orderkey` range can hold one of their
-    *    keys is itself new. The rest are found in one query over the new
-    *    orders and the orders files those keys can reach. Only a removed
-    *    or rewritten input file can take rows out of a year, and that
-    *    rebuilds in full. `dim_date` has no input.
+    *  - A fact appends the rows its builder makes from the new files
+    *    alone, and keeps every file it holds, where the footers prove
+    *    that no held row shares a group with them and that no held input
+    *    row joins a new one. `fact_monthly_payment` appends where no held
+    *    orders file's `o_orderkey` range meets the new orders'.
+    *    `fact_daily_inventory` appends where every orders file whose
+    *    `o_orderkey` range can hold a new lineitem's key is new, no held
+    *    lineitem file's `l_orderkey` range meets the new orders' keys, and
+    *    no held orders file's `o_orderdate` days meet the new orders'
+    *    days. Days, not ticks: the `date_id` of a group is its order's
+    *    day in the zone `Dims.dateKey` reads it in, and two orders hours
+    *    apart can share one.
+    *  - Otherwise a fact row's year is its order's, so a fact overwrites
+    *    just the year partitions of its new orders (and, for the
+    *    inventory, of the orders its new lineitems belong to). The
+    *    footers decide them where they pin exactly that set: new orders
+    *    whose `o_orderdate` range lies in one year have that year, and new
+    *    lineitems add none where every orders file whose `o_orderkey`
+    *    range can hold one of their keys is itself new. The rest are found
+    *    in one query over the new orders and the orders files those keys
+    *    can reach. Only a removed or rewritten input file can take rows
+    *    out of a year, and that rebuilds in full. `dim_date` has no input.
     *  - A missing range (no statistics, an INT96 timestamp) or ranges of
-    *    two parquet types count as overlapping, so they cost a join or a
-    *    query, never a row.
+    *    two parquet types count as overlapping, so they cost a join, a
+    *    query or a year's rewrite, never a row. An append that fails, or
+    *    commits without its manifest, leaves the fact without one, so the
+    *    next build rebuilds it in full and never appends twice.
     *
     * Row counts are summed on the driver from the parquet footers of the
     * output files; the manifest keeps each file's count, so a build reads
     * only the footers of the files it wrote. The build copies the
     * session's Hadoop configuration once, for every listing, footer and
     * manifest it touches. (The C3 cleaning audit is a
-    * per-frame concern: use `Clean.cleanCounted`/`cleanObserved` around
-    * individual builders when the removed-count is needed.)
+    * per-frame concern: `Clean.cleanCounted` and `cleanObserved` return the
+    * removed-count around individual builders where it is needed.)
     */
   def buildAll(spark: SparkSession, inDir: String, outDir: String): Seq[BuildReport] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -135,20 +152,51 @@ object Warehouse {
     val daily = load("fact_daily_inventory", "lineitem", "orders")
     val monthly = load("fact_monthly_payment", "orders")
     def added(l: Load, t: String): Seq[DataFile] = l.delta.fold(Seq.empty[DataFile])(_(t))
-    // The years of orders `fs`: pinned by the footers where their dates lie
-    // in one year and are stored as the table reads them, else the orders
-    // to find them in.
+    def held(l: Load, t: String): Seq[DataFile] = snap(t).files.filterNot(added(l, t).toSet)
+    // The o_orderdate range of orders `fs`, where they store it as the
+    // table reads it (as its first file does).
     lazy val dates = snap("orders").files.headOption
       .flatMap(Tables.range(spark, conf, _, "o_orderdate")).map(_.kind)
+    def dated(fs: Seq[DataFile]): Option[Range] =
+      span(fs, "o_orderdate").filter(r => dates.contains(r.kind))
+    // an order of the new lineitems lies in an orders file whose keys reach theirs
+    lazy val owners = reach(snap("orders").files, "o_orderkey", span(added(daily, "lineitem"), "l_orderkey"))
+
+    // A fact appends the rows of the night's own files, and keeps every
+    // file it holds, where the footers show that no held row shares a
+    // group with them and no held input row joins a new one: a monthly
+    // group holds its order's key, a daily one its order's day.
+    val appends: Map[String, DataFrame] = {
+      val paid = added(monthly, "orders")
+      val (orders, lineitem) = (added(daily, "orders"), added(daily, "lineitem"))
+      def apart(a: (Long, Long), b: (Long, Long)) = a._2 < b._1 || b._2 < a._1
+      def days(fs: Seq[DataFile]) = dated(fs).flatMap(_.days)
+      // no held order can share a key with a new one
+      val monthlyNew = paid.nonEmpty &&
+        reach(held(monthly, "orders"), "o_orderkey", span(paid, "o_orderkey")).isEmpty
+      // every order of a new lineitem is new, no held lineitem can belong
+      // to a new order, and no held order falls on a new one's day
+      val dailyNew = orders.nonEmpty && lineitem.nonEmpty && owners.forall(orders.contains) &&
+        reach(held(daily, "lineitem"), "l_orderkey", span(orders, "o_orderkey")).isEmpty &&
+        days(orders).exists(d => held(daily, "orders").forall(f => days(Seq(f)).exists(apart(_, d))))
+      Seq(
+        Option.when(monthlyNew)(monthly.name -> Facts.factMonthlyPayment(read("orders", paid))),
+        Option.when(dailyNew)(
+          daily.name -> Facts.factDailyInventory(read("lineitem", lineitem), read("orders", orders)))
+      ).flatten.toMap
+    }
+
+    // The other facts overwrite the years of their new orders (and, for
+    // the inventory, of the orders its new lineitems belong to). The years
+    // of orders `fs` are pinned by the footers where their dates lie in
+    // one year, else they are found in those orders.
     def yearsOf(fs: Seq[DataFile]): Either[Seq[Int], DataFrame] =
-      span(fs, "o_orderdate").filter(r => dates.contains(r.kind)).flatMap(_.years)
-        .collect { case (a, b) if a == b => Seq(a) }.toLeft(read("orders", fs))
-    val touching = Seq(monthly, daily).map(l => l.name -> added(l, "orders"))
+      dated(fs).flatMap(_.years).collect { case (a, b) if a == b => Seq(a) }.toLeft(read("orders", fs))
+    val rewriting = Seq(monthly, daily).filterNot(l => appends.contains(l.name))
+    val touching = rewriting.map(l => l.name -> added(l, "orders"))
       .collect { case (t, fs) if fs.nonEmpty => t -> yearsOf(fs) } ++
-      Some(added(daily, "lineitem")).filter(_.nonEmpty).map { li =>
-        // an order of the new lineitems lies in an orders file whose keys
-        // reach theirs; where each is new, its years are counted above
-        val owners = reach(snap("orders").files, "o_orderkey", span(li, "l_orderkey"))
+      Some(added(daily, "lineitem")).filter(_.nonEmpty && rewriting.contains(daily)).map { li =>
+        // where each owner is new, its years are counted above
         daily.name -> (
           if (owners.forall(added(daily, "orders").contains)) Left(Nil)
           else Right(read("orders", owners)
@@ -166,13 +214,15 @@ object Warehouse {
       col("o_orderdate") >= lit(LocalDateTime.of(y, 1, 1, 0, 0)) &&
         col("o_orderdate") < lit(LocalDateTime.of(y + 1, 1, 1, 0, 0))
     }.reduce(_ || _))
-    def fact(l: Load, build: DataFrame => DataFrame): BuildReport = {
-      def yearly(orders: DataFrame) =
-        build(orders).withColumn("year", (col("date_id") / 10000).cast("int"))
-      l(yearly(full("orders")), Seq("year")) { _ =>
-        years.get(l.name).foreach(ys => overwritePartitions(yearly(ordersIn(ys)), l.dir, "year"))
+    def yearly(fact: DataFrame) = fact.withColumn("year", (col("date_id") / 10000).cast("int"))
+    def fact(l: Load, build: DataFrame => DataFrame): BuildReport =
+      l(yearly(build(full("orders"))), Seq("year")) { _ =>
+        appends.get(l.name) match {
+          case Some(rows) => Tables.write(yearly(rows), l.dir, Seq("year"), mode = "append")
+          case None =>
+            years.get(l.name).foreach(ys => overwritePartitions(yearly(build(ordersIn(ys))), l.dir, "year"))
+        }
       }
-    }
     val facts = Seq(
       fact(daily, Facts.factDailyInventory(full("lineitem"), _)),
       fact(monthly, Facts.factMonthlyPayment))
@@ -285,39 +335,6 @@ object Warehouse {
   def upsertByKey(base: DataFrame, updates: DataFrame, key: String): DataFrame =
     base.join(updates.select(key), Seq(key), "left_anti").unionByName(updates)
 
-  /** Bucketed star layout: orders and customer hash-bucketed (and
-    * sorted) on the join key via `saveAsTable` into the session catalog —
-    * no Hive metastore needed, Spark's built-in catalog tracks bucketing
-    * metadata for parquet tables. A downstream equi-join on the bucket
-    * key then reads co-located buckets and skips BOTH shuffles (and with
-    * sortBy, both sorts): at 100 TB that converts the biggest recurring
-    * join from a full-network shuffle into a local merge per bucket.
-    * Bucket count is a layout decision — size it so one bucket of the
-    * big side fits an executor's memory (e.g. 4096 buckets for a 10 TB
-    * fact ≈ 2.5 GB each); it must match on both tables to co-locate.
-    */
-  def buildBucketed(spark: SparkSession, inDir: String, buckets: Int = 8): Unit = {
-    Tables.orders(spark, inDir).write.mode("overwrite")
-      .bucketBy(buckets, "o_custkey").sortBy("o_custkey")
-      .format("parquet").saveAsTable("orders_bucketed")
-    Tables.customer(spark, inDir).write.mode("overwrite")
-      .bucketBy(buckets, "c_custkey").sortBy("c_custkey")
-      .format("parquet").saveAsTable("customer_bucketed")
-  }
-
-  /** Shuffle-free join over the bucketed layout: spend per market segment.
-    * With both sides bucketed on the key, the only exchange left in the
-    * plan is the tiny post-join aggregation by segment.
-    */
-  def bucketedSpendPerSegment(spark: SparkSession): DataFrame =
-    spark.table("orders_bucketed")
-      .join(spark.table("customer_bucketed"),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-        .cast("double").as("segment_spend"),
-        count(lit(1)).as("n_orders"))
-
   /** Incremental maintenance: recompute and overwrite ONLY the partitions
     * present in `updated` (dynamic partition overwrite), leaving all other
     * partitions byte-identical. This is the idempotent replacement for the
@@ -325,7 +342,8 @@ object Warehouse {
     * etc.), which double-loads on retry — the exact failure Airflow's
     * retry policy (`rentalFilmDAG.py:103-104`) would trigger. At 100 TB a
     * daily run rewrites one year=.../day's partition, not the table;
-    * [[buildAll]] lands its facts' touched years this way.
+    * [[buildAll]] lands its facts' touched years this way on a night whose
+    * rows it cannot append.
     */
   def overwritePartitions(updated: DataFrame, path: String, partitionCol: String): Unit =
     // the writer's own option, not the session conf: a query another

@@ -50,7 +50,7 @@ import org.apache.spark.sql.types.StructType
   * Footers also give a file's rows ([[rowCount]]) and the least and
   * greatest value of an integer, date or timestamp column ([[range]]), so
   * a planner can tell from metadata alone which files can hold a key and
-  * which years a file's dates fall in. The calls that take a Hadoop
+  * which days and years a file's dates fall on. The calls that take a Hadoop
   * configuration let a caller that touches many files copy the session's
   * once.
   *
@@ -168,17 +168,23 @@ object Tables {
   /** The least and greatest value of one column in one file, as parquet
     * stores them: a signed integer, a DATE's days or a TIMESTAMP's ticks
     * since the epoch. `kind` names the stored type, and ranges of two kinds
-    * never compare as disjoint. `years` spans Spark's `year()` of the
-    * values, for a date or a millisecond or microsecond timestamp from 1900
-    * on (Spark rebases older values of a legacy-calendar file on read).
+    * never compare as disjoint. `days` spans the calendar days (since the
+    * epoch) that Spark's `year()`, `month()` and `dayofmonth()` read the
+    * values on, and `years` their years, for a date or a millisecond or
+    * microsecond timestamp from 1900 on (Spark rebases older values of a
+    * legacy-calendar file on read). Two values whose ticks differ can
+    * share a day, so only `days` tells whether they can.
     */
-  final case class Range(kind: String, min: Long, max: Long, years: Option[(Int, Int)]) {
+  final case class Range(kind: String, min: Long, max: Long, days: Option[(Long, Long)]) {
     /** Whether a value can lie in both ranges. */
     def overlaps(o: Range): Boolean = kind != o.kind || (min <= o.max && o.min <= max)
 
     /** The range of the values of both, where they are of one kind. */
     def union(o: Range): Option[Range] = Option.when(kind == o.kind)(Range(kind,
-      min min o.min, max max o.max, for ((a, b) <- years; (c, d) <- o.years) yield (a min c, b max d)))
+      min min o.min, max max o.max, for ((a, b) <- days; (c, d) <- o.days) yield (a min c, b max d)))
+
+    def years: Option[(Int, Int)] =
+      days.map { case (a, b) => (LocalDate.ofEpochDay(a).getYear, LocalDate.ofEpochDay(b).getYear) }
   }
 
   /** The [[Range]] of top-level `column` in `file`, from the row-group
@@ -186,33 +192,46 @@ object Tables {
     * adds nothing. None where a row group lacks statistics, where every
     * value is null or the file lacks the column, and unless the column is
     * a signed integer, a DATE or an INT64 TIMESTAMP (so never for an INT96
-    * one). A TIMESTAMP's year is taken where Spark's `year()` takes it: a
-    * UTC-adjusted one's (or any one's, with `inferTimestampNTZ` off) in
-    * the session time zone, a local one's as it is stored.
+    * one). A TIMESTAMP's days are taken where Spark's `year()`,
+    * `month()` and `dayofmonth()` take them: a UTC-adjusted one's (or any
+    * one's, with `inferTimestampNTZ` off) in the session time zone, a
+    * local one's as it is stored.
     */
   def range(spark: SparkSession, conf: Configuration, file: DataFile,
             column: String): Option[Range] = {
     val meta = footer(conf, file)
     val sqlConf = spark.sessionState.conf
-    def yearAt(zone: String)(micros: Long) = Instant.EPOCH.plus(micros, ChronoUnit.MICROS)
-      .atZone(DateTimeUtils.getZoneId(zone)).getYear
-    // (kind, the year of a stored value where it has one)
-    val typed: Option[(String, Option[Long => Int])] = meta.getFileMetaData.getSchema.getFields
+    // the first and last local day of the instants lo..hi in `zone`: those
+    // of lo and hi, unless the clock turns back across midnight between them
+    def daysAt(zone: String)(lo: Long, hi: Long): (Long, Long) = {
+      val z = DateTimeUtils.getZoneId(zone)
+      def at(micros: Long) = Instant.EPOCH.plus(micros, ChronoUnit.MICROS)
+      def day(t: Instant) = t.atZone(z).toLocalDate.toEpochDay
+      def next(t: Instant) = z.getRules.nextTransition(t)
+      val back = Iterator.iterate(next(at(lo)))(t => next(t.getInstant))
+        .takeWhile(t => t != null && !t.getInstant.isAfter(at(hi))).filter(_.isOverlap)
+        .flatMap(t => Seq(day(t.getInstant), day(t.getInstant.minusNanos(1)))).toSeq
+      ((back :+ day(at(lo))).min, (back :+ day(at(hi))).max)
+    }
+    // (kind, the days of stored values lo..hi where they have them)
+    type Days = (Long, Long) => (Long, Long)
+    val typed: Option[(String, Option[Days])] = meta.getFileMetaData.getSchema.getFields
       .asScala.find(f => f.getName == column && f.isPrimitive && !f.isRepetition(REPEATED))
-      .map(_.asPrimitiveType).flatMap(t => (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
-        case (p @ (INT32 | INT64), null) => Some((p.toString, None))
-        case (p @ (INT32 | INT64), i: IntLogicalTypeAnnotation) if i.isSigned => Some((p.toString, None))
-        case (INT32, _: DateLogicalTypeAnnotation) => Some(("DATE", Some(LocalDate.ofEpochDay(_).getYear)))
-        case (INT64, ts: TimestampLogicalTypeAnnotation) =>
-          val zone = if (ts.isAdjustedToUTC || !sqlConf.parquetInferTimestampNTZEnabled)
-            sqlConf.sessionLocalTimeZone else "UTC"
-          Some((ts.toString, ts.getUnit match {
-            case TimeUnit.MILLIS => Some(v => yearAt(zone)(v * 1000))
-            case TimeUnit.MICROS => Some(yearAt(zone))
-            case TimeUnit.NANOS => None
-          }))
-        case _ => None
-      })
+      .map(_.asPrimitiveType).flatMap[(String, Option[Days])](t =>
+        (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+          case (p @ (INT32 | INT64), null) => Some((p.toString, None))
+          case (p @ (INT32 | INT64), i: IntLogicalTypeAnnotation) if i.isSigned => Some((p.toString, None))
+          case (INT32, _: DateLogicalTypeAnnotation) => Some(("DATE", Some((lo, hi) => (lo, hi))))
+          case (INT64, ts: TimestampLogicalTypeAnnotation) =>
+            val zone = if (ts.isAdjustedToUTC || !sqlConf.parquetInferTimestampNTZEnabled)
+              sqlConf.sessionLocalTimeZone else "UTC"
+            Some((ts.toString, ts.getUnit match {
+              case TimeUnit.MILLIS => Some((lo, hi) => daysAt(zone)(lo * 1000, hi * 1000))
+              case TimeUnit.MICROS => Some(daysAt(zone))
+              case TimeUnit.NANOS => None
+            }))
+          case _ => None
+        })
     // per row group: Some(values' (min, max)), Some(None) where all are
     // null, None where unknown
     def groups = meta.getBlocks.asScala.toSeq.map { b =>
@@ -225,14 +244,17 @@ object Tables {
       }
     }
     for {
-      (kind, year) <- typed
+      (kind, days) <- typed
       gs = groups if gs.forall(_.isDefined) && gs.exists(_.get.isDefined)
     } yield {
       val values = gs.flatten.flatten
       val (lo, hi) = (values.map(_._1).min, values.map(_._2).max)
-      Range(kind, lo, hi, year.map(y => (y(lo), y(hi))).filter(_._1 >= 1900))
+      Range(kind, lo, hi, days.map(_(lo, hi)).filter(_._1 >= Rebased))
     }
   }
+
+  // 1900-01-01: Spark rebases earlier values of a legacy-calendar file on read
+  private val Rebased = LocalDate.of(1900, 1, 1).toEpochDay
 
   private def footer(conf: Configuration, file: DataFile): ParquetMetadata =
     ParquetFooterReader.readFooter(
@@ -362,26 +384,6 @@ object Tables {
     cpuSpread(table(spark, dir, "documents"), "doc_id")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     cpuSpread(table(spark, dir, "embeddings"), "vec_id")
-
-  /** CSV source with an explicit schema. Schema inference is deliberately
-    * not offered: at 100 TB inference costs an extra full scan and can
-    * produce run-dependent types — declare the schema (SURVEY.md §1.2).
-    */
-  def readCsv(spark: SparkSession, path: String,
-              schema: org.apache.spark.sql.types.StructType,
-              header: Boolean = true): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-
-  /** JSON-lines source with an explicit schema (same no-inference rule;
-    * unparseable records land in the PERMISSIVE null row rather than
-    * failing the job).
-    */
-  def readJson(spark: SparkSession, path: String,
-               schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
   /** JDBC source — the reference's ACTUAL input topology: projected
     * `pd.read_sql` against MySQL via SQLAlchemy (`filmETLs.ipynb#cell1`

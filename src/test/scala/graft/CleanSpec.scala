@@ -22,7 +22,7 @@ class CleanSpec extends AnyFunSuite {
   ).toDF("rental_id", "rental_date", "inventory_id", "customer_id", "return_date")
 
   test("reference fixture: null row and exact duplicate removed, 2 survive") {
-    val (cleaned, removed) = Clean.cleanCounted(dirty, "rental")
+    val (cleaned, removed) = Clean.cleanCounted(dirty)
     assert(removed === 2)
     val ids = cleaned.select("rental_id").as[Int].collect().sorted
     assert(ids.toSeq === Seq(16001, 16002))

@@ -1,11 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.time.LocalDateTime
+import java.time.{Instant, LocalDateTime}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,12 +66,12 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
   /** Build `wh` incrementally and a fresh warehouse from scratch over `in`;
     * both must hold the same rows and report the same counts.
     */
-  private def buildMatchesScratch(in: String, wh: String): Unit = {
+  private def buildMatchesScratch(in: String, wh: String, s: SparkSession = spark): Unit = {
     val scratch = tmp("graft_inc_scratch")
-    assert(Warehouse.buildAll(spark, in, wh) === Warehouse.buildAll(spark, in, scratch))
+    assert(Warehouse.buildAll(s, in, wh) === Warehouse.buildAll(s, in, scratch))
     for (t <- tables) {
-      val a = spark.read.parquet(s"$wh/$t")
-      val b = spark.read.parquet(s"$scratch/$t")
+      val a = s.read.parquet(s"$wh/$t")
+      val b = s.read.parquet(s"$scratch/$t")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, t)
     }
   }
@@ -89,6 +89,16 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
   /** Files of a fact outside the given year partitions. */
   private def outside(fs: Set[Tables.DataFile], years: Int*): Set[Tables.DataFile] =
     fs.filterNot(f => years.exists(y => f.path.contains(s"/year=$y/")))
+
+  /** Fact `t` rewrote its year `y` and no other. */
+  private def rewroteYear(before: Map[String, Set[Tables.DataFile]], wh: String, t: String, y: Int): Unit = {
+    val held = before(t) -- outside(before(t), y)
+    assert(held.nonEmpty && (held intersect files(wh, t)).isEmpty, s"$t kept files of year $y")
+    assert(outside(files(wh, t), y) === outside(before(t), y), s"$t rewrote another year")
+  }
+
+  private val daily = "fact_daily_inventory"
+  private val monthly = "fact_monthly_payment"
 
   test("nightly loads: incremental build equals a from-scratch build after every night") {
     val in = fixtures()
@@ -183,14 +193,134 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
     * `day`, with their lineitems.
     */
   private def night(in: String, name: String, day: LocalDateTime, shift: Long,
-                    orders: DataFrame): Unit = {
-    val lineitem = table(in, "lineitem")
-    val lines = lineitem.join(orders.select("o_orderkey"), $"l_orderkey" === $"o_orderkey")
+                    orders: DataFrame): Unit = nightAt(in, name, lit(day), shift, orders)
+
+  /** [[night]] at `date`, cast to the orders' date type. */
+  private def nightAt(in: String, name: String, date: Column, shift: Long, orders: DataFrame): Unit = {
+    land(in, "orders", name, orders.withColumn("o_orderkey", $"o_orderkey" + shift)
+      .withColumn("o_orderdate", date.cast(orders.schema("o_orderdate").dataType)))
+    land(in, "lineitem", name, linesOf(in, orders, shift))
+  }
+
+  /** The lineitems of `orders`, moved to the order keys `orders` get `shift` added. */
+  private def linesOf(in: String, orders: DataFrame, shift: Long): DataFrame = {
+    val lineitem = Tables.table(orders.sparkSession, in, "lineitem")
+    lineitem.join(orders.select("o_orderkey"), $"l_orderkey" === $"o_orderkey")
       .withColumn("l_orderkey", $"l_orderkey" + shift).select(lineitem.columns.toSeq.map(col): _*)
-    val moved = orders.withColumn("o_orderkey", $"o_orderkey" + shift)
-      .withColumn("o_orderdate", lit(day).cast(orders.schema("o_orderdate").dataType))
-    land(in, "orders", name, moved)
-    land(in, "lineitem", name, lines)
+  }
+
+  /** sf0.01's orders run from 1995-01-01 to 2001-08-01. */
+  private val newDay = LocalDateTime.of(2001, 12, 30, 0, 0)
+
+  test("a night of new keys on a new day appends both facts' rows and keeps every file they hold") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    night(in, "night-01.parquet", newDay, 30000000L, table(in, "orders").orderBy("o_orderkey").limit(8))
+    val before = state(wh)
+    // dim_order and each fact: one append each, and no years query
+    assert(startedBy(Warehouse.buildAll(spark, in, wh)).sqlExecutions === 3)
+    for (f <- Seq(daily, monthly)) {
+      assert(before(f).subsetOf(files(wh, f)), s"$f rewrote a file it held")
+      val gained = files(wh, f) -- before(f)
+      assert(gained.nonEmpty && gained.forall(_.path.contains("/year=2001/")), f)
+    }
+    buildMatchesScratch(in, wh)
+  }
+
+  // The guards below land the same orders twice under new keys, so both
+  // nights' lineitems fall in the same (part, supplier) groups: a wrong
+  // append shows as a group held twice.
+
+  test("new orders later on a held order's day rewrite the daily fact's year") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    val some = table(in, "orders").orderBy("o_orderkey").limit(5).localCheckpoint()
+    night(in, "night-01.parquet", newDay, 30000000L, some)
+    Warehouse.buildAll(spark, in, wh)
+    // ticks after every held one, on the day of the held night
+    night(in, "night-02.parquet", newDay.plusHours(18), 40000000L, some)
+    val before = state(wh)
+    buildMatchesScratch(in, wh)
+    rewroteYear(before, wh, daily, 2001)
+    // a monthly group holds its order's key, and every key is new
+    assert(before(monthly).subsetOf(files(wh, monthly)))
+  }
+
+  test("a held lineitem of a late-arriving order rewrites the daily fact's year") {
+    val in = fixtures()
+    val some = table(in, "orders").orderBy("o_orderkey").limit(5).localCheckpoint()
+    // the lineitems land a night before their orders
+    land(in, "lineitem", "night-01.parquet", linesOf(in, some, 30000000L))
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    // the orders, with their lineitems sent again
+    night(in, "night-02.parquet", newDay, 30000000L, some)
+    val before = state(wh)
+    buildMatchesScratch(in, wh)
+    rewroteYear(before, wh, daily, 2001)
+  }
+
+  test("a new lineitem of a held order rewrites that order's year") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    val orders = table(in, "orders")
+    night(in, "night-01.parquet", newDay, 30000000L, orders.orderBy("o_orderkey").limit(5))
+    val in1996 = orders.where(year($"o_orderdate") === 1996).orderBy("o_orderkey").limit(1)
+    land(in, "lineitem", "night-01b.parquet", linesOf(in, in1996, 0L)
+      .withColumn("l_linenumber", $"l_linenumber" + 100))
+    val before = state(wh)
+    buildMatchesScratch(in, wh)
+    for (y <- Seq(1996, 2001))
+      assert((before(daily) -- outside(before(daily), y)).intersect(files(wh, daily)).isEmpty, y)
+    assert(outside(files(wh, daily), 1996, 2001) === outside(before(daily), 1996, 2001))
+  }
+
+  test("a UTC-adjusted order date falls on its day in the session time zone") {
+    val in = fixtures()
+    // the orders' dates as UTC-adjusted INT64 timestamps, read at +01:00
+    val plus1 = spark.newSession()
+    plus1.conf.set("spark.sql.session.timeZone", "+01:00")
+    plus1.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val orders = Tables.table(plus1, in, "orders")
+      .withColumn("o_orderdate", $"o_orderdate".cast("timestamp")).localCheckpoint()
+    Files.delete(Paths.get(in, "orders.parquet", "part-00000.parquet"))
+    land(in, "orders", "part-00000.parquet", orders)
+    val some = orders.orderBy("o_orderkey").limit(5).localCheckpoint()
+    // 2001-12-30 00:30 and 01:30 at +01:00, but two days apart in UTC
+    val at = Seq("2001-12-29T23:30:00Z", "2001-12-30T00:30:00Z").map(Instant.parse)
+    nightAt(in, "night-01.parquet", lit(at(0)), 30000000L, some)
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(plus1, in, wh)
+    nightAt(in, "night-02.parquet", lit(at(1)), 40000000L, some)
+    val conf = spark.sessionState.newHadoopConf()
+    def days(s: SparkSession, night: String) = Tables.listing(conf, s"$in/orders.parquet").files
+      .filter(_.path.endsWith(night)).flatMap(Tables.range(s, conf, _, "o_orderdate")).map(_.days)
+    assert(days(plus1, "night-01.parquet") === days(plus1, "night-02.parquet"))
+    assert(days(spark, "night-01.parquet") !== days(spark, "night-02.parquet"))
+    val before = state(wh)
+    buildMatchesScratch(in, wh, plus1)
+    rewroteYear(before, wh, daily, 2001)
+  }
+
+  test("an append whose manifest was not published is followed by a full rebuild, not a second append") {
+    val in = fixtures()
+    val wh = tmp("graft_inc_wh")
+    Warehouse.buildAll(spark, in, wh)
+    night(in, "night-01.parquet", newDay, 30000000L, table(in, "orders").orderBy("o_orderkey").limit(8))
+    // a directory where the daily fact's manifest is staged: its append
+    // commits, then publishing the manifest fails
+    val staged = Paths.get(wh, "_manifest", s".$daily.json.tmp")
+    Files.createDirectories(staged.resolve("x"))
+    val before = files(wh, daily)
+    intercept[Exception](Warehouse.buildAll(spark, in, wh))
+    assert(before.subsetOf(files(wh, daily)) && files(wh, daily).size > before.size)
+    assert(!Files.exists(Paths.get(wh, "_manifest", s"$daily.json")))
+    Files.delete(staged.resolve("x"))
+    Files.delete(staged)
+    // equal rows, so no inventory count is doubled
+    buildMatchesScratch(in, wh)
   }
 
   test("a benchmark-shaped night plans from the footers: one SQL execution per table it writes") {

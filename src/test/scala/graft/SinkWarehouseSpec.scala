@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Warehouse
 import graft.io.Tables
 import graft.streaming.EventStreams
 
-/** The two write-side scale features: the exactly-once foreachBatch sink
-  * (replay-idempotence checked directly) and the bucketed warehouse
-  * layout (shuffle elimination checked against the physical plan).
+/** The write-side maintenance features: the exactly-once foreachBatch
+  * sink (replay-idempotence checked directly), the CDC upsert and
+  * small-file compaction.
   */
 class SinkWarehouseSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
@@ -58,40 +55,6 @@ class SinkWarehouseSpec extends AnyFunSuite {
     assert(merged === Map(
       1L -> (("a", 10.0)), 2L -> (("b2", 22.0)),
       3L -> (("c", 30.0)), 4L -> (("d", 40.0))))
-  }
-
-  test("bucketed join skips the shuffle on both sides") {
-    Warehouse.buildBucketed(spark, sfDir, buckets = 4)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force a sort-merge plan so bucketing (not broadcast) is what's tested
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = Warehouse.bucketedSpendPerSegment(spark)
-      val plan = df.queryExecution.executedPlan
-      val smj = plan.collectFirst { case j: SortMergeJoinExec => j }
-      assert(smj.nonEmpty, s"expected a sort-merge join, got:\n$plan")
-      val shufflesUnderJoin = smj.get.collect { case s: ShuffleExchangeExec => s }
-      assert(shufflesUnderJoin.isEmpty,
-        s"bucketed join must not shuffle its inputs:\n${smj.get}")
-
-      // and the result matches the unbucketed formulation
-      val expect = Tables.orders(spark, sfDir)
-        .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("segment_spend"), count(lit(1)).as("n_orders"))
-        .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-      val got = df.collect()
-        .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-      assert(got === expect)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.sql("DROP TABLE IF EXISTS orders_bucketed")
-      spark.sql("DROP TABLE IF EXISTS customer_bucketed")
-    }
   }
 
   test("compact rewrites a many-file mess into the target file count, losslessly") {

@@ -11,34 +11,6 @@ class SourcesSpec extends AnyFunSuite {
   private lazy val customers = Tables.customer(spark, sfDir)
     .select("c_custkey", "c_name", "c_acctbal")
 
-  test("csv round-trip with explicit schema preserves rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    customers.write.mode("overwrite").option("header", "true").csv(dir)
-    val back = Tables.readCsv(spark, dir, customers.schema)
-    assert(back.count() === customers.count())
-    assert(back.exceptAll(customers).isEmpty && customers.exceptAll(back).isEmpty)
-  }
-
-  test("json round-trip with explicit schema preserves rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
-    customers.write.mode("overwrite").json(dir)
-    val back = Tables.readJson(spark, dir, customers.schema)
-    assert(back.count() === customers.count())
-    assert(back.exceptAll(customers).isEmpty && customers.exceptAll(back).isEmpty)
-  }
-
-  test("permissive json: malformed lines yield null rows, not job failure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson")
-    java.nio.file.Files.writeString(dir.resolve("part-0.json"),
-      """{"c_custkey": 1, "c_name": "ok", "c_acctbal": 1.5}
-        |{not json at all
-        |{"c_custkey": 2, "c_name": "ok2", "c_acctbal": 2.5}
-        |""".stripMargin)
-    val back = Tables.readJson(spark, dir.toString, customers.schema)
-    assert(back.count() === 3)
-    assert(back.filter($"c_custkey".isNotNull).count() === 2)
-  }
-
   test("orc round-trip preserves rows and schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
     customers.write.mode("overwrite").orc(dir)

@@ -157,7 +157,8 @@ class TablesSpec extends AnyFunSuite {
     val days = Seq("1999-12-31", "2001-01-01", "2000-06-15").map(LocalDate.parse)
     val f = written(days.toDF("d"))
     assert(range(f, "d") ===
-      Some(Range("DATE", days(0).toEpochDay, days(1).toEpochDay, Some((1999, 2001)))))
+      Some(Range("DATE", days(0).toEpochDay, days(1).toEpochDay, Some((days(0).toEpochDay, days(1).toEpochDay)))))
+    assert(range(f, "d").flatMap(_.years) === Some((1999, 2001)))
     val times = Seq(LocalDateTime.of(2003, 1, 1, 0, 0), LocalDateTime.of(2003, 12, 31, 23, 59, 59, 999999000))
     val g = written(times.toDF("t"))
     val r = range(g, "t").get
@@ -184,6 +185,9 @@ class TablesSpec extends AnyFunSuite {
     assert(range(f, "t", utc).map(r => (r.min, r.max, r.years)) ===
       Some((micros(at), micros(at), Some((2000, 2000)))))
     assert(range(f, "t", plus1).flatMap(_.years) === Some((2001, 2001)))
+    val newYear = LocalDate.of(2001, 1, 1).toEpochDay
+    assert(range(f, "t", plus1).flatMap(_.days) === Some((newYear, newYear)))
+    assert(range(f, "t", utc).flatMap(_.days) === Some((newYear - 1, newYear - 1)))
     // as year() takes it
     assert(plus1.read.parquet(f.path).select(year(col("t"))).as[Int].head() === 2001)
     val int96 = session("UTC", "INT96")
@@ -193,6 +197,23 @@ class TablesSpec extends AnyFunSuite {
       Tables.listing(int96, path).files.head
     }
     assert(range(g, "t", int96) === None)
+  }
+
+  test("range: days span every day the values fall on where the clock turns back across midnight") {
+    // St John's turned its clocks back from 00:01 to 23:01 the day before
+    // on 1999-10-31, so the later of these instants falls on the earlier day
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/St_Johns")
+    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val at = Seq("1999-10-31T02:30:30Z", "1999-10-31T03:00:00Z").map(Instant.parse)
+    val path = s"${tmpDir()}/t.parquet"
+    s.range(1).select(explode(array(at.map(t => lit(t)): _*)).as("t")).coalesce(1).write.parquet(path)
+    val f = Tables.listing(s, path).files.head
+    val r = range(f, "t", s).get
+    assert((r.min, r.max) === (micros(at(0)), micros(at(1))))
+    val (oct30, oct31) = (LocalDate.of(1999, 10, 30).toEpochDay, LocalDate.of(1999, 10, 31).toEpochDay)
+    assert(r.days === Some((oct30, oct31)))
+    assert(s.read.parquet(path).select(dayofmonth(col("t"))).as[Int].collect().toSeq.sorted === Seq(30, 31))
   }
 
   test("range: spans row groups, skips all-null ones, none for an all-null column or no statistics") {
