@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
   * §2.1 lists what the reference lacks; BASELINE.json's north star asks for
   * a complete engine anyway): multi-way joins, windows, semi/anti joins,
   * grouping rollups, distinct aggregation, set operations, and
-  * stream-shaped event analytics.
+  * event analytics over time windows.
   *
   * Determinism rules shared with the oracle (SURVEY.md §7.4.5): money/value
   * sums go through DECIMAL(18,2) so results are exact and independent of
@@ -208,10 +208,8 @@ object Breadth {
       .union(c.except(s).withColumn("set_op", lit("except")))
   }
 
-  /** Stream-shaped batch: hourly tumbling-window event rollup. The exact
-    * same grouping runs incrementally under Structured Streaming (see
-    * graft.streaming.EventStreams) — this is the batch twin the oracle can
-    * check.
+  /** Hourly tumbling-window event rollup: event count and exact value
+    * total per (hour, event type).
     */
   def eventsHourly(events: DataFrame): DataFrame =
     events

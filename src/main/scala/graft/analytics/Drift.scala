@@ -425,16 +425,16 @@ object Drift {
   /** Clamped fixed-width value bin — bounded domain [0, buckets). The
     * double division+floor is IEEE-identical cross-engine.
     */
-  private[graft] def bucketCol(value: Column, buckets: Int, vmax: Double): Column =
+  private def bucketCol(value: Column, buckets: Int, vmax: Double): Column =
     least(greatest(floor(value / (vmax / buckets)), lit(0.0)),
       lit((buckets - 1).toDouble)).cast("int")
 
   /** One count column per bucket over a `b` bin column — the fixed-width
-    * histogram as a SINGLE aggregation (streaming-legal: no second
-    * chained agg needed for the cumulative pass, which happens in the
-    * select below over the bounded bucket count).
+    * histogram as a SINGLE aggregation (no second chained agg for the
+    * cumulative pass, which happens in the select below over the bounded
+    * bucket count).
     */
-  private[graft] def histAggs(buckets: Int, prefix: String): Seq[Column] =
+  private def histAggs(buckets: Int, prefix: String): Seq[Column] =
     (0 until buckets).map(i =>
       sum(when(col("b") === i, 1L).otherwise(0L)).as(s"$prefix$i"))
 
@@ -443,7 +443,7 @@ object Drift {
     * (cum·n products overflow BIGINT at corpus scale), micro-quantized
     * by one integer division. Unit: bucket widths.
     */
-  private[graft] def w1Select(buckets: Int): Seq[Column] = {
+  private def w1Select(buckets: Int): Seq[Column] = {
     val D38 = DecimalType(38, 0)
     val cw = (0 until buckets).map(i => col(s"c$i"))
     val cr = (0 until buckets).map(i => col(s"r$i"))
@@ -457,7 +457,7 @@ object Drift {
     Seq(col("window_start"), nw.as("n_window"), nr.as("n_ref"), num.as("__w1_num"))
   }
 
-  private[graft] def w1Finish(thresholdMicro: Long): Seq[Column] = Seq(
+  private def w1Finish(thresholdMicro: Long): Seq[Column] = Seq(
     col("window_start"), col("n_window"),
     expr("CAST(__w1_num * 1000000 AS DECIMAL(38,0)) div " +
       "CAST(CAST(n_window AS DECIMAL(38,0)) * n_ref AS DECIMAL(38,0))")
@@ -466,20 +466,19 @@ object Drift {
       "CAST(CAST(n_window AS DECIMAL(38,0)) * n_ref AS DECIMAL(38,0))")
       .cast("long") >= thresholdMicro).as("drifted"))
 
-  /** Per-hour distribution-drift gate — batch twin of
-    * [[graft.streaming.EventStreams.driftGate]]: for every event hour,
-    * the EXACT integer Wasserstein-1 distance (in bucket-width units,
+  /** Per-hour distribution-drift gate: for every event hour, the EXACT
+    * integer Wasserstein-1 distance (in bucket-width units,
     * micro-quantized) between that hour's binned `value` histogram and
     * the full-corpus reference histogram. The online data-quality
     * monitor a training pipeline runs on its ingest stream: a window
     * whose value distribution walks away from the reference gets
     * flagged before it contaminates downstream statistics.
     *
-    * The histogram is ONE aggregation (a fixed column per bucket), so
-    * the identical code path is streaming-legal; the cumulative/W1 pass
-    * is a fixed expression over the bounded bucket count — no second
-    * agg, no window function. Products held in DECIMAL(38,0); the
-    * hash-compared output is the micro-quantized integer division.
+    * The histogram is ONE aggregation (a fixed column per bucket); the
+    * cumulative/W1 pass is a fixed expression over the bounded bucket
+    * count — no second agg, no window function. Products held in
+    * DECIMAL(38,0); the hash-compared output is the micro-quantized
+    * integer division.
     */
   def hourlyValueDrift(events: DataFrame, buckets: Int = 20,
                        vmax: Double = 500.0,

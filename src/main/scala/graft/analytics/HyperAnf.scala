@@ -378,21 +378,13 @@ object HyperAnf {
     curve.toSeq
   }
 
-  /** The neighbourhood-function curve over `rounds` register-MAX
-    * rounds, with the 90%-effective-diameter flag: reached_90 is true
-    * from the first t where N(t) ≥ 0.9·N(rounds) — the smallest such t
-    * IS the estimated effective diameter.
+  /** The neighbourhood-function curve of [[nfCurve]] with the
+    * 90%-effective-diameter flag: reached_90 is true from the first t
+    * where N(t) ≥ 0.9·N(last) — the smallest such t IS the estimated
+    * effective diameter. Taking the curve, not the edges, lets one
+    * register iteration feed both this and [[distanceStats]].
     *
-    * Output: (t, nf_micro, reached_90), t = 0..rounds.
-    */
-  def effectiveDiameter(edges: DataFrame, srcCol: String, dstCol: String,
-                        rounds: Int = 4,
-                        canonical: Boolean = false): DataFrame =
-    effectiveDiameterFromCurve(edges.sparkSession,
-      nfCurve(edges, srcCol, dstCol, rounds, canonical))
-
-  /** Build the d90 view from an already-computed curve, so one register
-    * iteration can feed both this and [[distanceStats]].
+    * Output: (t, nf_est, reached_90), t = 0..rounds.
     */
   def effectiveDiameterFromCurve(spark: org.apache.spark.sql.SparkSession,
                                  curve: Seq[java.math.BigDecimal]): DataFrame = {

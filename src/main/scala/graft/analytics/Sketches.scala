@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
 /** Count-min sketch (Cormode & Muthukrishnan 2005) over a key column —
-  * the fixed-memory frequency estimator streaming/telemetry pipelines use
-  * when the key domain is too large to count exactly.
+  * the fixed-memory frequency estimator telemetry pipelines use when the
+  * key domain is too large to count exactly.
   *
   * Scale shape: the sketch table is `depth × width` counters regardless of
   * input size. Building it is one explode(depth) → hash-agg pass whose
@@ -38,10 +38,12 @@ object Sketches {
     }: _*))
 
   /** The raw sketch: (i, bucket, cnt) counter cells. */
-  def countMin(df: DataFrame, keyCol: String, width: Int = 256): DataFrame =
+  def countMin(df: DataFrame, keyCol: String, width: Int = 256): DataFrame = {
+    require(width >= 1, s"count-min width must be >= 1, got $width")
     df.select(bucketStructs(col(keyCol), width).as("c"))
       .groupBy(col("c.i").as("i"), col("c.bucket").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
+  }
 
   /** Per-key CM estimate next to the exact count (the estimator's
     * ground-truth harness): (key, exact_count, cm_estimate), where
@@ -51,7 +53,7 @@ object Sketches {
     * broadcast cells.
     */
   def countMinEstimates(df: DataFrame, keyCol: String, width: Int = 256): DataFrame = {
-    val cells = countMin(df, keyCol, width)
+    val cells = countMin(df, keyCol, width) // rejects width < 1 up front
     val exact = df.groupBy(col(keyCol)).agg(count(lit(1)).as("exact_count"))
     exact
       .select(col(keyCol), col("exact_count"), bucketStructs(col(keyCol), width).as("c"))
@@ -61,19 +63,6 @@ object Sketches {
       .groupBy(col(keyCol), col("exact_count"))
       .agg(min(col("cnt")).as("cm_estimate"))
   }
-
-  /** Streaming sketch build: the same cells as [[countMin]] maintained
-    * incrementally over a stream. Counter cells are associative sums, so
-    * this is a plain streaming aggregation whose state is BOUNDED BY
-    * CONSTRUCTION at depth × width rows — the defining property of a
-    * sketch, and the reason no watermark is needed: state cannot grow
-    * with the key domain or stream length. Run in update/complete mode;
-    * the spec pins stream cells == batch cells on the same data.
-    */
-  def countMinStream(stream: DataFrame, keyCol: String, width: Int = 256): DataFrame =
-    stream.select(bucketStructs(col(keyCol), width).as("c"))
-      .groupBy(col("c.i").as("i"), col("c.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
 
   /** Heavy hitters over document tokens via the mergeable SpaceSaving
     * aggregate ([[graft.functions.SketchAggregates.top_k_sketch]]) — the

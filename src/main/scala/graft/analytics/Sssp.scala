@@ -25,18 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object Sssp {
 
-  /** Canonical weighted half-edge relation (src < dst, w) from a
-    * (basket, item) relation: pair counts via the Apriori pair expansion
-    * (same `maxBasketSize` skew guard as every basket consumer), then
-    * the affinity distance `max(10^6 div c_pair, 1)`.
-    */
-  def affinityEdges(basketItems: DataFrame, basketCol: String,
-                    itemCol: String): DataFrame =
-    affinityEdgesFromCounts(
-      Baskets.coOccurrenceCounts(basketItems, basketCol, itemCol))
-
-  /** The affinity-weight projection over a prebuilt
-    * [[Baskets.coOccurrenceCounts]] relation.
+  /** Canonical weighted half-edge relation (src < dst, w) over a
+    * [[Baskets.coOccurrenceCounts]] relation (pair counts via the Apriori
+    * pair expansion, with the `maxBasketSize` skew guard every basket
+    * consumer shares): the affinity distance `max(10^6 div c_pair, 1)`.
     */
   def affinityEdgesFromCounts(counts: DataFrame): DataFrame =
     counts.select(col("item_a").cast("long").as("src"),
@@ -75,13 +67,6 @@ object Sssp {
     }
     dist
   }
-
-  /** [[weightedDistances]] over [[affinityEdges]] of the co-bought
-    * graph (the q_sssp_weighted wiring).
-    */
-  def hubWeightedDistances(basketItems: DataFrame, basketCol: String,
-                           itemCol: String, rounds: Int = 3): DataFrame =
-    weightedDistances(affinityEdges(basketItems, basketCol, itemCol), rounds)
 
   /** DuckDB replay: same pair counts / weights / degree-ordered seed,
     * but FULL relaxation per unrolled round (no frontier delta) — the

@@ -203,9 +203,8 @@ object Dedup {
 
   /** The stored-index shape: banded minhash rows (doc_id, signature,
     * band, bh) for a corpus — build once, persist as a table, append per
-    * ingested batch; [[incrementalNearDup]] and the streaming
-    * `DocStreams.nearDupGate` probe it. Works on static AND streaming
-    * inputs (every step is a stateless per-row projection).
+    * ingested batch; [[incrementalNearDup]] probes it. Every step is a
+    * stateless per-row projection.
     */
   def minhashIndex(documents: DataFrame, shingleN: Int = 3,
                    numHashes: Int = 32, bands: Int = 8,

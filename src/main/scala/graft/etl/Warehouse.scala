@@ -351,14 +351,14 @@ object Warehouse {
     updated.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
 
-  /** Small-file compaction — the maintenance pass every streaming or
-    * micro-batch sink eventually needs (a 1-minute-trigger sink writes
-    * ~1440 files/day/partition; scans then pay one task + one footer
-    * read per file). Rewrites a dataset into ceil(rows/targetRecords)
-    * near-equal files using round-robin repartition, plus
-    * `maxRecordsPerFile` as the hard ceiling for writer-side splits.
-    * Optionally sorts within files by `sortCols` to restore min/max
-    * skipping that streaming appends destroyed (compose with
+  /** Small-file compaction — the maintenance pass an append-only table
+    * eventually needs (each night that [[buildAll]] appends adds files to a
+    * fact; scans then pay one task + one footer read per file). Rewrites
+    * a dataset into ceil(rows/targetRecords) near-equal files using
+    * round-robin repartition, plus `maxRecordsPerFile` as the hard
+    * ceiling for writer-side splits. Optionally range-partitions and
+    * sorts within files by `sortCols` to restore the min/max skipping
+    * that appends in arrival order destroy (compose with
     * [[graft.operators.ZOrder.clusterByZ]] for two-dimensional layouts).
     */
   def compact(df: DataFrame, outPath: String, targetRecords: Long,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * happens in batched partition-local functions.
   *
   * The IMAGE leg decodes for real: `javax.imageio` is pure-JVM
-  * (PNG/BMP/GIF need no native libraries), see [[decodeImage]]. The
+  * (PNG/BMP/GIF need no native libraries), see [[aHashOf]]. The
   * AUDIO leg decodes WAV/PCM for real too: `javax.sound.sampled` parses
   * RIFF/WAVE containers without native codecs, see [[decodeWav]]. The
   * VIDEO leg decodes multi-frame (animated) GIF for real — the one
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * the schema, the binary packing, the mapPartitions batch shape (the
   * Scala analogue of `mapInPandas` — one iterator per partition so
   * per-partition codec init happens once), and the
-  * frame-sampling/resizing plumbing over byte ranges.
+  * frame-sampling plumbing over byte ranges.
   */
 object Multimodal {
 
@@ -113,53 +113,6 @@ object Multimodal {
     }
   }
 
-  case class ImageDecoded(media_id: Long, img_width: Int, img_height: Int,
-                          n_pixels: Long, mean_luma: Double)
-
-  /** REAL image decode — pure-JVM `javax.imageio`, no native libraries.
-    * A payload that parses yields true pixel features (decoded
-    * dimensions + mean BT.601 luma); one that doesn't (the synthetic
-    * corpus packs text bytes) yields None, the quarantine path a
-    * curation pipeline routes undecodable media down. Only the `image`
-    * kind is attempted; audio/video stay with [[decodeStub]].
-    */
-  def decodeImage(r: MediaRecord): Option[ImageDecoded] =
-    if (r.kind != "image") None
-    else try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.content))
-      if (img == null) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        var sum = 0.0
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            sum += 0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) +
-              0.114 * (rgb & 0xff)
-            x += 1
-          }
-          y += 1
-        }
-        val n = w.toLong * h
-        Some(ImageDecoded(r.media_id, w, h, n, if (n == 0) 0.0 else sum / n))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Distributed image decode: mapPartitions keeps the
-    * one-init-per-partition codec shape (in-memory ImageIO, no temp-file
-    * cache); undecodable rows are dropped via flatMap.
-    */
-  def decodeImages(media: Dataset[MediaRecord]): Dataset[ImageDecoded] = {
-    implicit val enc = Encoders.product[ImageDecoded]
-    media.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false) // per-partition codec init
-      it.flatMap(decodeImage)
-    }
-  }
-
   // ------------------------------------------------------------- audio
 
   case class AudioRecord(media_id: Long, content: Array[Byte])
@@ -175,7 +128,7 @@ object Multimodal {
     * total energy Σ s² (silence / clipping detection) — all integers,
     * so a SQL oracle replays them bit-for-bit from the generating
     * signal. A payload that doesn't parse as WAV yields None, the
-    * quarantine path (same contract as [[decodeImage]]).
+    * quarantine path (same contract as [[aHashOf]]).
     */
   def decodeWav(r: AudioRecord): Option[AudioFeatures] =
     wavSamplesWithRate(r.content).map { case (samples, rate) =>
@@ -475,7 +428,7 @@ object Multimodal {
 
   /** Distributed per-frame video features: mapPartitions keeps the
     * one-init-per-partition decoder shape; undecodable payloads yield no
-    * rows (quarantine), matching [[decodeImage]]/[[decodeWav]].
+    * rows (quarantine), matching [[aHashOf]]/[[decodeWav]].
     */
   def videoFrameFeatures(media: Dataset[VideoRecord]): Dataset[VideoFrameFeatures] = {
     implicit val enc = Encoders.product[VideoFrameFeatures]
@@ -722,20 +675,6 @@ object Multimodal {
         s"filter(transform(sequence(0, ${n - 1}), " +
         s"i -> substring(content, i * $frameBytes + 1, $frameBytes)), " +
         "f -> length(f) > 0)")).as(Seq("frame_idx", "frame_bytes")))
-
-  /** Resize stand-in: deterministic decimation, keeping every `factor`-th
-    * byte of the payload (what a real implementation would do per pixel
-    * row after decode). Shows binary → binary transforms stay columnar.
-    */
-  def resizeStub(media: DataFrame, factor: Int = 4): DataFrame =
-    media.select(col("media_id"), col("kind"),
-      col("width"), col("height"),
-      (col("width") / factor).cast("int").as("out_width"),
-      (col("height") / factor).cast("int").as("out_height"),
-      expr(s"""filter(transform(sequence(1, greatest(length(content), 1), $factor),
-        i -> substring(content, i, 1)), f -> length(f) > 0)""").as("sampled")
-      ).withColumn("resized", expr("aggregate(sampled, cast('' as binary), (acc, x) -> acc || x)"))
-      .drop("sampled")
 
   // --------------------------------------- perceptual hash (aHash)
 

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Skew-mitigation primitives. AQE's skew-join splitting
   * (`spark.sql.adaptive.skewJoin.enabled`, on by default here) handles
-  * most runtime skew; these helpers are for the cases AQE can't fix —
-  * a single hot key whose *build* side still lands in one task, or skewed
-  * aggregation where the first shuffle itself is the bottleneck.
+  * most runtime skew; these helpers are for the case AQE can't fix —
+  * a single hot key whose *build* side still lands in one task.
   */
 object SkewJoin {
 
@@ -70,20 +69,6 @@ object SkewJoin {
       stream.repartition(par).join(broadcast(cand), key)
     } else saltedJoin(stream, cand, key, nSalts)
   }
-
-  /** Two-phase salted aggregation for skewed group keys: partial
-    * count/sum per (key, salt), then final re-aggregation per key. Spark's
-    * hash aggregate already does map-side partial combine; this adds an
-    * extra *shuffled* partial stage for the pathological case where even
-    * combined partials of one key overwhelm a single reducer.
-    */
-  def saltedSum(df: DataFrame, key: String, valueCol: String,
-                nSalts: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(xxhash64(struct(df.columns.map(col): _*)), lit(nSalts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
-      .groupBy(col(key))
-      .agg(sum("__n").as("n_rows"), sum("__s").as(s"sum_$valueCol"))
 
   /** Runtime-guarded auto-salting inner equi-join: the [[skewReport]]
     * diagnostic WIRED to the remedy. One bounded pre-job reads the top

@@ -954,16 +954,6 @@ object Ann {
       .drop("csim", "crank")
   }
 
-  /** IVF index build: assign every corpus vector to its nearest centroid.
-    * Returns (vec_id, v, cent_id) — written out `partitionBy("cent_id")`,
-    * this is the posting-list layout whose probes are partition-pruned
-    * reads (demonstrated in ScaleTechniquesSpec).
-    */
-  def ivfAssign(embeddings: DataFrame, centroidStep: Int = 29): DataFrame = {
-    val e = corpus(embeddings)
-    nearestCentroids(ivfCentroids(e, centroidStep), e, "vec_id", "v", 1)
-  }
-
   /** IVF probe + re-rank over an EXPLICIT posting relation (vec_id, v,
     * cent_id) — the search half both the static [[ivfTopK]] build and
     * the CDC-[[ivfMaintainedTopK]] index share: queries probe the

@@ -247,15 +247,6 @@ object Unigram {
         col("cnt"), expr(s"(cnt * $Nano) div n").as("p_nano"))
   }
 
-  /** Train, then Viterbi-encode the whole corpus with the final model:
-    * per document (doc_id, n_words, n_pieces) — the [[Bpe.encodeCorpus]]
-    * statistics for the unigram family.
-    */
-  def encodeStats(documents: DataFrame, seedMultis: Int = 60,
-                  vocabMultis: Int = 40, rounds: Int = 2): DataFrame =
-    encodeStatsWith(documents,
-      finalProbs(documents, seedMultis, vocabMultis, rounds))
-
   /** Viterbi-encode with an already-trained model ([[finalProbs]]). */
   def encodeStatsWith(documents: DataFrame,
                       probs: Seq[(String, Long, Long)]): DataFrame = {
@@ -595,7 +586,7 @@ object Unigram {
        |       CAST(cnt * $Nano // (SELECT SUM(cnt) FROM v3) AS BIGINT) AS p_nano
        |FROM v3""".stripMargin
 
-  /** DuckDB twin of [[encodeStats]] (defaults). */
+  /** DuckDB twin of [[encodeStatsWith]] over the default-trained model. */
   def encodeOracleSql: String =
     s"""WITH RECURSIVE $encodeChainSql
        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,

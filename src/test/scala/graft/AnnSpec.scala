@@ -142,66 +142,6 @@ class AnnSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("ivm ivf streaming: micro-batched CDC folds land on the fresh rebuild") {
-    // the arrival-time twin of q_ivm_ann (the IvmSpec foreachBatch
-    // discipline applied to the ANN index), via the MAIN-SOURCE entry
-    // point graft.streaming.CdcStreams.ivfCdcApply (promoted from this
-    // spec in round 10 — a user wiring real ingest calls the library,
-    // not a test): a CDC stream of (vec_id, v, is_delete) batches
-    // maintains versioned posting-list snapshots via
-    // ivfMaintainPostings under the SAME frozen centroids; after two
-    // batches the maintained postings must equal a from-scratch
-    // assignment of the merged corpus — per-batch work stays ∝ batch
-    // (the batch-side plan is the one the per-delta plan test above
-    // pins).
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, round, row_number, asc, desc}
-    implicit val sqlCtx = spark.sqlContext
-    val e = planted.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    val old = e.filter(pmod(col("vec_id"), lit(13)) =!= 0)
-    val cents = old.filter(pmod(col("vec_id"), lit(29)) === 0)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    def assign(points: org.apache.spark.sql.DataFrame) = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("vec_id").orderBy(desc("csim"), asc("cent_id"))
-      points.join(broadcast(cents))
-        .select(col("vec_id"), col("v"), col("cent_id"),
-          round(Ann.cosine(col("v"), col("cv")), 6).as("csim"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select("vec_id", "v", "cent_id")
-    }
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_ivf_tbl").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_ivf_chk").toString
-    val stream = MemoryStream[(Long, Seq[Double], Boolean)]
-    val q = graft.streaming.CdcStreams.ivfCdcApply(
-      stream.toDF().toDF("vec_id", "v", "is_delete"),
-      assign(old), cents, tableDir, chk)
-    val insRows = e.filter(pmod(col("vec_id"), lit(13)) === 0)
-      .select("vec_id", "v").as[(Long, Seq[Double])].collect()
-    val delRows = old.filter(pmod(col("vec_id"), lit(17)) === 3)
-      .select("vec_id", "v").as[(Long, Seq[Double])].collect()
-    try {
-      // batch 1: the inserts arrive; batch 2: the retractions
-      stream.addData(insRows.map { case (i, v) => (i, v, false) }.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(delRows.map { case (i, v) => (i, v, true) }.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(s"$tableDir/v2")
-      .select("vec_id", "cent_id").as[(Long, Long)].collect().toSet
-    val merged = old
-      .join(e.filter(pmod(col("vec_id"), lit(17)) === 3 &&
-        pmod(col("vec_id"), lit(13)) =!= 0).select("vec_id"),
-        Seq("vec_id"), "left_anti")
-      .unionByName(e.filter(pmod(col("vec_id"), lit(13)) === 0))
-    val fresh = assign(merged)
-      .select("vec_id", "cent_id").as[(Long, Long)].collect().toSet
-    assert(got === fresh, "streamed CDC postings != fresh rebuild on merged corpus")
-    assert(got.nonEmpty)
-    spark.catalog.clearCache()
-  }
-
   test("near-dup pairs: planted near-identical vectors found, noise absent") {
     val got = Ann.nearDupPairs(planted, threshold = 0.95)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet

@@ -72,6 +72,22 @@ class BreadthSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
+  test("session_window agrees with the lag-based sessionizer on counts") {
+    val batch = Tables.events(spark, sfDir)
+    // batch-mode session_window: Spark's built-in 30-minute-gap sessionizer
+    val viaWindow = batch
+      .groupBy(org.apache.spark.sql.functions.session_window($"ts", "30 minutes"),
+        $"user_id")
+      .count()
+      .groupBy("user_id")
+      .agg(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n_sessions"))
+      .as[(Long, Long)].collect().toMap
+    val viaLag = graft.analytics.Breadth.eventSessions(batch)
+      .select("user_id", "n_sessions").as[(Long, Long)].collect().toMap
+    assert(viaWindow === viaLag)
+  }
+
   test("running revenue: cumulative is monotonically non-decreasing") {
     val rows = Breadth.runningRevenue(Tables.orders(spark, sfDir))
       .orderBy("month_start")

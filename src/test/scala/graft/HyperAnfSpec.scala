@@ -216,8 +216,8 @@ class HyperAnfSpec extends AnyFunSuite {
 
   test("nf curve tracks the exact neighbourhood function") {
     val edges = barbell.toDF("item_a", "item_b")
-    val out = HyperAnf.effectiveDiameter(edges, "item_a", "item_b",
-        rounds = 6)
+    val out = HyperAnf.effectiveDiameterFromCurve(spark,
+        HyperAnf.nfCurve(edges, "item_a", "item_b", 6))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)))
       .sortBy(_._1)
     // exact N(t) by BFS over the 13-node barbell
@@ -306,8 +306,8 @@ class HyperAnfSpec extends AnyFunSuite {
 
   test("estimated effective diameter lands near the exact d90") {
     val edges = barbell.toDF("item_a", "item_b")
-    val out = HyperAnf.effectiveDiameter(edges, "item_a", "item_b",
-        rounds = 6)
+    val out = HyperAnf.effectiveDiameterFromCurve(spark,
+        HyperAnf.nfCurve(edges, "item_a", "item_b", 6))
       .collect().map(r => (r.getInt(0), r.getBoolean(2))).sortBy(_._1)
     val estD90 = out.find(_._2).get._1
     // exact d90 of the barbell (N(t)/N(6) ≥ 0.9 first at t = 4)

@@ -57,7 +57,7 @@ class IvmSpec extends AnyFunSuite {
   test("streaming deltas folded per micro-batch equal the final recompute") {
     // the streaming-IVM twin: foreachBatch maintains a versioned agg with
     // applyDelta; two batches of CDC land on the recompute of the final
-    // snapshot (CdcStreams-style versioning, delta-sized work per batch)
+    // snapshot (one versioned directory per batch, delta-sized work)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val tableDir = java.nio.file.Files.createTempDirectory("graft_ivm_tbl").toString

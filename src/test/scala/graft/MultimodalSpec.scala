@@ -31,33 +31,6 @@ class MultimodalSpec extends AnyFunSuite {
     feats1.unpersist()
   }
 
-  test("decodeImages: real PNG/BMP payloads decode; garbage and non-image kinds drop") {
-    import java.awt.image.BufferedImage
-    def encode(fmt: String, w: Int, h: Int, rgb: (Int, Int, Int) => Int): Array[Byte] = {
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb(x, y, 0))
-      val out = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, fmt, out))
-      out.toByteArray
-    }
-    // 4x2 PNG, all pixels (200, 100, 50) → luma = .299*200+.587*100+.114*50
-    val png = encode("png", 4, 2, (_, _, _) => (200 << 16) | (100 << 8) | 50)
-    // 3x3 BMP, all black except one white pixel
-    val bmp = encode("bmp", 3, 3, (x, y, _) => if (x == 0 && y == 0) 0xffffff else 0)
-    val rows = Seq(
-      MediaRecord(1L, "image", png, 4, 2, "png"),
-      MediaRecord(2L, "image", bmp, 3, 3, "bmp"),
-      MediaRecord(3L, "image", "not an image".getBytes, 0, 0, "png"),
-      MediaRecord(4L, "audio", png, 4, 2, "wav")) // right bytes, wrong kind
-    val got = Multimodal.decodeImages(spark.createDataset(rows))
-      .collect().map(d => d.media_id -> d).toMap
-    assert(got.keySet === Set(1L, 2L))
-    assert(got(1L).img_width === 4 && got(1L).img_height === 2 && got(1L).n_pixels === 8L)
-    assert(math.abs(got(1L).mean_luma - (0.299 * 200 + 0.587 * 100 + 0.114 * 50)) < 1e-9)
-    assert(got(2L).n_pixels === 9L)
-    assert(math.abs(got(2L).mean_luma - 255.0 / 9) < 1e-9)
-  }
-
   test("frameSample: first frame is the payload prefix, no empty frames") {
     val frames = Multimodal.frameSample(media, n = 4, frameBytes = 64).cache()
     assert(frames.filter($"frame_idx" < 0 || $"frame_idx" > 3).count() === 0)
@@ -68,16 +41,6 @@ class MultimodalSpec extends AnyFunSuite {
       .count()
     assert(first === 0)
     frames.unpersist()
-  }
-
-  test("resizeStub: output length is ceil(n/factor), dims scaled") {
-    val out = Multimodal.resizeStub(media, factor = 4)
-      .join(media.select($"media_id", org.apache.spark.sql.functions.length($"content").as("len")),
-        Seq("media_id"))
-    val bad = out.filter(
-      org.apache.spark.sql.functions.length($"resized") =!=
-        org.apache.spark.sql.functions.ceil($"len" / 4.0).cast("int")).count()
-    assert(bad === 0)
   }
 
   test("WAV round-trip: packed signal decodes to formula-exact features") {

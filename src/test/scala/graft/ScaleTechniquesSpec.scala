@@ -22,17 +22,6 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
   }
 
-  test("saltedSum: equal to direct aggregation") {
-    val li = Tables.lineitem(spark, sfDir)
-    val direct = li.groupBy("l_suppkey")
-      .agg(count(lit(1)).as("n_rows"), sum("l_quantity").cast("decimal(18,2)").as("s"))
-    val salted = SkewJoin.saltedSum(
-      li.select("l_suppkey", "l_quantity").withColumn("l_quantity",
-        $"l_quantity".cast("decimal(18,2)")), "l_suppkey", "l_quantity")
-      .select($"l_suppkey", $"n_rows", $"sum_l_quantity".cast("decimal(18,2)").as("s"))
-    assert(direct.exceptAll(salted).isEmpty && salted.exceptAll(direct).isEmpty)
-  }
-
   test("dispatchedBlockJoin: broadcast under budget, salted beyond it, same rows") {
     val p = Tables.part(spark, sfDir).select("p_brand", "p_partkey", "p_name")
     val a = p.select($"p_brand", $"p_partkey".as("key_a"))
@@ -56,23 +45,6 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       assert(salted.select(cols: _*).exceptAll(bc).isEmpty &&
         bc.exceptAll(salted.select(cols: _*)).isEmpty)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("IVF posting lists partitioned by centroid: probes are partition-pruned") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    val assigned = graft.similarity.Ann.ivfAssign(
-      Tables.embeddings(spark, sfDir), centroidStep = 29)
-    assigned.write.mode("overwrite").partitionBy("cent_id").parquet(out)
-    val nPartitions = new java.io.File(out).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("cent_id="))
-    assert(nPartitions > 1)
-    // a probe of 2 centroids must plan with partition filters on cent_id
-    val probe = spark.read.parquet(out).filter($"cent_id".isin(0, 29))
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cent_id"),
-      s"expected cent_id partition pruning in:\n$plan")
-    assert(probe.count() > 0)
-    assert(probe.select("cent_id").distinct().count() <= 2)
   }
 
   test("bucketed tables: co-located join plans without a shuffle exchange") {

@@ -3,47 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Warehouse
-import graft.io.Tables
-import graft.streaming.EventStreams
 
-/** The write-side maintenance features: the exactly-once foreachBatch
-  * sink (replay-idempotence checked directly), the CDC upsert and
-  * small-file compaction.
+/** The write-side maintenance features: the CDC upsert and small-file
+  * compaction.
   */
 class SinkWarehouseSpec extends AnyFunSuite {
-  import TestSpark.{spark, sfDir}
+  import TestSpark.spark
   import spark.implicits._
-
-  test("foreachBatch sink delivers every row once; batch replay is a no-op") {
-    val src = java.nio.file.Files.createTempDirectory("graft_fb_src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_fb_out").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_fb_chk").toString
-
-    val events = Tables.events(spark, sfDir)
-      .select("event_id", "ts", "user_id", "event_type", "value").cache()
-    events.filter($"event_id" < 600).coalesce(1).write.mode("append").parquet(src)
-
-    val stream = spark.readStream.schema(events.filter($"event_id" < 600).schema).parquet(src)
-    val q = EventStreams.idempotentParquetSink(stream, out, chk)
-    try q.processAllAvailable() finally q.stop()
-
-    val sunk = spark.read.parquet(out)
-    val n = events.filter($"event_id" < 600).count()
-    assert(sunk.drop("batch_id").count() === n)
-    assert(sunk.select("event_id").distinct().count() === n)
-
-    // simulate the sink-wrote-but-checkpoint-didn't-commit crash: replay
-    // the same (batchId, data) — the keyed overwrite must leave the sink
-    // contents identical, not doubled
-    val batchIds = sunk.select("batch_id").distinct().as[Long].collect()
-    val replayId = batchIds.min
-    EventStreams.writeBatchIdempotent(
-      events.filter($"event_id" < 600), replayId, out)
-    val after = spark.read.parquet(out)
-    assert(after.count() === n, "replayed batch must overwrite, not append")
-    assert(after.select("event_id").distinct().count() === n)
-    events.unpersist()
-  }
 
   test("upsertByKey: updates replace, inserts append, others pass through") {
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))

@@ -64,7 +64,7 @@ class SketchAggregatesSpec extends AnyFunSuite {
     // the custom TypedImperativeAggregate composes with Structured
     // Streaming unmodified: state is the serialized k-entry buffer,
     // merged per trigger — bounded by construction, no watermark needed
-    // (the defining sketch property, same argument as countMinStream)
+    // (the defining sketch property)
     val items = (1 to 40).flatMap(i => Seq.fill(600 / i + 1)(f"w$i%02d"))
     val (batch1, batch2) = new scala.util.Random(11).shuffle(items).splitAt(items.size / 2)
     val n = items.size.toLong

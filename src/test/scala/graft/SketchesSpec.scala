@@ -31,24 +31,12 @@ class SketchesSpec extends AnyFunSuite {
     assert(est("c") === ((1L, 1L)))
   }
 
-  test("streaming sketch converges to the batch sketch cell-for-cell") {
-    val base = graft.io.Tables.events(spark, "/root/testdata/sf0.001")
-      .select(col("user_id").cast("string").as("k"))
-    val src = java.nio.file.Files.createTempDirectory("graft_cms_src").toString
-    base.coalesce(2).write.mode("append").parquet(src)
-    val chk = java.nio.file.Files.createTempDirectory("graft_cms_chk").toString
-    val q = Sketches.countMinStream(
-        spark.readStream.schema(base.schema).parquet(src), "k", width = 64)
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("cms_cells")
-      .option("checkpointLocation", chk).start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.sql("SELECT * FROM cms_cells")
-      .as[(Int, Long, Long)].collect().toSet
-    val batch = Sketches.countMin(base, "k", width = 64)
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(batch.nonEmpty)
+  test("a width below 1 is rejected at call time, before any job runs") {
+    val rows = Seq("a", "b").toDF("k")
+    for (w <- Seq(0, -1)) {
+      assertThrows[IllegalArgumentException](Sketches.countMin(rows, "k", width = w))
+      assertThrows[IllegalArgumentException](Sketches.countMinEstimates(rows, "k", width = w))
+    }
   }
 
   test("sketch size is depth × ≤width regardless of input size") {

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * threads run on that session meanwhile; writers take per-write options
   * instead. A JVM-wide map of results (a `ConcurrentHashMap` memo) keeps
   * serving what it saw before a write and keeps every session it saw
-  * reachable; queries build their inputs per call instead.
+  * reachable; queries build their inputs per call instead. The
+  * library is a nightly batch load plus batch queries: a Structured
+  * Streaming entry point is surface no query or workload runs.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -110,5 +112,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"no JVM-wide memo in library code; build inputs per call:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no Structured Streaming under src/main/scala") {
+    val apis = Seq("writeStream", "readStream", "foreachBatch", "GroupState", "withWatermark")
+    val files = mainSources.filter(f =>
+      Files.readAllLines(f).asScala.exists(line => apis.exists(line.contains)))
+    if (files.nonEmpty)
+      fail(s"batch library: no Structured Streaming API (${apis.mkString(", ")}) in:\n" +
+        files.map(_.toString).sorted.mkString("\n"))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analytics.Sssp
+import graft.analytics.{Baskets, Sssp}
 
 class SsspSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -38,7 +38,8 @@ class SsspSpec extends AnyFunSuite {
     // pairs come from two baskets sharing {1,2} -> c_pair=2, w=500000
     val items = Seq((10L, 1L), (10L, 2L), (11L, 1L), (11L, 2L), (12L, 1L))
       .toDF("bid", "item")
-    val e = Sssp.affinityEdges(items, "bid", "item")
+    val e = Sssp.affinityEdgesFromCounts(
+        Baskets.coOccurrenceCounts(items, "bid", "item"))
       .as[(Long, Long, Long)].collect()
     assert(e === Array((1L, 2L, 500000L)))
   }
