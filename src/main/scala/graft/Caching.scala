@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Eager cache materialization.
@@ -129,28 +129,4 @@ object Caching {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
-
-  /** Scoped release for the library's cache contract.
-    *
-    * Self-join-shaped operators (`Dedup.minhashDedup`, `Ann.lshTopK`,
-    * `Curation.curate`, …) persist a small shared intermediate because both
-    * join sides reference it; results are lazy, so the operator cannot know
-    * when the caller has consumed them. The raw contract — "call
-    * `spark.catalog.clearCache()` after consuming each result" — is easy to
-    * forget in a long-lived session. `withCaches` makes it structural:
-    * consume everything inside the scope; the caches are released on the
-    * way out, success or failure.
-    *
-    * Scope semantics: release is SESSION-WIDE (`catalog.clearCache()`), the
-    * same call Verify makes between queries — it drops every
-    * DataFrame/table cache in the session, including ones created before
-    * the scope. Don't wrap a scope around work whose caches you want to
-    * keep warm; nest queries inside one scope per logical unit instead.
-    * Results must be MATERIALIZED (collect/write/count) inside the scope —
-    * a lazy DataFrame that escapes recomputes its operator's self-join
-    * from scratch (correct, but the cache no longer helps).
-    */
-  def withCaches[A](spark: SparkSession)(body: => A): A =
-    try body
-    finally spark.catalog.clearCache()
 }

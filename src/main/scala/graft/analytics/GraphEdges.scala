@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Returns a MATERIALIZED (persisted, computed) relation (src, dst) —
   * callers either unpersist it when done or rely on the library cache
-  * contract (`graft.Caching.withCaches` / the harness's per-query
-  * clearCache).
+  * contract (`spark.catalog.clearCache()` after consuming it, as the
+  * harness does per query).
   */
 object GraphEdges {
 

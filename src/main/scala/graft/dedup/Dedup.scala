@@ -34,10 +34,9 @@ import graft.text.TextOps
   * operators persist their shared intermediate (MEMORY_AND_DISK) because
   * both join sides reference it — the result is lazy, so the operator
   * itself cannot know when it is safe to unpersist. After consuming the
-  * returned DataFrame (collect/write), the caller releases the cache —
-  * structurally with [[graft.Caching.withCaches]] (unpersists on scope
-  * exit), or by hand with `spark.catalog.clearCache()` (what Verify
-  * does between queries). In a long-lived session, skipping
+  * returned DataFrame (collect/write), the caller releases the cache
+  * with `spark.catalog.clearCache()` (what Verify does between
+  * queries). In a long-lived session, skipping
   * this accumulates cached blocks until executor storage evicts them
   * under pressure — safe but wasteful.
   */

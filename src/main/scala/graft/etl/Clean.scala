@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.DataFrame
 
 /** Data-cleaning combinator: the Spark-native equivalent of the reference's
   * `clean_dataframe` (`filmETLs.ipynb#cell2:1-25`, `rentalFilmDAG.py:27-33`):
@@ -24,18 +23,6 @@ object Clean {
   /** C1 + C2 as a pure DataFrame combinator (no counting, single pass). */
   def clean(df: DataFrame): DataFrame =
     df.na.drop("any").dropDuplicates()
-
-  /** C1 + C2 + C3 without the extra counting job: the input row count is
-    * attached as an `Observation` metric collected during whatever action
-    * the caller runs anyway (SURVEY.md §7.3). After an action,
-    * `removed = obs.get("rows_in") - <output rows>`. At 100 TB this halves
-    * the audit's cost versus [[cleanCounted]]'s extra pass.
-    */
-  def cleanObserved(df: DataFrame, label: String = "clean_audit"): (DataFrame, Observation) = {
-    val obs = new Observation(label)
-    val observed = df.observe(obs, count(lit(1)).as("rows_in"))
-    (clean(observed), obs)
-  }
 
   /** C1 + C2 + C3: cleaned frame plus removed-row count. Runs two Spark
     * jobs (count before / count after) like the reference's

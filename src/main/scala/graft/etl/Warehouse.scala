@@ -101,9 +101,9 @@ object Warehouse {
     * output files; the manifest keeps each file's count, so a build reads
     * only the footers of the files it wrote. The build copies the
     * session's Hadoop configuration once, for every listing, footer and
-    * manifest it touches. (The C3 cleaning audit is a
-    * per-frame concern: `Clean.cleanCounted` and `cleanObserved` return the
-    * removed-count around individual builders where it is needed.)
+    * manifest it touches. (The C3 cleaning audit is a per-frame concern:
+    * `Clean.cleanCounted` returns the removed-count around individual
+    * builders where it is needed.)
     */
   def buildAll(spark: SparkSession, inDir: String, outDir: String): Seq[BuildReport] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -134,10 +134,7 @@ object Warehouse {
         val held = reach(l.out.files, key, span(delta(input), key))
         val unseen =
           if (held.isEmpty) fresh
-          else fresh.join(
-            if (held == l.out.files) Tables.parquet(spark, l.dir, conf)
-            else Tables.read(spark, l.out, held, conf),
-            fresh.columns.toSeq, "left_anti")
+          else fresh.join(Tables.read(spark, l.out, held, conf), fresh.columns.toSeq, "left_anti")
         Tables.write(unseen, l.dir, mode = "append")
       }
     }

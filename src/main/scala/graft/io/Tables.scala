@@ -19,8 +19,10 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
 import org.apache.parquet.schema.Type.Repetition.REPEATED
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over the driver fixtures (`TESTDATA.md`).
@@ -31,21 +33,25 @@ import org.apache.spark.sql.types.StructType
   * so schemas come from the file footers — [[expectedColumns]] documents the
   * contract and lets callers assert it.
   *
-  * Reads never start a Spark job for the schema: [[parquet]] lists the path
-  * on the driver, reads ONE footer there and hands the schema to the
-  * reader. That is Spark's own `mergeSchema=false` rule (the first data
-  * file by path, all files assumed consistent), which a plain
-  * `spark.read.parquet` runs as a one-task job shipping the whole Hadoop
-  * configuration to read that one footer. Where the rule does not apply —
-  * a missing path, no data file, a parquet summary file (which Spark
-  * prefers), an unreadable footer, or `spark.sql.parquet.mergeSchema` on
-  * — `spark.read.parquet` runs unchanged, so Spark raises its own errors
-  * and does its own merging.
+  * Every read is [[read]] of a [[listing]]: the data files under a path,
+  * listed once on the driver. Spark then lists nothing: the relation is
+  * built over a file index that holds exactly the listed files and infers
+  * `k=v` partition columns from their directories, as Spark's own does.
+  * Nor does a read start a Spark job for the schema: it is the footer
+  * schema of the table's first data file by path, read on the driver.
+  * That is Spark's own `mergeSchema=false` rule (all files assumed
+  * consistent), which a plain `spark.read.parquet` runs as a one-task job
+  * shipping the whole Hadoop configuration to read that one footer. Where
+  * the rule does not apply — a parquet summary file (which Spark prefers),
+  * an unreadable footer, or `spark.sql.parquet.mergeSchema` on — Spark
+  * infers the schema from the listed files its own way, so it raises its
+  * own errors and does its own merging. A listing with no data file (a
+  * missing path, an empty directory) reads through `spark.read.parquet`,
+  * which raises Spark's own error.
   *
   * A reader that needs one consistent set of files — a warehouse build
-  * whose inputs receive new files while it runs — lists them once
-  * ([[listing]]) and reads exactly those ([[read]]), with the same listing
-  * and schema rules.
+  * whose inputs receive new files while it runs — lists them once and
+  * reads exactly those, or any subset of them, with the table's schema.
   *
   * Footers also give a file's rows ([[rowCount]]) and the least and
   * greatest value of an integer, date or timestamp column ([[range]]), so
@@ -87,31 +93,22 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
 
-  /** `spark.read.parquet(path)` with the schema read from one footer on
-    * the driver (no schema-inference job). Partition columns are still
-    * discovered by the file index, so a `partitionBy` directory reads
-    * back with them.
-    */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    parquet(spark, path, spark.sessionState.newHadoopConf())
-
-  def parquet(spark: SparkSession, path: String, conf: Configuration): DataFrame =
-    footerSchema(spark, conf, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
-    }
+  /** Every data file under `path` now, read as [[read]] reads a listing. */
+  def parquet(spark: SparkSession, path: String): DataFrame = read(spark, listing(spark, path))
 
   /** One data file of a table at one moment: what [[listing]] finds,
     * [[read]] reads and a warehouse build manifest records.
     */
   final case class DataFile(path: String, length: Long, mtime: Long)
 
-  /** The data files under `root` (qualified), sorted by path. */
-  final case class Listing(root: String, files: Seq[DataFile])
+  /** The data files under `root` (qualified), sorted by path, and the
+    * parquet summary files beside them.
+    */
+  final case class Listing(root: String, files: Seq[DataFile], summaries: Seq[DataFile])
 
   /** Every data file under `path` now: the names Spark's file listing keeps,
-    * without parquet summary files, recursively; no file where the path is
-    * missing. Driver-side, no Spark job.
+    * recursively, with parquet summary files apart; no file where the path
+    * is missing. Driver-side, no Spark job.
     */
   def listing(spark: SparkSession, path: String): Listing =
     listing(spark.sessionState.newHadoopConf(), path)
@@ -121,37 +118,62 @@ object Tables {
     val fs = root.getFileSystem(conf)
     def walk(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filter(c => listed(c.getPath.getName) && !summary(c.getPath.getName)).flatMap(walk)
-    val files = if (!fs.exists(root)) Nil else walk(fs.getFileStatus(root))
-    Listing(fs.makeQualified(root).toString, files
-      .map(f => DataFile(f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_.path))
+      else fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName)).flatMap(walk)
+    val (summaries, files) = (if (!fs.exists(root)) Nil else walk(fs.getFileStatus(root)))
+      .partition(f => summary(f.getPath.getName))
+    def sorted(fs: Seq[FileStatus]) =
+      fs.map(f => DataFile(f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_.path)
+    Listing(fs.makeQualified(root).toString, sorted(files), sorted(summaries))
   }
 
-  /** Read exactly `files` of `table` (all of them in the overload), whatever
-    * lands under its root meanwhile. The schema is the footer schema of the
-    * table's first file, as [[parquet]] reads the whole directory, so a
-    * subset reads with the table's types; partition columns are discovered
-    * under the root. An empty listing reads through [[parquet]], which
-    * raises Spark's own error for a missing or empty table; with
-    * `spark.sql.parquet.mergeSchema` on, Spark merges the files' schemas.
-    * As in any read of many paths, more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
-    * are looked up by a Spark job.
+  /** Read exactly `files` of `table` (all of them in the overloads), whatever
+    * lands under its root meanwhile, with the table's schema: the footer
+    * schema of its first file, or Spark's inference from `files` and the
+    * table's summary files where that rule does not apply. Partition
+    * columns are inferred from the files' directories under the root. An
+    * empty listing reads through `spark.read.parquet`, which raises Spark's
+    * own error for a missing or empty table.
     */
   def read(spark: SparkSession, table: Listing, files: Seq[DataFile],
            conf: Configuration): DataFrame = {
-    if (table.files.isEmpty) return parquet(spark, table.root, conf)
-    require(files.nonEmpty, s"no file of ${table.root} to read")
-    val schema =
-      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-      else try Some(footerSchema(spark, conf, status(table.files.head)))
-      catch { case NonFatal(_) => None }
-    val reader = schema.fold(spark.read)(spark.read.schema)
-    // a partition directory's files read back with its columns; a table
-    // that is one file has no directory to discover them under
-    (if (files.exists(_.path != table.root)) reader.option("basePath", table.root) else reader)
-      .parquet(files.map(_.path): _*)
+    require(files.nonEmpty || table.files.isEmpty, s"no file of ${table.root} to read")
+    val sqlConf = spark.sessionState.conf
+    // Spark's `mergeSchema=false` rule, on the driver
+    val footer = table.files.headOption
+      .filter(_ => table.summaries.isEmpty && !sqlConf.isParquetSchemaMergingEnabled)
+      .flatMap(f => try Some(footerSchema(spark, conf, status(f))) catch { case NonFatal(_) => None })
+    lazy val index = new ListedIndex(spark, qualified(table.root), files, footer)
+    // as `DataSource.resolveRelation` takes them: partition columns leave a
+    // given schema for the directories', and stay in place in an inferred one
+    def given(s: StructType) = StructType(s.filterNot(f =>
+      index.partitionSchema.exists(p => sqlConf.resolver(p.name, f.name))))
+    def inferred = new ParquetFileFormat().inferSchema(spark, Map.empty, (table.summaries ++ files).map(status))
+    (if (files.isEmpty) None else footer.map(given).orElse(inferred)) match {
+      case Some(data) => spark.baseRelationToDataFrame(HadoopFsRelation(
+        index, index.partitionSchema, SchemaBridge.nullable(data), None, new ParquetFileFormat(), Map.empty)(spark))
+      case None => spark.read.parquet(table.root)
+    }
+  }
+
+  /** Spark's file index over `root` whose one listing is `files`: Spark
+    * lists nothing and infers partition columns from the files'
+    * directories. It equals another only over the same files, so a plan
+    * (a cached frame, a reused exchange) over one set of a table's files
+    * never stands for a plan over another.
+    */
+  private final class ListedIndex(spark: SparkSession, root: Path, val files: Seq[DataFile],
+                                  schema: Option[StructType])
+    extends InMemoryFileIndex(spark, Seq(root), Map.empty, schema, new FileStatusCache {
+      private val leaves = files.map(status).toArray
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Some(leaves)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }) {
+    override def equals(o: Any): Boolean = o match {
+      case l: ListedIndex => super.equals(l) && l.files == files
+      case _ => false
+    }
+    override def hashCode: Int = (super.hashCode, files).hashCode
   }
 
   def read(spark: SparkSession, table: Listing, files: Seq[DataFile]): DataFrame =
@@ -260,33 +282,15 @@ object Tables {
     ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(status(file), conf), ParquetMetadataConverter.NO_FILTER)
 
-  private def status(f: DataFile) = new FileStatus(f.length, false, 0, 0, f.mtime, new Path(f.path))
+  private def status(f: DataFile) = new FileStatus(f.length, false, 0, 0, f.mtime, qualified(f.path))
 
-  /** The schema Spark would infer for `path` with schema merging off, or
-    * None where [[parquet]] leaves the read to Spark.
+  /** `path` as Spark qualifies a path it reads: a scheme without an
+    * authority (`file:`) gets an empty one, so file names read back as
+    * `spark.read.parquet` gives them (`file:///…`).
     */
-  private def footerSchema(spark: SparkSession, hadoopConf: Configuration,
-                           path: String): Option[StructType] = {
-    val root = new Path(path)
-    if (spark.sessionState.conf.isParquetSchemaMergingEnabled || !listed(root.getName)) return None
-    val fs = root.getFileSystem(hadoopConf)
-    // Spark infers from a summary file if there is one, else from the
-    // least data file path. Depth-first over siblings ordered by how their
-    // paths sort as prefixes (a directory as `name/`), the first leaf
-    // reached is the least path, so the walk lists one directory per level.
-    def firstFile(st: FileStatus): Option[FileStatus] =
-      if (!st.isDirectory) Some(st)
-      else {
-        val children = fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName))
-        children.find(c => summary(c.getPath.getName)).orElse(
-          children.sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
-            .iterator.flatMap(firstFile).nextOption())
-      }
-    try firstFile(fs.getFileStatus(root)).filterNot(f => summary(f.getPath.getName))
-      .map(footerSchema(spark, hadoopConf, _))
-    // a missing path, an unreadable listing or footer: Spark's read
-    // raises (or, with ignoreCorruptFiles, skips) it its own way
-    catch { case NonFatal(_) => None }
+  private def qualified(path: String): Path = {
+    val uri = new Path(path).toUri
+    new Path(uri.getScheme, Option(uri.getAuthority).getOrElse(""), uri.getPath)
   }
 
   /** The schema of one parquet file's footer, converted as Spark's

@@ -28,14 +28,6 @@ class CleanSpec extends AnyFunSuite {
     assert(ids.toSeq === Seq(16001, 16002))
   }
 
-  test("cleanObserved: audit metric collected in the same job") {
-    val (cleaned, obs) = Clean.cleanObserved(dirty)
-    val after = cleaned.count() // single action drives both result and metric
-    val rowsIn = obs.get("rows_in").asInstanceOf[Long]
-    assert(rowsIn === 4L)
-    assert(rowsIn - after === 2L)
-  }
-
   test("clean is idempotent") {
     val once  = Clean.clean(dirty)
     val twice = Clean.clean(once)

@@ -58,18 +58,6 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(ok.select("cluster_id").distinct().count() === 1)
   }
 
-  test("withCaches releases every cache the scope accumulated") {
-    import graft.Caching.withCaches
-    val docs = Tables.documents(spark, sfDir)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    withCaches(spark) {
-      // minhashDedup persists its signature relation; materialize inside
-      assert(graft.dedup.Dedup.minhashDedup(docs).count() >= 0)
-      assert(spark.sparkContext.getPersistentRDDs.size > before)
-    }
-    assert(spark.sparkContext.getPersistentRDDs.size <= before)
-  }
-
   test("ntileByRange rejects reserved column names and k <= 0") {
     val df = Seq((1L, 2.0)).toDF("id", "__n")
     intercept[IllegalArgumentException] {

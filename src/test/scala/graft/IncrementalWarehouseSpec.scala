@@ -28,14 +28,16 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   /** A copy of the fixtures with each table a directory, as nightly loads
-    * land them.
+    * land them; `orders` and `lineitem` as `baseFiles` files.
     */
-  private def fixtures(): String = {
+  private def fixtures(baseFiles: Int = 1): String = {
     val in = tmp("graft_inc_in")
     for (t <- inputs) {
       val dir = Paths.get(in, s"$t.parquet")
-      Files.createDirectories(dir)
-      Files.copy(Paths.get(sfDir, s"$t.parquet"), dir.resolve("part-00000.parquet"))
+      if (baseFiles == 1 || !Seq("orders", "lineitem").contains(t)) {
+        Files.createDirectories(dir)
+        Files.copy(Paths.get(sfDir, s"$t.parquet"), dir.resolve("part-00000.parquet"))
+      } else spark.read.parquet(s"$sfDir/$t.parquet").repartition(baseFiles).write.parquet(dir.toString)
     }
     in
   }
@@ -380,6 +382,27 @@ class IncrementalWarehouseSpec extends AnyFunSuite {
     val monthly = "fact_monthly_payment"
     assert(outside(files(wh, monthly), 2010) === outside(before(monthly), 2010))
     assert(files(wh, monthly).exists(_.path.contains("/year=2010/")))
+  }
+
+  test("a night over 33 files of orders and of lineitem starts as many jobs as over 2") {
+    // new keys on a held order's day: the daily fact rewrites that year
+    // from every orders and lineitem file
+    def nightJobs(baseFiles: Int): Int = {
+      val in = fixtures(baseFiles)
+      val wh = tmp("graft_inc_wh")
+      Warehouse.buildAll(spark, in, wh)
+      val some = table(in, "orders").orderBy("o_orderkey").limit(8).localCheckpoint()
+      val day = some.select("o_orderdate").as[LocalDateTime].head()
+      night(in, "night-01.parquet", day, 30000000L, some)
+      for (t <- Seq("orders", "lineitem"))
+        assert(Tables.listing(spark, s"$in/$t.parquet").files.size === baseFiles + 1, t)
+      val before = state(wh)
+      val jobs = jobsStartedBy(Warehouse.buildAll(spark, in, wh))
+      rewroteYear(before, wh, daily, day.getYear)
+      buildMatchesScratch(in, wh)
+      jobs
+    }
+    assert(nightJobs(32) === nightJobs(1))
   }
 
   test("a build with no new file starts no Spark job and rewrites nothing") {

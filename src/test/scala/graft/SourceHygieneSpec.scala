@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * doc block — documents nothing: scaladoc attaches only the second
   * block, so the first one's text silently drops out of the API docs
   * and usually describes a definition that moved elsewhere. A bare
-  * `.read.parquet(` starts a schema-inference job per call; library reads
-  * go through `Tables.parquet`, which reads the schema on the driver, and
+  * `.read.parquet(` starts a schema-inference job per call and lists the
+  * path again; library reads go through `Tables.read`, which reads the
+  * schema on the driver and builds the relation from its own listing, and
   * every footer read (schema, row count, column range) goes through
   * `Tables`, so all of them take one path. A
   * library call that sets a session conf changes every query other
@@ -102,6 +103,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"read parquet footers through graft.io.Tables:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no relation built under src/main/scala outside io/Tables.scala and the graftbridge") {
+    val tables = Paths.get("src/main/scala/graft/io/Tables.scala")
+    val bridge = Paths.get("src/main/scala/org/apache/spark/sql/graftbridge")
+    val apis = Seq("InMemoryFileIndex", "HadoopFsRelation", "baseRelationToDataFrame")
+    assert(apis.forall(api => Files.readAllLines(tables).asScala.exists(_.contains(api))))
+    val sites = for {
+      f <- mainSources if f != tables && !f.startsWith(bridge)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if apis.exists(line.contains)
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"read tables through graft.io.Tables.read, the one read path:\n${sites.sorted.mkString("\n")}")
   }
 
   test("no ConcurrentHashMap under src/main/scala") {

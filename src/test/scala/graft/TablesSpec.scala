@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Tables
 import graft.io.Tables.Range
 
-/** `Tables.parquet` reads the schema from one footer on the driver: it
-  * must give the schema `spark.read.parquet` infers, raise the errors it
-  * raises, and start no Spark job. `Tables.range` reads a column's least
+/** `Tables.read` builds a read from its listing, with the schema from one
+  * footer on the driver: it must give the schema, rows and file names
+  * `spark.read.parquet` gives, raise the errors it raises, and start no
+  * Spark job, however many files it reads. `Tables.range` reads a column's least
   * and greatest value from the row-group statistics, and gives none
   * where they cannot tell.
   */
@@ -70,6 +71,18 @@ class TablesSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.parquet.mergeSchema", "true")
     try assert(sameRead(dir, "mixed").columns.toSeq === Seq("a", "b", "k"))
     finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("a parquet summary file's schema wins, as in spark.read.parquet") {
+    val dir = tmpDir()
+    val t = s"$dir/summed.parquet"
+    spark.range(3).select(col("id").as("a")).write.parquet(t)
+    // a footer with one more column, where Spark looks for a summary
+    val wider = written(spark.range(1).select(col("id").as("a"), lit("x").as("b")))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(new java.net.URI(wider.path)),
+      java.nio.file.Paths.get(t, "_common_metadata"))
+    assert(Tables.listing(spark, t).summaries.size === 1)
+    assert(sameRead(dir, "summed").columns.toSeq === Seq("a", "b"))
   }
 
   test("missing path and empty directory raise spark.read.parquet's exception class") {
@@ -130,6 +143,47 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.read(spark, Tables.listing(spark, file)).count() === 1)
     assert(Tables.listing(spark, s"$dir/none.parquet").files.isEmpty)
     assert(jobsStartedBy(Tables.read(spark, now)) === 0)
+  }
+
+  /** A `partitionBy("year")` table of 40 files: 10 tasks, each writing
+    * one file into each of 4 years.
+    */
+  private def fortyFiles(): Tables.Listing = {
+    val t = s"${tmpDir()}/t.parquet"
+    spark.range(0, 400, 1, 10)
+      .select(col("id"), (col("id") % 4 + 2020).cast("int").as("year"), (col("id") * 0.5).as("half"))
+      .write.partitionBy("year").parquet(t)
+    val listed = Tables.listing(spark, t)
+    assert(listed.files.size === 40)
+    listed
+  }
+
+  test("Tables.read of 40 files starts no job and reads what spark.read.parquet of them reads") {
+    val listed = fortyFiles()
+    var ours: DataFrame = null
+    // Spark looks up 33 or more paths in a listing job of its own
+    assert(jobsStartedBy { ours = Tables.read(spark, listed) } === 0)
+    val theirs = spark.read.option("basePath", listed.root).parquet(listed.files.map(_.path): _*)
+    assert(ours.schema === theirs.schema)
+    assert(ours.exceptAll(theirs).isEmpty && theirs.exceptAll(ours).isEmpty)
+    def named(df: DataFrame) = df.select(col("id"), input_file_name().as("file"))
+    assert(named(ours).exceptAll(named(theirs)).isEmpty && named(theirs).exceptAll(named(ours)).isEmpty)
+    assert(named(ours).select("file").distinct().count() === 40L)
+  }
+
+  test("reads of two sets of one table's files are two plans: no cache or exchange of one serves the other") {
+    val listed = fortyFiles()
+    val (a, b) = listed.files.splitAt(15)
+    def perYear(fs: Seq[Tables.DataFile]) = Tables.read(spark, listed, fs).groupBy("year").count()
+    // the same aggregate over each set: equal plans would share one exchange
+    val both = perYear(a).unionByName(perYear(b)).groupBy("year").agg(sum("count").as("n"))
+    assert(both.as[(Int, Long)].collect().toMap === (2020 to 2023).map(_ -> 100L).toMap)
+    val cached = Tables.read(spark, listed, a).cache()
+    try {
+      assert(cached.count() === a.map(f => Tables.read(spark, listed, Seq(f)).count()).sum)
+      assert(Tables.read(spark, listed, b).count() === 400L - cached.count())
+      assert(Tables.read(spark, listed).count() === 400L)
+    } finally cached.unpersist()
   }
 
   /** The one data file `df` is written as, with the writer `options`. */
