@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, concat, desc, element_at, floor, lit
 import graft.analytics.{Breadth, Breadth2, Breadth3, Breadth4, Breadth5, Queries}
 import graft.dedup.Dedup
 import graft.etl.{Clean, Dims, Facts}
+import graft.functions.MoneyFunctions
 import graft.io.Tables
 import graft.multimodal.Multimodal
 import graft.operators.{AsOfJoin, Sampling}
@@ -1160,10 +1161,8 @@ object SparkEntry {
     // same CDC stripes, refresh cost ∝ batch ---
     "q_ivm_quantile" -> ((s, d) => {
       import org.apache.spark.sql.functions.{count, date_trunc, lit}
-      import org.apache.spark.sql.types.DecimalType
       val ord = Tables.orders(s, d)
-      val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")
+      val cents = MoneyFunctions.cents(col("o_totalprice"))
       val month = date_trunc("month", col("o_orderdate")).cast("date")
         .as("month_start")
       val bucket = graft.operators.Ivm.logBucket(cents).as("bucket")
@@ -1188,10 +1187,9 @@ object SparkEntry {
       Sampling.temperatureMix(Tables.documents(s, d), "source", "doc_id")),
     // --- 2-D skyline: customers on the (spend, recency) Pareto frontier ---
     "q_skyline" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{max, sum}
-      import org.apache.spark.sql.types.DecimalType
+      import org.apache.spark.sql.functions.max
       val per = Tables.orders(s, d).groupBy("o_custkey").agg(
-        (sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+        (MoneyFunctions.cents_sum(col("o_totalprice")) * 100)
           .cast("long").as("spend_cents"),
         max(col("o_orderdate")).as("last_order"))
       graft.operators.Skyline.skyline2D(per, "spend_cents", "last_order")
@@ -1382,19 +1380,18 @@ object SparkEntry {
       graft.dedup.CosinePairs.cosinePairs(Tables.documents(s, d))),
     // --- bloom runtime filter: probe rows drop at the scan, exact semi-join after ---
     "q_bloom_join" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{count, sum}
-      import org.apache.spark.sql.types.DecimalType
+      import org.apache.spark.sql.functions.count
       val urgent = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_totalprice") > 400000.0)
       graft.operators.RuntimeFilter.bloomSemiJoin(
           Tables.lineitem(s, d), "l_orderkey", urgent, "o_orderkey")
         .groupBy("l_returnflag", "l_linestatus")
-        // exact cent-valued doubles re-summed through DECIMAL(18,2), the
-        // library-wide money idiom (see q1MonthlyRevenue)
+        // exact cent-valued doubles re-summed at DECIMAL(18,2) by
+        // cents_sum, the library-wide money idiom (see q1MonthlyRevenue)
         .agg(
-          sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast(DecimalType(18, 2))).cast("double").as("sum_price"),
+          MoneyFunctions.cents_sum(col("l_quantity")).cast("double").as("sum_qty"),
+          MoneyFunctions.cents_sum(col("l_extendedprice")).cast("double").as("sum_price"),
           count(lit(1)).as("n_items"))
     }),
     // --- Theil–Sen robust trend slope: median of pairwise monthly slopes ---

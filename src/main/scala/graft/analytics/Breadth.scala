@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions.cents_sum
+
 /** Operator-breadth queries beyond the reference's own surface (SURVEY.md
   * §2.1 lists what the reference lacks; BASELINE.json's north star asks for
   * a complete engine anyway): multi-way joins, windows, semi/anti joins,
@@ -12,8 +14,9 @@ import org.apache.spark.sql.types.DecimalType
   * event analytics over time windows.
   *
   * Determinism rules shared with the oracle (SURVEY.md §7.4.5): money/value
-  * sums go through DECIMAL(18,2) so results are exact and independent of
-  * partial-aggregation order; every LIMIT carries a total ordering. The
+  * sums are exact DECIMAL(18,2) sums (`cents_sum` here, a DECIMAL cast in
+  * the oracle) so results are independent of partial-aggregation order;
+  * every LIMIT carries a total ordering. The
   * FINAL value is cast to DOUBLE — an exact decimal converts to double with
   * one correctly-rounded step in both Spark (BigDecimal.doubleValue) and
   * DuckDB (verified bit-identical on 150k sums), so the driver's
@@ -34,8 +37,8 @@ object Breadth {
       .filter(col("l_shipdate") <= lit("1998-09-02"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        sum(dec("l_quantity")).cast("double").as("sum_qty"),
-        sum(dec("l_extendedprice")).cast("double").as("sum_base_price"),
+        cents_sum(col("l_quantity")).cast("double").as("sum_qty"),
+        cents_sum(col("l_extendedprice")).cast("double").as("sum_base_price"),
         sum((dec("l_extendedprice") * (lit(1) - dec("l_discount")))
           .cast(DecimalType(18, 4))).cast("double").as("sum_disc_price"),
         count(lit(1)).as("count_order"))
@@ -53,7 +56,7 @@ object Breadth {
       .join(broadcast(region.select("r_regionkey", "r_name")),
         col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name")
-      .agg(sum(dec("o_totalprice")).cast("double").as("revenue"))
+      .agg(cents_sum(col("o_totalprice")).cast("double").as("revenue"))
 
   /** Top-K with join-back: 10 biggest customers by lifetime spend. The agg
     * runs before the join so only K rows join to the dim.
@@ -61,7 +64,7 @@ object Breadth {
   def topCustomers(orders: DataFrame, customer: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 1, "k must be at least 1")
     val spend = orders.groupBy("o_custkey")
-      .agg(sum(dec("o_totalprice")).cast("double").as("total_spend"))
+      .agg(cents_sum(col("o_totalprice")).cast("double").as("total_spend"))
       .orderBy(desc("total_spend"), asc("o_custkey"))
       .limit(k)
     spend.join(customer.select("c_custkey", "c_name"),
@@ -74,7 +77,7 @@ object Breadth {
     */
   def windowTopParts(lineitem: DataFrame, n: Int = 3): DataFrame = {
     val perPart = lineitem.groupBy("l_suppkey", "l_partkey")
-      .agg(sum(dec("l_quantity")).cast("double").as("qty"))
+      .agg(cents_sum(col("l_quantity")).cast("double").as("qty"))
     val w = Window.partitionBy("l_suppkey")
       .orderBy(desc("qty"), asc("l_partkey"))
     perPart.withColumn("rn", row_number().over(w))
@@ -89,7 +92,7 @@ object Breadth {
     // trunc() (not date_trunc) → DateType, matching the oracle's DATE grain
     val monthly = orders
       .groupBy(trunc(col("o_orderdate"), "month").as("month_start"))
-      .agg(sum(dec("o_totalprice")).as("monthly_revenue"))
+      .agg(cents_sum(col("o_totalprice")).as("monthly_revenue"))
     val w = Window.orderBy("month_start")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     monthly
@@ -104,7 +107,7 @@ object Breadth {
   def movingRevenue(orders: DataFrame): DataFrame = {
     val monthly = orders
       .groupBy(trunc(col("o_orderdate"), "month").as("month_start"))
-      .agg(sum(dec("o_totalprice")).as("monthly_revenue"))
+      .agg(cents_sum(col("o_totalprice")).as("monthly_revenue"))
     val w = Window.orderBy("month_start").rowsBetween(-2, Window.currentRow)
     monthly.select(col("month_start"),
       col("monthly_revenue").cast("double").as("monthly_revenue"),
@@ -131,7 +134,7 @@ object Breadth {
         month(col("o_orderdate")).as("o_month"),
         col("o_totalprice"))
       .rollup("o_year", "o_month")
-      .agg(sum(dec("o_totalprice")).cast("double").as("revenue"))
+      .agg(cents_sum(col("o_totalprice")).cast("double").as("revenue"))
 
   /** ntile quartiles: customers bucketed by account balance (total order
     * via the custkey tie-break keeps bucket membership deterministic).
@@ -160,7 +163,7 @@ object Breadth {
     orders
       .select(col("o_orderstatus"), col("o_orderpriority"), col("o_totalprice"))
       .cube("o_orderstatus", "o_orderpriority")
-      .agg(sum(dec("o_totalprice")).cast("double").as("revenue"),
+      .agg(cents_sum(col("o_totalprice")).cast("double").as("revenue"),
         count(lit(1)).as("n_orders"))
 
   /** lead/lag analytics: month-over-month revenue delta (first month's
@@ -169,7 +172,7 @@ object Breadth {
   def momDelta(orders: DataFrame): DataFrame = {
     val monthly = orders
       .groupBy(trunc(col("o_orderdate"), "month").as("month_start"))
-      .agg(sum(dec("o_totalprice")).as("monthly_revenue"))
+      .agg(cents_sum(col("o_totalprice")).as("monthly_revenue"))
     val w = Window.orderBy("month_start")
     monthly
       .withColumn("prev_revenue", lag("monthly_revenue", 1).over(w))
@@ -216,7 +219,7 @@ object Breadth {
       .groupBy(date_trunc("hour", col("ts")).as("window_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(dec("value")).cast("double").as("total_value"))
+        cents_sum(col("value")).cast("double").as("total_value"))
 
   /** Exact interpolated percentiles of line-item quantity per return flag.
     * Spark's `percentile` and DuckDB's `quantile_cont` both use the
@@ -278,7 +281,7 @@ object Breadth {
         col("p_retailprice") >= col("lo") && col("p_retailprice") < col("hi"))
       .groupBy("tier")
       .agg(count(lit(1)).as("n_parts"),
-        sum(dec("p_retailprice")).cast("double").as("total_price"))
+        cents_sum(col("p_retailprice")).cast("double").as("total_price"))
   }
 
   /** Correlated scalar subquery (Catalyst decorrelates it into a join):

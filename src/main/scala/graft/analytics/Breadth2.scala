@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions.cents_sum
+
 /** Second operator-breadth batch: statistical aggregates, argmax
   * aggregation, RANGE window frames, rank distributions, set collection,
   * full-outer joins, GROUPING SETS, unpivot/melt, and token analytics.
@@ -84,7 +86,7 @@ object Breadth2 {
   def trailing7DayRevenue(orders: DataFrame): DataFrame = {
     val daily = orders
       .groupBy(to_date(col("o_orderdate")).as("order_day"))
-      .agg(sum(dec("o_totalprice")).as("rev"))
+      .agg(cents_sum(col("o_totalprice")).as("rev"))
       .withColumn("day_num", datediff(col("order_day"), lit("1990-01-01")))
     // single-partition window is fine: the *daily* grain is bounded
     // (~years × 365 rows) no matter how many base rows feed it

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions.cents_sum
 import graft.operators.SkewJoin
 
 /** Third operator-breadth batch: product-analytics shapes (funnel,
@@ -296,7 +297,7 @@ object Breadth3 {
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
-      .agg(sum(dec("o_totalprice")).as("rev_dec"))
+      .agg(cents_sum(col("o_totalprice")).as("rev_dec"))
     val total = perNation.agg(sum("rev_dec").as("tot_dec"))
     perNation.crossJoin(broadcast(total))
       .select(col("n_name"), col("rev_dec").cast("double").as("revenue"),
@@ -317,7 +318,7 @@ object Breadth3 {
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum(dec("value")).cast("double").as("total_value"))
+        cents_sum(col("value")).cast("double").as("total_value"))
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col("event_type"), col("n_events"), col("total_value"))
 
@@ -418,7 +419,7 @@ object Breadth3 {
         max(col("value")).as("high"),
         min(col("value")).as("low"),
         max(when(col("rnd") === 1, col("value"))).as("close"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("volume"))
+        cents_sum(col("value")).cast("double").as("volume"))
   }
 
   /** Robust outlier detection via median absolute deviation: flag rows
@@ -507,7 +508,7 @@ object Breadth3 {
       .groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_d"),
         count(lit(1)).as("frequency"),
-        (sum(dec("o_totalprice")) * 100).cast("long").as("monetary_cents"))
+        (cents_sum(col("o_totalprice")) * 100).cast("long").as("monetary_cents"))
       .crossJoin(broadcast(refDate))
       .select(col("o_custkey"),
         datediff(col("ref"), col("last_d")).cast("long").as("recency_days"),

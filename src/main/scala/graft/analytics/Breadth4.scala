@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions.{cents, cents_sum}
+
 /** Fourth operator-breadth batch: rolling-window distinct actives (the
   * WAU/MAU shape every product warehouse maintains), neighborhood-based
   * link prediction over the co-bought graph (resource-allocation index,
@@ -507,7 +509,7 @@ object Breadth4 {
     require(buckets >= 2, "need at least two buckets")
     val per = orders
       .select((col("o_orderkey") % buckets).cast("int").as("bucket"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+        cents(col("o_totalprice")).as("cents"))
       .groupBy("bucket").agg(count(lit(1)).as("n_b"), sum("cents").as("s_b"))
     val tot = per.agg(sum("n_b").as("n"), sum("s_b").as("s"),
       count(lit(1)).as("nb"))
@@ -591,7 +593,7 @@ object Breadth4 {
     */
   def spearmanBalanceVsSpend(customer: DataFrame, orders: DataFrame): DataFrame = {
     val spend = orders.groupBy(col("o_custkey"))
-      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("spend"))
+      .agg(cents_sum(col("o_totalprice")).as("spend"))
     val base = customer.select(col("c_custkey"), col("c_acctbal"))
       .join(spend, col("c_custkey") === col("o_custkey"), "left")
       .select(col("c_custkey"), col("c_acctbal").as("x"),

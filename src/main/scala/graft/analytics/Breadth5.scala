@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions
+
 /** Fifth operator-breadth batch: right-censored survival analysis
   * (Kaplan–Meier product-limit + Nelson–Aalen cumulative hazard,
   * Kaplan & Meier JASA 53:457, 1958; Aalen Ann. Stat. 6:701, 1978),
@@ -381,7 +383,7 @@ object Breadth5 {
                       bins: Int = 10): DataFrame = {
     require(bins >= 2, "need at least two bins")
     val cents = customer.select(col("c_custkey"),
-      (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      MoneyFunctions.cents(col("c_acctbal")).as("cents"))
     val bounds = cents.agg(min("cents").as("mn"), max("cents").as("mx"))
     val nOrders = orders.groupBy(col("o_custkey")).agg(count(lit(1)).as("n_ord"))
     val scored = cents
@@ -458,7 +460,7 @@ object Breadth5 {
       .withColumn("rn", row_number().over(wp))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_eid"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("p_cents"))
+        MoneyFunctions.cents(col("value")).as("p_cents"))
     val touches = events.filter(col("event_type") =!= "purchase")
       .join(firstPurchase, Seq("user_id"))
       .filter(col("ts") < col("p_ts") ||

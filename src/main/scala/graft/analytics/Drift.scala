@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions.cents_sum
+
 /** Distribution-drift statistics between corpus slices.
   *
   * [[ksDrift]] is the exact two-sample Kolmogorov–Smirnov statistic
@@ -50,7 +52,7 @@ object Drift {
   def cusumChangepoint(orders: DataFrame): DataFrame = {
     val daily = orders
       .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+      .agg((cents_sum(col("o_totalprice")) * 100)
         .cast("long").as("cents"))
     val totals = daily.agg(sum(col("cents")).as("t_cents"),
       count(lit(1)).as("n_days"))
@@ -91,7 +93,7 @@ object Drift {
   def seasonalDecompose(orders: DataFrame): DataFrame = {
     val monthly = orders
       .groupBy(trunc(col("o_orderdate").cast("date"), "month").as("month_start"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+      .agg((cents_sum(col("o_totalprice")) * 100)
         .cast("long").as("x"))
     val w = Window.orderBy("month_start").rowsBetween(-1, 1)
     val ma = monthly
@@ -594,7 +596,7 @@ object Drift {
     require(season >= 1, "season length must be >= 1")
     val monthly = orders
       .groupBy(trunc(col("o_orderdate").cast("date"), "month").as("month_start"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+      .agg((cents_sum(col("o_totalprice")) * 100)
         .cast("long").as("actual_cents"))
     val w = Window.orderBy("month_start")
     monthly

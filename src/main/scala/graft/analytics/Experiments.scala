@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.MoneyFunctions
+
 /** Sequential and variance-reduced experimentation — the two analyses an
   * A/B platform runs beyond the fixed-horizon Welch test
   * ([[Metrics.welchTTest]]):
@@ -31,7 +33,9 @@ object Experiments {
 
   private val Dec = DecimalType(38, 0)
   private def fold6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def cents(c: Column): Column = floor(c * 100 + 0.5).cast("long")
+  /** floor(100·x + 0.5): the cents its oracle replays, not the exact
+    * decimal cents of [[graft.functions.Cents]]. */
+  private def floorCents(c: Column): Column = floor(c * 100 + 0.5).cast("long")
 
   /** Round an IEEE double to integer nanos the way both engines agree
     * on: floor(x·1e9 + 0.5). Applied at PLAN-BUILD time to constants.
@@ -149,7 +153,7 @@ object Experiments {
     // dispatchedBlockJoin stream-spread discipline; 16 B/row crosses
     // the exchange, reps× the hash work comes out the other side
     val base = orders.select(col("o_orderkey"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      MoneyFunctions.cents(col("o_totalprice")).as("cents"))
       .repartition(orders.sparkSession.sparkContext.defaultParallelism)
     val u60 = conv(substring(md5(concat(lit(s"$seed:"), col("rep").cast("string"),
       lit(":"), col("o_orderkey").cast("string"))), 1, 15), 16, 10).cast("long")
@@ -294,7 +298,7 @@ object Experiments {
                           bins: Int = 10): DataFrame = {
     require(bins >= 2, "need at least two bins")
     val cts = customer.select(col("c_custkey"),
-      (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      MoneyFunctions.cents(col("c_acctbal")).as("cents"))
     val bounds = cts.agg(min("cents").as("mn"), max("cents").as("mx"))
     val nOrders = orders.groupBy(col("o_custkey")).agg(count(lit(1)).as("n_ord"))
     val perBin = cts
@@ -379,7 +383,7 @@ object Experiments {
     require(alphaNum > 0 && alphaNum < alphaDen, "need 0 < alpha < 1")
     val monthly = orders
       .groupBy(trunc(col("o_orderdate").cast("date"), "month").as("month_start"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+      .agg((MoneyFunctions.cents_sum(col("o_totalprice")) * 100)
         .cast("long").as("actual_cents"))
     val w = Window.orderBy("month_start")
     val resid = monthly
@@ -458,7 +462,7 @@ object Experiments {
     * one 1-row aggregate.
     */
   def mannWhitney(orders: DataFrame): DataFrame = {
-    val g = orders.select(cents(col("o_totalprice")).as("x"),
+    val g = orders.select(floorCents(col("o_totalprice")).as("x"),
       (col("o_orderkey") % 2 === 0).as("is_a"))
     val byV = g.groupBy("x").agg(
         sum(when(col("is_a"), 1L).otherwise(0L)).as("ca"),
@@ -546,9 +550,9 @@ object Experiments {
     val perUser = events.crossJoin(broadcast(mid))
       .groupBy("user_id")
       .agg(
-        sum(when(to_date(col("ts")) < col("mid"), cents(col("value")))
+        sum(when(to_date(col("ts")) < col("mid"), floorCents(col("value")))
           .otherwise(0L)).as("pre"),
-        sum(when(to_date(col("ts")) >= col("mid"), cents(col("value")))
+        sum(when(to_date(col("ts")) >= col("mid"), floorCents(col("value")))
           .otherwise(0L)).as("post"))
     val sums = perUser.agg(
       count(lit(1)).as("n_users"),

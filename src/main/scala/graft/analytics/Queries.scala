@@ -2,9 +2,9 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.etl.{Dims, Facts}
+import graft.functions.MoneyFunctions.cents_sum
 
 /** The reference's three analytics reads (`filmETLs.ipynb#cell11-13`),
   * re-expressed over the fixture star schema (FIXTURES.md §C).
@@ -28,8 +28,8 @@ object Queries {
       .withColumn("month_start", Dims.keyDate(col("date_id")))    // P4
       .groupBy("month_start")                                      // P7 grain
       // the fact's doubles are exact cent values (≤ 15 significant digits),
-      // so the decimal round-trip re-sums them exactly in any order
-      .agg(sum(col("monthly_payment_total").cast(DecimalType(18, 2)))
+      // so cents_sum re-sums them exactly, as integer cents, in any order
+      .agg(cents_sum(col("monthly_payment_total"))
         .cast("double").as("monthly_revenue"))                     // A4
   }
 

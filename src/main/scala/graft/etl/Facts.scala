@@ -2,7 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.MoneyFunctions.cents_sum
 
 /** Fact-table builders — Spark-native equivalents of the reference's two
   * fact ETLs, re-expressed over the driver fixtures (FIXTURES.md §C):
@@ -52,10 +53,11 @@ object Facts {
     *
     * `date_id = year*10000 + month*100 + 1` is the reference's deliberate
     * first-of-month encoding (`filmETLs.ipynb#cell10:6`) — preserved, not
-    * "fixed" (SURVEY.md §7.4.7). The measure is summed as DECIMAL(18,2) so
-    * the result is exact and independent of partial-aggregation order —
-    * double-precision sums would drift between run topologies (and vs the
-    * DuckDB oracle). The exact sum is then emitted as DOUBLE (one
+    * "fixed" (SURVEY.md §7.4.7). The measure is summed exactly at
+    * DECIMAL(18,2), as integer cents per row and one decimal per group
+    * (`cents_sum`), so the result is independent of partial-aggregation
+    * order — double-precision sums would drift between run topologies
+    * (and vs the DuckDB oracle). The exact sum is then emitted as DOUBLE (one
     * correctly-rounded conversion, bit-identical across engines) so the
     * driver's pandas-level hash sees float64 on both sides.
     */
@@ -66,7 +68,7 @@ object Facts {
         (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 + 1)
           .cast("int"))                                           // P5 + P6
       .groupBy("o_custkey", "o_orderkey", "date_id")
-      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
+      .agg(cents_sum(col("o_totalprice"))
         .cast("double").as("monthly_payment_total"))              // A2
     // no dropDuplicates: groupBy output is already unique on its keys
     fact.na.drop("any")

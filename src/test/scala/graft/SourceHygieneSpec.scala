@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * serving what it saw before a write and keeps every session it saw
   * reachable; queries build their inputs per call instead. The
   * library is a nightly batch load plus batch queries: a Structured
-  * Streaming entry point is surface no query or workload runs.
+  * Streaming entry point is surface no query or workload runs. A money
+  * sum of one DOUBLE column goes through `cents_sum`, which equals
+  * `sum(x.cast(DecimalType(18, 2)))` but builds no BigDecimal per row.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -127,6 +129,26 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}"
     if (sites.nonEmpty)
       fail(s"no JVM-wide memo in library code; build inputs per call:\n${sites.sorted.mkString("\n")}")
+  }
+
+  test("no sum of one column cast to DecimalType(18, 2) under src/main/scala") {
+    // the whole argument of `sum(` is one column, cast as `.cast(DecimalType(18, 2))` or `dec(…)`
+    val plainCastSum =
+      """(?<!\w)sum\(\s*(?:dec\([^()]*\)|[\w$]+\([^()]*\)\.cast\(DecimalType\(18, ?2\)\))\s*\)""".r
+    Seq("""sum(dec("l_quantity"))""", """sum(col("o_totalprice").cast(DecimalType(18, 2)))""",
+        """.agg(sum(col(c).cast(DecimalType(18,2))).as("s"))""")
+      .foreach(line => assert(plainCastSum.findFirstIn(line).nonEmpty, line))
+    Seq("""sum_distinct(dec("o_totalprice"))""", """sum(dec("p") * dec("q"))""",
+        """sum((dec("p") * (lit(1) - dec("d"))).cast(DecimalType(18, 4)))""",
+        """sum(col("x").cast(DecimalType(18, 2)) * col("y"))""")
+      .foreach(line => assert(plainCastSum.findFirstIn(line).isEmpty, line))
+    val sites = for {
+      f <- mainSources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if plainCastSum.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}"
+    if (sites.nonEmpty)
+      fail(s"sum money as integer cents with MoneyFunctions.cents_sum:\n${sites.sorted.mkString("\n")}")
   }
 
   test("no Structured Streaming under src/main/scala") {
